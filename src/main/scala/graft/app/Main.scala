@@ -48,7 +48,7 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // S9: read-progress reporting (≙ ReadProgressTracking, lib.rs:92-107)
-    graft.streaming.Progress.attach(spark)
+    val progress = graft.streaming.Progress.attach(spark)
 
     try mode match {
       case "--table-out" => // flagship: K1 keyed-upsert table (≙ --sqlite-out)
@@ -100,7 +100,11 @@ object Main {
           .coalesce(1).write.option("header", "true").mode("overwrite").csv(out)
       case other =>
         System.err.println(s"unknown sink mode $other\n$usage"); sys.exit(2)
-    } finally if (preExisting.isEmpty) spark.stop()
+    } finally {
+      // the listener must not outlive the run on a caller's session
+      spark.sparkContext.removeSparkListener(progress)
+      if (preExisting.isEmpty) spark.stop()
+    }
   }
 
   /** Stream the 4-column CSV to stdout, one partition in memory at a time

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.operators.Dedup
 
@@ -237,18 +237,28 @@ final class LakeTable private (
   private def visible(s: TableSnapshot, resolved: DataFrame): DataFrame =
     s.tombstoneCol.fold(resolved)(c => resolved.filter(!coalesce(col(c), lit(false))))
 
-  private def readSnapshotDF(s: TableSnapshot): DataFrame = {
+  private def readSnapshotDF(s: TableSnapshot): DataFrame =
+    readBucketsDF(s, s.bucketFiles.keys)
+
+  /** Resolved rows of `buckets`: clean buckets as one plain parquet read
+    * of their files that pass `keepClean`, dirty ones through
+    * [[morResolvedDF]]. `narrow` is applied to both sides BELOW the LWW
+    * resolve, so it must be a key predicate (those commute with per-key
+    * resolution and push into the parquet scan, and into the bucket scan's
+    * own file skipping). */
+  private def readBucketsDF(s: TableSnapshot, buckets: Iterable[Int],
+      narrow: DataFrame => DataFrame = identity,
+      keepClean: String => Boolean = _ => true): DataFrame = {
     val schema = StructType.fromDDL(s.schemaDdl)
-    val dirty = s.morBuckets.toSet
-    def bucketPaths(bs: Iterable[Int]): Seq[String] =
-      bs.toSeq.sorted.flatMap(b => s.bucketFiles.getOrElse(b, Nil)).map(rel => LakeTable.dataPath(root, rel))
-    def readFiles(files: Seq[String]): DataFrame =
-      if (files.isEmpty)
+    val (dirty, clean) = buckets.toSeq.distinct.sorted.partition(s.morBuckets.toSet)
+    val cleanFiles = clean.flatMap(b => s.bucketFiles.getOrElse(b, Nil)).filter(keepClean)
+      .map(rel => LakeTable.dataPath(root, rel))
+    val cleanDF = narrow(
+      if (cleanFiles.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(files: _*)
-    val clean = readFiles(bucketPaths(s.bucketFiles.keys.filterNot(dirty)))
-    if (dirty.isEmpty) clean
-    else clean.unionByName(morResolvedDF(s, s.morBuckets.sorted))
+      else spark.read.schema(schema).parquet(cleanFiles: _*))
+    if (dirty.isEmpty) cleanDF
+    else cleanDF.unionByName(morResolvedDF(s, dirty, narrow))
   }
 
   /** ZERO-SHUFFLE resolve of dirty (merge-on-read) buckets: the layers of a
@@ -260,8 +270,9 @@ final class LakeTable private (
     * row through an exchange on every read — at a MOR-heavy 100 TB stream
     * with maxLayers of debt, that re-shuffles the whole dirty region per
     * read. */
-  private def morResolvedDF(s: TableSnapshot, dirtySorted: Seq[Int]): DataFrame =
-    Dedup.latestByKey(bucketScanDF(s, dirtySorted), s.keyCols :+ BucketCol, s.orderCols)
+  private def morResolvedDF(s: TableSnapshot, dirtySorted: Seq[Int],
+      narrow: DataFrame => DataFrame = identity): DataFrame =
+    Dedup.latestByKey(narrow(bucketScanDF(s, dirtySorted)), s.keyCols :+ BucketCol, s.orderCols)
       .drop(BucketCol)
 
   /** CHANGELOG READ (CDC egress, ≙ Iceberg incremental scan): every row
@@ -539,69 +550,172 @@ final class LakeTable private (
   }
 
   /** Keyed POINT READ with bucket pruning (≙ the reference SQLite sink's
-    * PK lookup, sqlite.rs:218-233): evaluates the table's bucket function on
-    * the literal key driver-side, scans ONLY that bucket's files (1/numBuckets
-    * of the table), resolves merge-on-read layers iff that bucket is dirty,
-    * and filters to the key. `keyEquals` must bind every key column. */
+    * PK lookup, sqlite.rs:218-233): the visible winner of one key, read
+    * from ONLY the bucket the table's bucket function puts it in
+    * (1/numBuckets of the table), merge-on-read layers resolved iff that
+    * bucket is dirty. `keyEquals` must bind every key column.
+    *
+    * When the distributed read of the bucket would be ONE task (the rule
+    * is on [[keyedRead]]: a dirty bucket within
+    * `spark.sql.files.maxPartitionBytes`, or clean files Spark's file-split
+    * planning packs into one split), its files are read on the DRIVER
+    * during this call and the result is a local DataFrame: collecting it
+    * starts no Spark job. Otherwise the result is the lazy distributed
+    * plan of [[read]], narrowed to the bucket and the key. Either way the
+    * snapshot is pinned when this is called; on the driver path its files
+    * are read then too. */
   def read(keyEquals: Map[String, Any]): DataFrame = {
     val s = snapshot()
     require(s.keyCols.forall(keyEquals.contains),
       s"point read must bind every key column ${s.keyCols}")
-    val schema = StructType.fromDDL(s.schemaDdl)
-    // the same expression as bucketExpr, evaluated on the literal key:
-    // xxhash64(...) is XxHash64(seed=42); pmod(positive divisor) = floorMod
-    val lits = s.keyCols.map { k =>
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        keyEquals(k), schema(k).dataType)
-    }
-    val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(lits, 42L)
-      .eval(null).asInstanceOf[Long]
-    val bucket = math.floorMod(h, s.numBuckets.toLong).toInt
-    val files = s.bucketFiles.getOrElse(bucket, Nil).map(rel => LakeTable.dataPath(root, rel))
-    val scan =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(files: _*)
-    // filter BEFORE the MOR resolve: the key predicate commutes with per-key
-    // LWW, and this way it pushes down into the parquet scan
-    val hit = scan.filter(s.keyCols.map(k => col(k) === lit(keyEquals(k))).reduce(_ && _))
-    visible(s,
-      if (s.morBuckets.contains(bucket)) Dedup.latestByKey(hit, s.keyCols, s.orderCols)
-      else hit)
+    keyedRead(s, Seq(s.keyCols.map(keyEquals)))
   }
 
   /** BATCH point read: the visible winners of a SET of key values on a
-    * single-key table — one bucket-pruned scan per DISTINCT bucket the
-    * values hash into (≤ min(#values, B) scans), each filtered to just its
-    * own values so the key predicate pushes into parquet. The multi-key
-    * sibling of [[read(keyEquals)]]; what SQL `DELETE … WHERE k IN (…)`
-    * resolves winners through. */
+    * single-key table, reading only the buckets the values hash into; what
+    * SQL `DELETE … WHERE k IN (…)` resolves winners through. Same rule as
+    * [[read(keyEquals)]]: when the distributed read of the touched buckets
+    * would be one task (so values in two or more buckets always take the
+    * distributed plan), their files are read on the driver at call time;
+    * otherwise the result is a lazy distributed plan. */
   def readKeys(values: Seq[Any]): DataFrame = {
     val s = snapshot()
     require(s.keyCols.size == 1, s"readKeys needs a single-key table, got ${s.keyCols}")
+    keyedRead(s, values.map(Seq(_)))
+  }
+
+  /** Visible winners of the key tuples `keys` (one value per key column, in
+    * `keyCols` order) in snapshot `s`, reading only the buckets they hash
+    * into and, in those, only the files whose snapshot bounds may hold one
+    * of the keys ([[FileStats.mayMatch]], the bucket scan's file skipping;
+    * a key predicate is safe to skip by in dirty and tombstone buckets too,
+    * since every row of a key, tombstones included, carries the key). A
+    * tuple holding a null matches nothing, as SQL equality does.
+    *
+    * The files are read on the driver exactly when their distributed read
+    * would run as ONE task, so serving them locally gives up no parallelism
+    * and saves the job: a single dirty bucket whose kept files total at
+    * most `spark.sql.files.maxPartitionBytes` (the bucket scan resolves a
+    * dirty bucket in one task), or clean files that Spark's own file-split
+    * planning packs into one split ([[oneCleanSplit]]). */
+  private def keyedRead(s: TableSnapshot, keys: Seq[Seq[Any]]): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.sources
     val schema = StructType.fromDDL(s.schemaDdl)
-    val keyCol = s.keyCols.head
-    val dt = schema(keyCol).dataType
-    def bucketOf(v: Any): Int = {
-      val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)), 42L)
-        .eval(null).asInstanceOf[Long]
-      math.floorMod(h, s.numBuckets.toLong).toInt
+    val types = s.keyCols.map(schema(_).dataType)
+    val live = keys.filterNot(_.contains(null))
+    val catalystKeys = live.map(_.zip(types).map { case (v, dt) => Literal.create(v, dt).value })
+    def scalaValue(v: Any, dt: DataType) = CatalystTypeConverters.convertToScala(v, dt)
+    val pushed: sources.Filter =
+      if (live.isEmpty) sources.AlwaysFalse()
+      else if (types.size == 1)
+        sources.In(s.keyCols.head, catalystKeys.map(t => scalaValue(t.head, types.head)).toArray)
+      else catalystKeys.map(_.zip(s.keyCols).zip(types).map { case ((v, k), dt) =>
+        sources.EqualTo(k, scalaValue(v, dt)): sources.Filter
+      }.reduce(sources.And)).reduce(sources.Or)
+    val keep: String => Boolean =
+      rel => s.fileStats.get(rel).forall(FileStats.mayMatch(Array(pushed), _, schema))
+    val buckets = live.map(LakeTable.bucketOfKey(_, types, s.numBuckets)).distinct.sorted
+    val files = buckets.map(b => b -> s.bucketFiles.getOrElse(b, Nil).filter(keep))
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val lens = graft.tables.dsv2.LakeBucketSource.statLengths(root, files.flatMap(_._2), hadoopConf)
+    val (dirty, clean) = files.partition { case (b, _) => s.morBuckets.contains(b) }
+    val oneTask =
+      if (dirty.isEmpty) oneCleanSplit(clean.flatMap(_._2), lens)
+      else dirty.size == 1 && clean.forall(_._2.isEmpty) &&
+        dirty.head._2.map(lens).sum <= spark.sessionState.conf.filesMaxPartitionBytes
+    if (oneTask) driverKeyedRead(s, schema, files, catalystKeys, pushed, lens, hadoopConf)
+    else {
+      val pred =
+        if (s.keyCols.size == 1) col(s.keyCols.head).isin(live.map(t => lit(t.head)): _*)
+        else live.map(t => s.keyCols.zip(t).map { case (k, v) => col(k) === lit(v) }
+          .reduce(_ && _)).reduce(_ || _)
+      visible(s, readBucketsDF(s, buckets, _.filter(pred), keep))
     }
-    val empty =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val perBucket = values.filter(_ != null).groupBy(bucketOf).toSeq.sortBy(_._1)
-      .map { case (bucket, vs) =>
-        val files = s.bucketFiles.getOrElse(bucket, Nil).map(rel => LakeTable.dataPath(root, rel))
-        if (files.isEmpty) empty
-        else {
-          val hit = spark.read.schema(schema).parquet(files: _*)
-            .filter(col(keyCol).isin(vs.map(lit(_)): _*))
-          if (s.morBuckets.contains(bucket)) Dedup.latestByKey(hit, s.keyCols, s.orderCols)
-          else hit
-        }
+  }
+
+  /** Whether a parquet scan of the clean files `rels` would be one task
+    * (or none): Spark's own split planning, the calls a file scan makes,
+    * on the stat'd lengths. Each file costs its length plus
+    * `spark.sql.files.openCostInBytes`, a split holds at most
+    * min(`maxPartitionBytes`, max(openCost, total cost / parallelism)) and
+    * longer files are cut, so above parallelism 1 one split means one file
+    * within that bound. */
+  private def oneCleanSplit(rels: Seq[String], lens: Map[String, Long]): Boolean =
+    rels.isEmpty || {
+      import org.apache.hadoop.fs.{FileStatus, Path}
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.execution.PartitionedFileUtil
+      import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
+      val statuses = rels.map(rel =>
+        new FileStatus(lens(rel), false, 0, 0L, 0L, new Path(LakeTable.dataPath(root, rel))))
+      val maxSplit = FilePartition.maxSplitBytes(spark,
+        Seq(PartitionDirectory(InternalRow.empty, statuses.toArray)))
+      val splits = statuses.flatMap(st => PartitionedFileUtil.splitFiles(
+        FileStatusWithMetadata(st), st.getPath, isSplitable = true, maxSplit, InternalRow.empty))
+      FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplit).size == 1
+    }
+
+  /** [[keyedRead]] on the driver: Spark's own parquet reader over each
+    * bucket's kept `files` in bucket file order, through the snapshot
+    * schema (a column added after a file was written reads as null), with
+    * the key filter `pushed` for row-group pruning. Rows of the wanted keys
+    * (`keys` as Catalyst values) are kept; in a dirty bucket each key
+    * resolves with [[read]]'s rule, `max_by` over `orderCols` in Catalyst
+    * ordering, where on equal tuples the LATER row in file order wins.
+    * Tombstone winners are then hidden. */
+  private def driverKeyedRead(s: TableSnapshot, schema: StructType,
+      files: Seq[(Int, Seq[String])], keys: Seq[Seq[Any]],
+      pushed: org.apache.spark.sql.sources.Filter, lens: Map[String, Long],
+      hadoopConf: org.apache.hadoop.conf.Configuration): DataFrame = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def ref(c: String) = {
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    // keys compare as UnsafeRows: byte equality is Spark's own key
+    // equality (binary by content, -0.0 and NaN normalized by the writer)
+    val keyOf = UnsafeProjection.create(s.keyCols.map(ref))
+    val keyRow = UnsafeProjection.create(s.keyCols.zipWithIndex.map { case (c, i) =>
+      BoundReference(i, schema(c).dataType, nullable = true) })
+    val wanted = keys.map(t => keyRow(InternalRow.fromSeq(t)).copy()).toSet
+    // built only when there are files to read
+    lazy val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+      new StructType(), schema, Seq(pushed), Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      hadoopConf)
+    val copyRow = UnsafeProjection.create(schema)
+    val ordering = new InterpretedOrdering(s.orderCols.map(c => SortOrder(ref(c), Ascending)))
+    val rows = files.flatMap { case (b, rels) =>
+      val resolve = s.morBuckets.contains(b)
+      val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      val winners = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, InternalRow]
+      rels.foreach { rel =>
+        val len = lens(rel)
+        val it = reader(PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
+          0L, len, Array.empty[String], 0L, len, Map.empty))
+        try it.foreach { row =>
+          val k = keyOf(row)
+          if (wanted.contains(k)) {
+            val r = copyRow(row).copy()
+            if (!resolve) hits += r
+            else if (winners.get(k).forall(ordering.compare(r, _) >= 0)) winners(k.copy()) = r
+          }
+        } finally it match { case c: java.io.Closeable => c.close(); case _ => }
       }
-    visible(s, perBucket.foldLeft(empty)(_ unionByName _))
+      if (resolve) winners.values else hits
+    }
+    val visibleRows = s.tombstoneCol.fold(rows) { c =>
+      val i = schema.fieldIndex(c)
+      rows.filterNot(r => !r.isNullAt(i) && r.getBoolean(i))
+    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    spark.createDataFrame(
+      visibleRows.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).asJava, schema)
   }
 
   /** CO-LOCATED READ: the same resolved current state as [[read]], but
@@ -2835,6 +2949,20 @@ object LakeTable {
   private[graft] def dataPath(root: String, ref: String): String =
     if (ref.startsWith("/")) ref else s"$root/$ref"
 
+  /** THE bucket function on literal key values, evaluated on the driver:
+    * must agree with [[LakeTable.bucketExpr]] (`pmod(xxhash64(keys…), B)`;
+    * `xxhash64` is XxHash64 with seed 42, and pmod by a positive divisor is
+    * floorMod). The one implementation keyed reads and runtime bucket
+    * pruning share, so neither can hash to a different bucket than the
+    * writer did. */
+  private[tables] def bucketOfKey(values: Seq[Any], types: Seq[DataType], numBuckets: Int): Int = {
+    val lits = values.zip(types).map { case (v, dt) =>
+      org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt) }
+    val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(lits, 42L)
+      .eval(null).asInstanceOf[Long]
+    math.floorMod(h, numBuckets.toLong).toInt
+  }
+
   /** Lineage/ledger retention window (batches). */
   final val DefaultRetainBatches = 128
 
@@ -2861,9 +2989,10 @@ object LakeTable {
     * same refcounted-baseline cure as [[LakeTable.withSpjConfs]], keyed per
     * (session, conf key)): every exit restores the BASELINE captured when no
     * window for that key was active, via set/unset so never-set keys stay
-    * never-set. Two overlapping windows on one key can briefly see each
-    * other's value — a bounded plan-shape blip, never a correctness issue
-    * (only plan tuning rides this). */
+    * never-set. Windows on one key may nest or overlap only with the SAME
+    * value: a window asking for a different value while another is open
+    * would leave its value active for the outer window's remainder, so it
+    * fails before touching any conf. */
   private val scopedConfLock = new Object
   private val scopedConfState =
     new java.util.IdentityHashMap[SparkSession, scala.collection.mutable.Map[String, Array[Any]]]()
@@ -2872,14 +3001,15 @@ object LakeTable {
     scopedConfLock.synchronized {
       var m = scopedConfState.get(spark)
       if (m == null) { m = scala.collection.mutable.Map.empty; scopedConfState.put(spark, m) }
-      val st = m.getOrElseUpdate(key, Array[Any](0, None))
-      if (st(0).asInstanceOf[Int] == 0) st(1) = spark.conf.getOption(key)
+      // (open windows, baseline, scoped value)
+      val st = m.getOrElseUpdate(key, Array[Any](0, None, value))
+      if (st(0).asInstanceOf[Int] == 0) { st(1) = spark.conf.getOption(key); st(2) = value }
+      else require(st(2) == value, s"scoped conf $key=$value requested inside an open " +
+        s"window that set it to ${st(2)}: windows on one key must use one value")
       // set BEFORE incrementing: if the set throws, the refcount is
       // untouched and the next entry recaptures the baseline at count 0 —
       // incrementing first would leak the count and pin the scoped value
-      // on the session forever. NOTE: nested windows on one key assume the
-      // SAME value (all current callers use a constant); an inner window
-      // with a different value would stay active for the outer remainder.
+      // on the session forever
       spark.conf.set(key, value)
       st(0) = st(0).asInstanceOf[Int] + 1
     }

@@ -97,27 +97,16 @@ object LakeBucketSource {
     }
   }
 
-  /** THE bucket function, scalar form: must agree with
-    * `LakeTable.bucketExpr` (`pmod(xxhash64(keys…), B)`) — one shared
-    * implementation so runtime pruning can never hash to different buckets
-    * than the writer did. Single-key form (runtime pruning is single-key
-    * only). */
-  private[dsv2] def bucketOf(value: Any, dt: DataType, numBuckets: Int): Int = {
-    val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(value, dt)), 42L)
-      .eval(null).asInstanceOf[Long]
-    math.floorMod(h, numBuckets.toLong).toInt
-  }
-
   /** Shared runtime-filter → kept-bucket-set rule for both scans: every
     * `In` filter on the single key column hashes its (non-null — null never
-    * equi-joins) values to buckets; multiple filters intersect. None = no
+    * equi-joins) values to buckets with the writer's bucket function
+    * ([[LakeTable.bucketOfKey]]); multiple filters intersect. None = no
     * applicable filter arrived (keep everything). */
   private[dsv2] def runtimeKeptBuckets(filters: Array[sources.Filter], key: String,
       dt: DataType, numBuckets: Int): Option[Set[Int]] = {
     val keptSets = filters.collect {
       case sources.In(attr, values) if attr == key =>
-        values.filter(_ != null).map(bucketOf(_, dt, numBuckets)).toSet
+        values.filter(_ != null).map(v => LakeTable.bucketOfKey(Seq(v), Seq(dt), numBuckets)).toSet
     }
     if (keptSets.isEmpty) None else Some(keptSets.reduce(_ intersect _))
   }
@@ -126,8 +115,9 @@ object LakeBucketSource {
     * driver-side getFileStatus loop over every layered file would re-run on
     * every (re)planning of a scan, and a hung filesystem must fail planning
     * with a diagnostic, not wedge the driver forever. Shared by the batch
-    * bucket scan and the CDF stream's micro-batch planning. */
-  private[dsv2] def statLengths(root: String, allRel: Seq[String],
+    * bucket scan, the CDF stream's micro-batch planning and the keyed
+    * reads' split-size check. */
+  private[tables] def statLengths(root: String, allRel: Seq[String],
       conf: Configuration): Map[String, Long] =
     if (allRel.size <= 1)
       allRel.map { rel =>

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +11,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * the same context across suites — cheap and avoids restart churn). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Block until every listener event posted so far has been delivered:
+    * listeners added with `addSparkListener` share one queue, so when a
+    * marker job's start reaches a listener added last, every earlier event
+    * has reached the listeners added before it. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val group = s"listener-drain-${System.nanoTime()}"
+    val seen = new CountDownLatch(1)
+    val marker = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.countDown()
+    }
+    sc.addSparkListener(marker)
+    try {
+      sc.setJobGroup(group, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
+    } finally sc.removeSparkListener(marker)
+  }
 }
 
 object SparkTestBase {

@@ -28,6 +28,23 @@ class MainSpec extends SparkTestBase {
     assert(t.snapshot().txns.contains("snapshot-replay"))
   }
 
+  test("Main detaches its progress listener: a job run after it returns " +
+      "prints no [graft-progress] line") {
+    val dir = out("csv-progress")
+    Main.main(Array(snapshotDir, "--csv-out", dir))
+    drainListenerBus() // reports of Main's own jobs land before the capture
+    val err = new java.io.ByteArrayOutputStream()
+    val old = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try {
+      // reads input records: a leaked listener reports this stage
+      assert(spark.read.option("header", "true").csv(dir).count() > 0)
+      drainListenerBus()
+    } finally System.setErr(old)
+    val printed = err.toString("UTF-8")
+    assert(!printed.contains("[graft-progress]"), printed)
+  }
+
   test("--csv-out writes the 4-column base58 projection (K2, csv.rs:14-20)") {
     val dir = out("csv")
     Main.main(Array(snapshotDir, "--csv-out", dir))

@@ -1,6 +1,6 @@
 package graft.tables
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types.StructType
 
@@ -501,7 +501,13 @@ class LakeTableSpec extends SparkTestBase {
   test("keyed point read prunes to one bucket and equals the full-read filter") {
     val t = newTable(buckets = 8)
     t.merge((0 until 64).map(i => (s"k$i", 1L, s"v$i")).toDF("k", "wv", "v"), "full")
-    val point = t.read(Map("k" -> "k7"))
+    // a 1-byte split puts every bucket over it: the distributed path
+    def distributed[A](f: => A): A =
+      LakeTable.withScopedConf(spark, "spark.sql.files.maxPartitionBytes", "1")(f)
+    def bothPaths(k: String): Seq[Seq[(String, Long, String)]] =
+      Seq(t.read(Map("k" -> k)), distributed(t.read(Map("k" -> k))))
+        .map(_.as[(String, Long, String)].collect().toSeq)
+    val point = distributed(t.read(Map("k" -> "k7")))
     assert(point.as[(String, Long, String)].collect().toSeq === Seq(("k7", 1L, "v7")))
     // scans exactly one bucket's files (1/8 of the table), a strict subset
     val all = t.snapshot().bucketFiles
@@ -510,18 +516,49 @@ class LakeTableSpec extends SparkTestBase {
     val owning = all.filter { case (_, fs) =>
       fs.map(rel => s"${t.root}/$rel").toSet == scanned }
     assert(owning.size === 1, s"scanned files $scanned not exactly one bucket")
+    // the driver path (the default for buckets this small) reads its files
+    // at call time: with every OTHER bucket's files moved aside it still
+    // answers, so it opened none of them
+    val aside = Files.createTempDirectory("laketbl-aside")
+    val moved = all.toSeq.filter(_._1 != owning.head._1).flatMap(_._2).map { rel =>
+      val from = Paths.get(t.root, rel)
+      val to = aside.resolve(rel.replace('/', '_'))
+      Files.move(from, to)
+      from -> to
+    }
+    assert(moved.size >= 7)
+    try assert(t.read(Map("k" -> "k7")).as[(String, Long, String)].collect().toSeq
+      === Seq(("k7", 1L, "v7")))
+    finally moved.foreach { case (from, to) => Files.move(to, from) }
     // MOR: a dirty target bucket resolves layers inside the point read
     t.merge(Seq(("k7", 5L, "v7-new"), ("k9", 2L, "v9b")).toDF("k", "wv", "v"),
       "delta", mor = true)
-    assert(t.read(Map("k" -> "k7")).as[(String, Long, String)].collect().toSeq
-      === Seq(("k7", 5L, "v7-new")))
+    assert(bothPaths("k7") === Seq.fill(2)(Seq(("k7", 5L, "v7-new"))))
     // equals the unpruned read for every key
     val full = t.read().as[(String, Long, String)].collect().map(r => r._1 -> r).toMap
     Seq("k7", "k9", "k23").foreach { k =>
-      assert(t.read(Map("k" -> k)).as[(String, Long, String)].collect().toSeq
-        === Seq(full(k)))
+      assert(bothPaths(k) === Seq.fill(2)(Seq(full(k))))
     }
-    assert(t.read(Map("k" -> "missing")).count() === 0L)
+    assert(bothPaths("missing") === Seq.fill(2)(Nil))
+  }
+
+  test("withScopedConf: same-value windows nest; a different value inside an " +
+      "open window throws before any conf changes") {
+    val key = "spark.graft.test.scoped"
+    spark.conf.unset(key)
+    LakeTable.withScopedConf(spark, key, "a") {
+      LakeTable.withScopedConf(spark, key, "a")(assert(spark.conf.get(key) === "a"))
+      assert(spark.conf.get(key) === "a") // the inner exit keeps the outer value
+      val e = intercept[IllegalArgumentException](
+        LakeTable.withScopedConf(spark, key, "b")(fail("the body must not run")))
+      assert(e.getMessage.contains(key))
+      assert(spark.conf.get(key) === "a")
+    }
+    // the refused window took no count: the outer exit restores the unset
+    // baseline, and a later window is free to use another value
+    assert(spark.conf.getOption(key).isEmpty)
+    LakeTable.withScopedConf(spark, key, "b")(assert(spark.conf.get(key) === "b"))
+    assert(spark.conf.getOption(key).isEmpty)
   }
 
   test("logicalRowCount resolves merge-on-read shadowing; rowCount stays stored") {
