@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.streaming.SnapshotReplay
+import graft.tables.MergePlan
 
 /** Copy-on-write vs merge-on-read replay comparison: the SAME
   * full+incremental snapshot stream is merged in both modes and the walls
@@ -94,32 +95,26 @@ object MorBench {
       // pin the COW algorithm explicitly: the auto gate would route the
       // "cow" baseline onto SPJ at this shape (buckets ≥ cores, table ≥
       // delta), which is the production default but not what this A/B is
-      // isolating. The pin starts AFTER the full load — against an empty
-      // table SPJ has nothing to save (the auto gate correctly skips it),
-      // so all modes pay the identical classic full-load cost.
-      sys.props("graft.cow.spj") = "0"
-      try {
-        // the full load takes the one-job empty-table path identically in
-        // all modes; the DELTA stream is where the trade lives
-        val tFull0 = System.nanoTime()
-        SnapshotReplay.applySnapshot(spark, table, s"$work/input/${snapNames.head}")
-        val fullSec = (System.nanoTime() - tFull0) / 1e9
-        sys.props("graft.cow.spj") = if (mode == "cow_spj") "1" else "0"
-        val t0 = System.nanoTime()
-        snapNames.tail.foreach { name =>
-          SnapshotReplay.applySnapshot(spark, table, s"$work/input/$name", mor = mor)
-        }
-        val replaySec = (System.nanoTime() - t0) / 1e9
-        val storedRows = table.snapshot().rowCount
-        val t1 = System.nanoTime()
-        if (mor) table.compact()
-        val compactSec = (System.nanoTime() - t1) / 1e9
-        val finalRows = table.read().count()
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        System.err.println(f"[mor] mode=$mode full=$fullSec%.1fs deltas=$replaySec%.1fs " +
-          f"compact=$compactSec%.1fs stored=$storedRows final=$finalRows")
-        R(fullSec, replaySec, compactSec, storedRows, finalRows)
-      } finally sys.props.remove("graft.cow.spj")
+      // isolating. The full load takes the one-job empty-table route
+      // identically in all modes; the DELTA stream is where the trade lives.
+      table.planPin = MergePlan.Pin(spj = Some(mode == "cow_spj"))
+      val tFull0 = System.nanoTime()
+      SnapshotReplay.applySnapshot(spark, table, s"$work/input/${snapNames.head}")
+      val fullSec = (System.nanoTime() - tFull0) / 1e9
+      val t0 = System.nanoTime()
+      snapNames.tail.foreach { name =>
+        SnapshotReplay.applySnapshot(spark, table, s"$work/input/$name", mor = mor)
+      }
+      val replaySec = (System.nanoTime() - t0) / 1e9
+      val storedRows = table.snapshot().rowCount
+      val t1 = System.nanoTime()
+      if (mor) table.compact()
+      val compactSec = (System.nanoTime() - t1) / 1e9
+      val finalRows = table.read().count()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      System.err.println(f"[mor] mode=$mode full=$fullSec%.1fs deltas=$replaySec%.1fs " +
+        f"compact=$compactSec%.1fs stored=$storedRows final=$finalRows")
+      R(fullSec, replaySec, compactSec, storedRows, finalRows)
     }
     run("mor") // warmup
     val modes = Seq("cow", "cow_spj", "mor")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * without paying the full Bench pass). Usage:
   *   runMain graft.QueryBench q16_snapshot_replay q30_repo_cdc [reps]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  * plus the usual GRAFT_MERGE_DEBUG / GRAFT_STAGE_PROFILE switches.
+  * plus the GRAFT_STAGE_PROFILE switch.
   */
 object QueryBench {
   def main(args: Array[String]): Unit = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.sources.SnapshotFixture
 import graft.streaming.SnapshotReplay
+import graft.tables.MergePlan
 
 /** Hot-key skew benchmark: replays the SAME deliberately-skewed
   * full+incremental snapshot stream twice — `salted = false` vs `true` —
@@ -94,19 +95,16 @@ object SkewBench {
     def replay(mode: String): (Double, Long, Int) = {
       val tableDir = s"$work/table-$mode-${System.nanoTime()}"
       val table = SnapshotReplay.createTable(spark, tableDir, numBuckets = 32)
-      sys.props("graft.merge.autosalt") = if (mode == "auto") "1" else "0"
+      table.planPin = MergePlan.Pin(autoSalt = mode == "auto")
       var salts = 0
-      val incSec =
-        try {
-          SnapshotReplay.applySnapshot(spark, table, s"$work/input/snap-full")
-          val t0 = System.nanoTime()
-          Seq("snap-inc1", "snap-inc2").foreach { name =>
-            SnapshotReplay.applySnapshot(spark, table, s"$work/input/$name",
-              salted = mode == "salted")
-            if (table.lastMergeSalted) salts += 1
-          }
-          (System.nanoTime() - t0) / 1e9
-        } finally sys.props.remove("graft.merge.autosalt")
+      SnapshotReplay.applySnapshot(spark, table, s"$work/input/snap-full")
+      val t0 = System.nanoTime()
+      Seq("snap-inc1", "snap-inc2").foreach { name =>
+        SnapshotReplay.applySnapshot(spark, table, s"$work/input/$name",
+          salted = mode == "salted")
+        if (table.lastMergePlan.exists(_.salted)) salts += 1
+      }
+      val incSec = (System.nanoTime() - t0) / 1e9
       val rows = table.read().count()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tableDir))
       System.err.println(f"[skew] mode=$mode incSec=$incSec%.1f salted=$salts/2")

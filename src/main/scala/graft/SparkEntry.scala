@@ -392,11 +392,11 @@ object SparkEntry {
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
       val table = LakeTable.createOrOpen(s, s"$work/table", ev.schema,
         keyCols = Seq("user_id"), orderCols = Seq("ts", "event_id"), numBuckets = 16)
-      sys.props("graft.cow.spj") = "1"
-      try (0 until 3).foreach { k =>
+      table.planPin = graft.tables.MergePlan.Pin(spj = Some(true))
+      (0 until 3).foreach { k =>
         table.merge(ev.filter(col("event_id") % 3 === k), s"spj-$k",
           txn = Some(("q34", k.toLong)))
-      } finally sys.props.remove("graft.cow.spj")
+      }
       table.read().select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_event_type"), col("value").as("last_value"))
     }),

@@ -156,7 +156,6 @@ object Components {
         .distinct()
     }
 
-    val debug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
     // Right-size the loop's shuffles to the LIVE edge count: each round is
     // 4 exchanges over the (shrinking) edge set, and at session defaults a
     // small graph pays pure scheduling — 32 near-empty partitions × 4
@@ -183,15 +182,12 @@ object Components {
     try {
     while (!converged && rounds < maxRounds) {
       rounds += 1
-      val t0 = System.nanoTime()
       conf.set("spark.sql.shuffle.partitions", loopParts(curCount))
       val big = curCount >= 10000000L
       conf.set("spark.sql.adaptive.enabled", big.toString)
       conf.set("spark.sql.codegen.wholeStage", big.toString)
       val next = smallStar(largeStar(cur)).localCheckpoint()
       val (nextCount, nextHash) = fingerprint(next)
-      if (debug) System.err.println(f"[graft-cc] round $rounds: $nextCount edges " +
-        f"(was $curCount) in ${(System.nanoTime() - t0) / 1e9}%.2fs")
       // fixed point ⇔ star set (each star op is identity exactly on stars —
       // the alternation's potential argument admits no other fixed point);
       // the except runs over two materialized checkpoints, not re-planned

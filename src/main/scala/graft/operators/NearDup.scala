@@ -416,8 +416,7 @@ object NearDup {
     // 12.5M checks = a 0.6s one-task stage while 31 cores idle).
     val nDocs = enc.count()
     val singleTaskBytes = 64L << 20
-    val singleTaskDocs = // ≤ ~2e6 pair checks per task at the default
-      sys.env.getOrElse("GRAFT_BITMAP_SINGLE_TASK_DOCS", "2048").toLong
+    val singleTaskDocs = 2048L // ≤ ~2e6 pair checks per task
     val par = math.max(1, spark.sparkContext.defaultParallelism)
     val minBlocksForPar = math.ceil((math.sqrt(8.0 * par + 1) - 1) / 2).toInt
     val b =

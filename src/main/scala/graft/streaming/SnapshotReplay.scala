@@ -35,8 +35,7 @@ object SnapshotReplay {
 
   /** Archives below this size skip the staging parquet and let the merge
     * scan them twice — cheaper than write+re-read for small local files. */
-  private def stagingThresholdBytes: Long =
-    sys.env.getOrElse("GRAFT_STAGING_THRESHOLD_BYTES", (256L << 20).toString).toLong
+  private final val StagingThresholdBytes = 256L << 20
 
   /** Size of a LOCAL archive file; None for remote/unstattable paths (those
     * always stage — the one-pass property is about their read cost). */
@@ -99,7 +98,7 @@ object SnapshotReplay {
       // where it matters — 100 GB archives (decode dominates) and URLs
       // (transfer must happen once; asserted in HttpSnapshotSourceSpec).
       case a: graft.sources.ArchiveSnapshotSource
-          if localArchiveBytes(spark, a.archivePath).exists(_ < stagingThresholdBytes) =>
+          if localArchiveBytes(spark, a.archivePath).exists(_ < StagingThresholdBytes) =>
         val conf = spark.sparkContext.hadoopConfiguration
         val slot = ArchiveSnapshotSource.readManifest(a.archivePath, conf).slot
         val rows = ArchiveSnapshotSource.fromArchives(spark, Seq(a.archivePath))

@@ -186,18 +186,16 @@ final class LakeTable private (
     * stats pass */
   val SrcFlagCol = "_ghasbatch"
 
-  /** Effective salting decision of the last merge from this handle (specs,
-    * benches + observability; the auto gate rides the COW stats pass).
-    * Volatile: the supported stream+maintenance pattern reads table state
-    * from more than one thread. Reset at merge entry, so a replayed
-    * (exactly-once no-op) merge reads as not-salted. */
-  @volatile private[graft] var lastMergeSalted: Boolean = false
+  /** The plan the last merge from this handle ran (specs, benches and
+    * observability). Volatile: the supported stream+maintenance pattern
+    * reads table state from more than one thread. Reset at merge entry, so
+    * a replayed (exactly-once no-op) merge reads as None. */
+  @volatile private[graft] var lastMergePlan: Option[MergePlan] = None
 
-  /** Auto-salting is ON by default; disable with -Dgraft.merge.autosalt=0
-    * or GRAFT_AUTOSALT=0 (e.g. for A/B harnesses pinning a mode). */
-  private def autoSaltEnabled: Boolean =
-    sys.props.get("graft.merge.autosalt").orElse(sys.env.get("GRAFT_AUTOSALT"))
-      .forall(_ != "0")
+  /** Route and salting pin for this handle's merges — specs and A/B
+    * harnesses only. No env var, session conf or SQL reaches it, and the
+    * handles `LakeCatalog`/`LakeDml` open never set it. */
+  @volatile private[graft] var planPin: MergePlan.Pin = MergePlan.Pin()
 
   def currentVersion(): Long = {
     val vf = Paths.get(root, "meta", "VERSION")
@@ -873,107 +871,49 @@ final class LakeTable private (
     }
   }
 
-  /** Storage-partitioned COW merge: eligible when the existing side is the
-    * bigger side (that is what the plan saves: existing rows no longer ride
-    * the exchange) and the touched-bucket count sustains write parallelism
-    * (the SPJ plan writes one task per bucket — at production bucket counts,
-    * buckets ≫ cores, this is always true; tiny tables keep the subsplit
-    * path). `GRAFT_COW_SPJ=1/0` (env, or the `graft.cow.spj` system
-    * property for in-process tests) forces either way. */
-  /** SCALE-ADAPTIVE write parallelism (guide §2.2/§6: fewer, larger
-    * partitions; sensible output file counts): the `writeFactor` sub-split
-    * exists to push a big merge's write parallelism past the touched-bucket
-    * count (waveFactor waves per core), but applying it to a SMALL merge
-    * fragments the commit into `buckets × factor` near-empty files whose
-    * per-task scheduling, writer open/close, commit renames and footer
-    * reads dominate the merge wall — and every later scan and stats pass
-    * then pays the file count again. A merge below the smallness bound
-    * keeps one write task per touched bucket (the layout floor); big
-    * merges keep the full fan-out unchanged. Both bounds are parameterised
-    * (env) and sized in DATA terms, so the policy is scale-adaptive rather
-    * than tuned to any core count: at production batch sizes every real
-    * merge clears them and nothing changes. */
-  private def adaptiveWriteFactor(base: Int, small: => Boolean): Int =
-    if (base > 1 && small) 1 else base
-
-  /** Rows bound under which a merge keeps one write task per bucket
-    * (classic path: exact, from the stats pass). */
-  private def smallMergeRows: Long = LakeTable.smallOpRows
-
-  /** Stored rows of `buckets` for the maintenance small-op gates — or
-    * "NOT small" when any non-empty bucket has no `bucketRows` entry (a
-    * legacy snapshot): an UNKNOWN size must keep today's behavior, never
-    * shrink a potentially large rewrite's planning (same invariant as
-    * [[smallBatch]]). */
-  private def knownBucketRowsSmall(snap: TableSnapshot, buckets: Seq[Int]): Boolean = {
-    var sum = 0L
-    buckets.forall { b =>
-      snap.bucketRows.get(b) match {
-        case Some(n) => sum += n; sum <= smallMergeRows
-        case None => snap.bucketFiles.getOrElse(b, Nil).isEmpty // unknown ⇒ not small
-      }
-    }
-  }
-
   /** Run `f` (plan construction + execution of one engine operation) with
     * adaptive query execution scoped OFF when the operation is SMALL — see
-    * [[LakeTable.smallOpRows]] for the rationale and the scale gate. No-op
+    * [[MergePlan.SmallOpRows]] for the rationale and the scale gate. No-op
     * for big operations and outside the window. */
   private def withSmallPlanConfs[A](small: Boolean)(f: => A): A =
     if (small) LakeTable.withScopedConf(spark, "spark.sql.adaptive.enabled", "false")(f)
     else f
 
-  /** Smallness test for the one-job path, where no stats pass ran: the
-    * caller's row-count hint when it has one (the streaming sink counts its
-    * pinned batch anyway), else the optimizer's size estimate — accurate
-    * for file-backed and cached batches, and `defaultSizeInBytes` (huge ⇒
-    * NOT small, i.e. current behavior) for opaque ones like raw RDD scans,
-    * so an unknown size can only keep the old fan-out, never shrink a big
-    * merge's parallelism.
+  /** What [[MergePlan.batchSmall]] needs of `batch` before any of it is
+    * read. The optimized plan is built only when there is no row hint; a
+    * plan whose estimate cannot be computed has none (NOT small). */
+  private def batchSize(batch: DataFrame, rowsHint: Option[Long]): MergePlan.BatchSize =
+    if (rowsHint.isDefined) MergePlan.BatchSize(rowsHint)
+    else try {
+      val plan = batch.queryExecution.optimizedPlan
+      MergePlan.BatchSize(None, Some(plan.stats.sizeInBytes),
+        plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ObjectProducer]))
+    } catch { case _: Exception => MergePlan.BatchSize(None) }
+
+  /** MERGE INTO: LWW upsert of `batch` under exactly-once semantics, on
+    * the route [[MergePlan.decide]] picks (recorded in [[lastMergePlan]]).
     *
-    * A plan containing an OBJECT-PRODUCING node (typed `mapPartitions` /
-    * `flatMap` — the snapshot decode shape: a KB-sized list of file refs
-    * expanding into millions of decoded rows) is NEVER small regardless of
-    * the estimate: the optimizer propagates the tiny input size through the
-    * opaque function, and trusting it would strip a full-snapshot load of
-    * its write parallelism. */
-  private def smallBatch(batch: DataFrame, rowsHint: Option[Long]): Boolean =
-    rowsHint match {
-      case Some(n) => n <= smallMergeRows
-      case None =>
-        val bytes = sys.env.getOrElse("GRAFT_MERGE_SMALL_BYTES", (64L << 20).toString).toLong
-        try {
-          val plan = batch.queryExecution.optimizedPlan
-          val opaque = plan.exists(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ObjectProducer])
-          !opaque && plan.stats.sizeInBytes <= BigInt(bytes)
-        } catch { case _: Exception => false }
-    }
-
-  private def spjEligible(touched: Seq[Int], oldTouchedRows: Long, rowsIn: Long): Boolean =
-    // an empty batch has no buckets to scan — a zero-partition SPJ plan is a
-    // degenerate shape nothing should build, force flag or not
-    touched.nonEmpty &&
-      (sys.props.get("graft.cow.spj").orElse(sys.env.get("GRAFT_COW_SPJ")) match {
-        case Some("1") => true
-        case Some("0") => false
-        case _ =>
-          touched.size >= spark.sparkContext.defaultParallelism && oldTouchedRows >= rowsIn
-      })
-
-  /** MERGE INTO: LWW upsert of `batch` under exactly-once semantics.
+    * `mor = true` switches this merge to MERGE-ON-READ: the deduped batch
+    * is appended as a new LAYER to its buckets instead of rewriting them —
+    * write cost ∝ batch size instead of ∝ touched-bucket size (copy-on-write
+    * amplification: a delta brushing every bucket rewrites the whole table).
+    * Reads resolve layered buckets with the LWW rule until [[compact]]
+    * rewrites them; final state is IDENTICAL to copy-on-write merges
+    * (spec-proven fold equality). This is the Iceberg-v2 MOR trade: cheap
+    * writes, deferred read cost, explicit compaction.
     *
     * CONTRACT: `batch` must be DETERMINISTIC across re-executions. The
-    * classic copy-on-write path evaluates it twice (touched-bucket stats
-    * pass, then the merge write); a batch whose rows differ between the
-    * two runs (rand()/LIMIT-over-unordered/sampling sources) could land
-    * rows in a bucket the stats pass never saw, whose existing files the
-    * commit then replaces without carrying their rows into the rewrite.
-    * Deliberately NOT defended here with caching — the stream replay's
-    * decode batches are deterministic by construction and caching them
-    * measurably halves throughput (BASELINE.md codec matrix: merge-cache
-    * 44.1 s vs 21.9 s) — but every NON-deterministic entry point must pin
-    * its input first (the SQL INSERT bridge localCheckpoints, LakeCatalog).
+    * copy-on-write routes evaluate it twice (touched-bucket stats pass,
+    * then the merge write); a batch whose rows differ between the two runs
+    * (rand()/LIMIT-over-unordered/sampling sources) could land rows in a
+    * bucket the stats pass never saw, whose existing files the commit then
+    * replaces without carrying their rows into the rewrite. Deliberately
+    * NOT defended here with caching — the stream replay's decode batches
+    * are deterministic by construction, and caching the batch measured
+    * 2.8× slower on the 12.3M-event replay (BASELINE.md codec matrix:
+    * merge-cache 44.1 s vs 15.9 s for the shipped defaults) — but every
+    * NON-deterministic entry point must pin its input first (the SQL INSERT
+    * bridge localCheckpoints, LakeCatalog).
     *
     * @param batchId   human-readable replay id (lineage key)
     * @param salted    route the in-batch dedup through the two-phase salted
@@ -988,22 +928,17 @@ final class LakeTable private (
     * @param counterCols extra per-batch counters recorded in lineage; each
     *                  must be a sum/count-style aggregate (they are computed
     *                  per bucket in the stats pass and summed).
+    * @param mor       append the batch as a merge-on-read layer
+    * @param rowsHint  the batch's row count, when the caller has it (feeds
+    *                  the small-op test of the one-job route)
     * @return rows upserted (0 for a re-delivered batch)
     */
-  /** `mor = true` switches this merge to MERGE-ON-READ: the deduped batch
-    * is appended as a new LAYER to its buckets instead of rewriting them —
-    * write cost ∝ batch size instead of ∝ touched-bucket size (copy-on-write
-    * amplification: a delta brushing every bucket rewrites the whole table).
-    * Reads resolve layered buckets with the LWW rule until [[compact]]
-    * rewrites them; final state is IDENTICAL to copy-on-write merges
-    * (spec-proven fold equality). This is the Iceberg-v2 MOR trade: cheap
-    * writes, deferred read cost, explicit compaction. */
   def merge(batch: DataFrame, batchId: String, salted: Boolean = false,
       txn: Option[(String, Long)] = None,
       counterCols: Map[String, Column] = Map.empty,
       mor: Boolean = false,
       rowsHint: Option[Long] = None): Long = {
-    lastMergeSalted = false
+    lastMergePlan = None
     val snap = snapshot()
     val replayed = txn match {
       case Some((app, seq)) => snap.txns.get(app).exists(_ >= seq)
@@ -1027,30 +962,12 @@ final class LakeTable private (
     require(snap.keyCols.forall(batch.columns.contains),
       s"batch missing key columns ${snap.keyCols}")
 
-    // The batch is typically the output of an expensive decode (mapPartitions
-    // binary parse) and is scanned twice (stats pass + merge write). Caching
-    // trades memory for the second decode; measured ~neutral at bench scale
-    // (columnar cache encode ≈ decode cost), so it's opt-in.
-    val cacheBatch = sys.props.get("graft.merge.cache")
-      .orElse(sys.env.get("GRAFT_MERGE_CACHE")).contains("1")
-    val alignedBatch0 = align(batch, evolved)
-    val alignedBatch =
-      if (cacheBatch) alignedBatch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else alignedBatch0
-    val dbg = sys.env.get("GRAFT_MERGE_DEBUG").contains("1")
+    val alignedBatch = align(batch, evolved)
     var inflightMarker: JPath = null
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[merge $batchId] $name ${(now - tPhase) / 1e9}%.2fs")
-      tPhase = now
-    }
     try {
       val counterNames = counterCols.keys.toSeq.sorted
+      val counterAggs = counterNames.map(n => counterCols(n).cast("long").as(s"_c_$n"))
       val cores = spark.sparkContext.defaultParallelism
-      // sub-splits per core measured neutral between 2 and 4 waves; 2 keeps
-      // file counts lower
-      val waveFactor = sys.env.getOrElse("GRAFT_WRITE_WAVES", "2").toInt
       val newVersion = snap.version + 1
       // UNIQUE staging dir: two ingest writers racing is a hard error at
       // commit time, but the error must stay a METADATA conflict — sharing
@@ -1064,169 +981,106 @@ final class LakeTable private (
       Files.createDirectories(Paths.get(root, "meta"))
       Files.write(inflightMarker, Array.emptyByteArray)
 
-      // =====================================================================
-      // ONE-JOB path (no stats pass): taken by MOR merges — and by ANY
-      // merge into an EMPTY table, where copy-on-write and merge-on-read
-      // are indistinguishable (nothing to read, nothing to layer; the
-      // full-snapshot load is exactly this case). The only reason the
-      // classic path scans the batch twice — touched-bucket discovery for
-      // existing-side pruning — disappears in both. rows_in + caller
-      // counters ride the write plan as observed metrics (CollectMetrics:
-      // zero extra scans); touched buckets and the upsert count (=
-      // post-dedup rows = distinct batch keys) come from the written files'
-      // footers. Halving the number of batch scans matters: the batch is
-      // typically an expensive mapPartitions binary decode.
-      // =====================================================================
+      // COW stats pass: one CHEAP job (touched buckets for existing-side
+      // pruning, row count, caller counters — plain hash aggregation, no
+      // count_distinct/Expand). The upsert count (distinct batch keys) is
+      // observed ON the write job instead: the merge aggregation carries
+      // max(_ghasbatch) per key group, and its sum over the merged output
+      // is exactly the distinct-batch-key count.
       val emptyTable = snap.rowCount == 0L && snap.bucketFiles.values.forall(_.isEmpty)
-      val (touched, upserts, rowsIn, customCounters, written, writtenRows, writtenStats,
-          oldTouchedRows) =
-        if (mor || emptyTable) {
-        // one-job path: no stats rows to feed the auto-salt estimate —
-        // salting stays the caller's explicit choice here
-        lastMergeSalted = salted
-        val small = smallBatch(alignedBatch, rowsHint)
-        val writeFactor = adaptiveWriteFactor(
-          math.max(1, math.ceil(waveFactor.toDouble * cores / snap.numBuckets).toInt), small)
-        val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId-$newVersion")
-        val obsAggs = count(lit(1)).as("_nrows") +:
-          counterNames.map(n => counterCols(n).cast("long").as(s"_c_$n"))
-        val observed = alignedBatch.observe(obs, obsAggs.head, obsAggs.tail: _*)
-          .withColumn(BucketCol, bucketExpr(snap.keyCols, snap.numBuckets))
-          .withColumn(SubSplitCol,
-            pmod(xxhash64(snap.keyCols.map(col): _*), lit(writeFactor)).cast("int"))
-        val base =
-          if (salted) Dedup.saltedPreAggregate(observed,
-            snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols,
-            numSalts = math.max(16, cores))
-          else observed
-        // dedup rides the one (bucket, subsplit) exchange exactly like the
-        // classic plan; partition count mirrors it too (numBuckets ×
-        // writeFactor ≥ waveFactor·cores — fewer, larger sort partitions
-        // measurably hurt the narrow-parallelism levels)
-        withSmallPlanConfs(small) {
-          bucketWriter(Dedup.latestByKey(
-              base.repartition(math.max(1, snap.numBuckets * writeFactor),
-                col(BucketCol), col(SubSplitCol)),
-              snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols)
-            .drop(SubSplitCol), snap)
-            .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-        }
-        phase("write(mor-1job)")
-        touchInflight(commitRel)
-        val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-        val (writtenRows, writtenStats) =
-          writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-            statsFirst = snap.sortOrder)
-        val m = obs.get
-        if (m("_nrows").asInstanceOf[Long] > 0 && written.isEmpty)
-          throw new IllegalStateException(
-            s"staging dir $commitRel produced no files for a non-empty batch — " +
-              "was it swept by a concurrent expire()?")
-        (written.keys.toSeq.sorted, writtenRows.values.sum,
-          m("_nrows").asInstanceOf[Long],
-          counterNames.map(n => n -> m(s"_c_$n").asInstanceOf[Long]).toMap,
-          written, writtenRows, writtenStats, 0L)
-      } else {
-        // ===================================================================
-        // COW: one CHEAP stats job (touched buckets for existing-side
-        // pruning, row count, caller counters — plain hash aggregation, no
-        // count_distinct/Expand), then the merge write. The upsert count
-        // (distinct batch keys) is observed ON the write job instead: the
-        // merge aggregation carries max(_ghasbatch) per key group, and its
-        // sum over the merged output is exactly the distinct-batch-key count.
-        // ===================================================================
-        val aggs = count(lit(1)).as("_nrows") +:
-          counterNames.map(n => counterCols(n).cast("long").as(s"_c_$n"))
-        val stats = withSmallPlanConfs(smallBatch(alignedBatch, rowsHint)) {
+      val size = batchSize(alignedBatch, rowsHint)
+      val stats =
+        if (!MergePlan.needsStats(mor, emptyTable)) Array.empty[org.apache.spark.sql.Row]
+        else withSmallPlanConfs(MergePlan.batchSmall(size)) {
           alignedBatch
             .groupBy(bucketExpr(snap.keyCols, snap.numBuckets).as(BucketCol))
-            .agg(aggs.head, aggs.tail: _*)
+            .agg(count(lit(1)).as("_nrows"), counterAggs: _*)
             .collect()
         }
-        phase("stats")
-        val touched = stats.map(_.getInt(0)).toSeq.sorted
-        val rowsIn = stats.map(_.getLong(1)).sum
-        val customCounters = counterNames.zipWithIndex.map { case (n, i) =>
-          n -> stats.map(_.getLong(2 + i)).sum
-        }.toMap
+      val batchRows = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val statsTouched = batchRows.keys.toSeq.sorted
+      // old touched rows from the incrementally-maintained bucketRows (no
+      // re-read); the plan and the COW rowCount delta below both need them
+      val oldTouchedRows = statsTouched.map(b => snap.bucketRows.getOrElse(b,
+        countRows(snap.bucketFiles.getOrElse(b, Nil).map(rel => LakeTable.dataPath(root, rel)),
+          curSchema))).sum
+      val plan = MergePlan.decide(mor, emptyTable, snap.numBuckets, cores, batchRows,
+        oldTouchedRows, salted, size, planPin)
+      lastMergePlan = Some(plan)
 
-        // --- AUTO-SALT from the same stats rows (zero extra cost): the
-        // measured crossover (SKEW.json) puts salting ahead only when ONE
-        // key carries most of the stream (1.93× at 90%-on-1) and behind at
-        // moderate skew (0.79× at 50%-on-4). A key that hot makes its
-        // BUCKET that hot — the hash balances distinct keys, so the
-        // hottest bucket's EXCESS over the median bucket is a faithful,
-        // already-computed estimate of the top key's share. Threshold 0.6
-        // sits between the borderline 50%-on-1 point (salted 0.9×) and the
-        // 90% win; tiny batches never salt (straggler < one task's work).
-        val saltedEff = salted || (autoSaltEnabled && {
-          val counts = Array.fill(snap.numBuckets)(0L)
-          stats.foreach(r => counts(r.getInt(0)) = r.getLong(1))
-          java.util.Arrays.sort(counts)
-          val excess = counts.last - counts(snap.numBuckets / 2)
-          rowsIn >= AutoSaltMinRows &&
-            excess.toDouble / math.max(1L, rowsIn) >= AutoSaltTopShare
-        })
-        lastMergeSalted = saltedEff
-        if (saltedEff && !salted) phase("auto-salt")
-
-        val touchedFiles = touched.flatMap(b => snap.bucketFiles.getOrElse(b, Nil)).map(rel => LakeTable.dataPath(root, rel))
-        // old touched rows from the incrementally-maintained bucketRows (no
-        // re-read); needed both for the SPJ eligibility gate and the COW
-        // rowCount delta below
-        val oldTouchedRows = touched.map(b => snap.bucketRows.getOrElse(b,
-          countRows(snap.bucketFiles.getOrElse(b, Nil).map(rel => LakeTable.dataPath(root, rel)), curSchema))).sum
-        val spj = spjEligible(touched, oldTouchedRows, rowsIn)
-
-        // --- ONE-shuffle LWW MERGE (classic): in-batch dedup and old∪new
-        // resolution are one aggregation riding the bucket repartition:
-        // HashPartitioning(bucket, subsplit) satisfies ClusteredDistribution
-        // (keys ∪ bucket ∪ subsplit) because both partition exprs are in the
-        // grouping — Catalyst inserts NO second exchange. `subsplit` (a key
-        // hash) decouples write parallelism from bucket count. The salted
-        // path (hot keys) trades this for a two-phase agg. The SPJ path
-        // (buildMergedSpj) replaces all of this with the storage-partitioned
-        // join when the shape is right.
-        val small = rowsIn + oldTouchedRows <= smallMergeRows
-        val writeFactor = adaptiveWriteFactor(
-          math.max(1, math.ceil(waveFactor.toDouble * cores / math.max(1, touched.size)).toInt),
-          small)
-        val obs = org.apache.spark.sql.Observation(s"graft-upserts-$batchId-$newVersion")
-        val upsertAgg = coalesce(sum(col(SrcFlagCol)), lit(0L)).cast("long").as("_upserts")
-        withSmallPlanConfs(small) {
-        if (spj) withSpjConfs(Some(touched.size)) {
-          // storage-partitioned path: existing side unshuffled (see
-          // buildMergedSpj); plan + write must both run under the SPJ confs
-          bucketWriter(buildMergedSpj(snap, evolved, touched, alignedBatch, saltedEff)
+      // One-job: rows_in + caller counters ride the write plan as observed
+      // metrics (CollectMetrics: zero extra scans); touched buckets and the
+      // upsert count (= post-dedup rows = distinct batch keys) come from
+      // the written files' footers. COW: the write observes the upserts.
+      val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId-$newVersion")
+      val upsertAgg = coalesce(sum(col(SrcFlagCol)), lit(0L)).cast("long").as("_upserts")
+      // built inside the write's conf windows: the SPJ plan must be planned
+      // under the SPJ confs
+      def output(): DataFrame = plan.route match {
+        case MergePlan.OneJob =>
+          val observed = alignedBatch.observe(obs, count(lit(1)).as("_nrows"), counterAggs: _*)
+            .withColumn(BucketCol, bucketExpr(snap.keyCols, snap.numBuckets))
+            .withColumn(SubSplitCol,
+              pmod(xxhash64(snap.keyCols.map(col): _*), lit(plan.writeFactor)).cast("int"))
+          val base =
+            if (plan.salted) Dedup.saltedPreAggregate(observed,
+              snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols,
+              numSalts = math.max(16, cores))
+            else observed
+          // dedup rides the one (bucket, subsplit) exchange exactly like the
+          // classic plan; partition count mirrors it too (numBuckets ×
+          // writeFactor ≥ waveFactor·cores — fewer, larger sort partitions
+          // measurably hurt the narrow-parallelism levels)
+          Dedup.latestByKey(
+              base.repartition(math.max(1, snap.numBuckets * plan.writeFactor),
+                col(BucketCol), col(SubSplitCol)),
+              snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols)
+            .drop(SubSplitCol)
+        case MergePlan.SpjCow =>
+          // existing side unshuffled (see buildMergedSpj)
+          buildMergedSpj(snap, evolved, statsTouched, alignedBatch, plan.salted)
             .observe(obs, upsertAgg)
-            .drop(SrcFlagCol), snap)
-            .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-        } else {
+            .drop(SrcFlagCol)
+        case MergePlan.ClassicCow =>
+          // ONE-shuffle LWW merge: in-batch dedup and old∪new resolution are
+          // one aggregation riding the (bucket, subsplit) repartition — see
+          // buildMerged
+          val touchedFiles = statsTouched.flatMap(b => snap.bucketFiles.getOrElse(b, Nil))
+            .map(rel => LakeTable.dataPath(root, rel))
           val existing =
             if (touchedFiles.isEmpty)
               align(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema), evolved)
             else align(spark.read.schema(curSchema).parquet(touchedFiles: _*), evolved)
-          bucketWriter(buildMerged(existing, alignedBatch, snap, touched.size,
-              writeFactor, saltedEff, withSrcFlag = true)
+          buildMerged(existing, alignedBatch, snap, statsTouched.size,
+              plan.writeFactor, plan.salted, withSrcFlag = true)
             .observe(obs, upsertAgg)
-            .drop(SubSplitCol, SrcFlagCol), snap)
-            .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-        }
-        }
-        phase(if (spj) "write(spj)" else "write")
-        touchInflight(commitRel)
-        val upserts = obs.get("_upserts").asInstanceOf[Long]
-        val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-        if ((rowsIn > 0 || oldTouchedRows > 0) && written.isEmpty)
-          throw new IllegalStateException(
-            s"staging dir $commitRel produced no files for a non-empty merge — " +
-              "was it swept by a concurrent expire()?")
-        val (writtenRows, writtenStats) =
-          writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-            statsFirst = snap.sortOrder)
-        (touched, upserts, rowsIn, customCounters, written, writtenRows, writtenStats,
-          oldTouchedRows)
+            .drop(SubSplitCol, SrcFlagCol)
       }
+      def write(): Unit = bucketWriter(output(), snap)
+        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
+      withSmallPlanConfs(plan.small) {
+        if (plan.route == MergePlan.SpjCow) withSpjConfs(Some(statsTouched.size))(write())
+        else write()
+      }
+      touchInflight(commitRel)
+      val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
+      val (writtenRows, writtenStats) =
+        writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
+          statsFirst = snap.sortOrder)
+      val m = obs.get
+      val (touched, rowsIn, upserts, customCounters) =
+        if (plan.route == MergePlan.OneJob)
+          (written.keys.toSeq.sorted, m("_nrows").asInstanceOf[Long], writtenRows.values.sum,
+            counterNames.map(n => n -> m(s"_c_$n").asInstanceOf[Long]).toMap)
+        else
+          (statsTouched, batchRows.values.sum, m("_upserts").asInstanceOf[Long],
+            counterNames.zipWithIndex.map { case (n, i) =>
+              n -> stats.map(_.getLong(2 + i)).sum
+            }.toMap)
+      if ((rowsIn > 0 || oldTouchedRows > 0) && written.isEmpty)
+        throw new IllegalStateException(
+          s"staging dir $commitRel produced no files for a non-empty merge — " +
+            "was it swept by a concurrent expire()?")
       // --- commit, with OCC rebase over maintenance-only interleavings:
       // the merge's data files were computed against `snap`, but an
       // interleaved COMPACTION changes no logical state, so the same files
@@ -1342,12 +1196,10 @@ final class LakeTable private (
           tags = s.tags,
           droppedCols = s.droppedCols))
       }
-      phase("counts")
       val committed = occCommit(snap)(cur =>
           maintenanceOnlyBetween(snap, cur) ||
             disjointWritersBetween(snap, cur, touched))(buildCommit)
         .getOrElse(throw new IllegalStateException("merge commit built nothing"))
-      phase("commit")
       // read-amplification bound: a hot bucket past maxLayers compacts NOW,
       // not at the stream's next periodic trigger (its read cost is already
       // maxLayers× a clean scan; waiting compounds it)
@@ -1355,12 +1207,11 @@ final class LakeTable private (
         val over = committed.bucketLayers.collect {
           case (b, n) if n > snap.maxLayers => b
         }.toSeq.sorted
-        if (over.nonEmpty) { compactBuckets(over); phase("auto-compact") }
+        if (over.nonEmpty) compactBuckets(over)
       }
       upserts
     } finally {
       if (inflightMarker != null) Files.deleteIfExists(inflightMarker)
-      if (cacheBatch) alignedBatch.unpersist(false)
     }
   }
 
@@ -1408,7 +1259,7 @@ final class LakeTable private (
     // bucket is one task that reads its layers, resolves, and writes ONE
     // defragmented file. No exchange at any scale.
     withInflightMarker(commitRel) {
-    withSmallPlanConfs(knownBucketRowsSmall(snap, dirty)) {
+    withSmallPlanConfs(MergePlan.storedSmall(snap, dirty)) {
     withSpjConfs(Some(dirty.size)) {
       bucketWriter(Dedup.latestByKey(bucketScanDF(snap, dirty),
           snap.keyCols :+ BucketCol, snap.orderCols), snap)
@@ -1489,7 +1340,7 @@ final class LakeTable private (
     val curSchema = StructType.fromDDL(snap.schemaDdl)
     val commitRel = s"data/maint-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
     withInflightMarker(commitRel) {
-    withSmallPlanConfs(knownBucketRowsSmall(snap, candidates)) {
+    withSmallPlanConfs(MergePlan.storedSmall(snap, candidates)) {
     withSpjConfs(Some(candidates.size)) {
       bucketWriter(visible(snap, Dedup.latestByKey(bucketScanDF(snap, candidates),
           snap.keyCols :+ BucketCol, snap.orderCols)), snap)
@@ -1601,7 +1452,7 @@ final class LakeTable private (
     if (todo.isEmpty) return 0
     val commitRel = s"data/maint-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
     withInflightMarker(commitRel) {
-    withSmallPlanConfs(knownBucketRowsSmall(snap, todo)) {
+    withSmallPlanConfs(MergePlan.storedSmall(snap, todo)) {
     withSpjConfs(Some(todo.size)) {
       // resolve rides the KGP scan (one partition per bucket), the sort is
       // task-local (sortWithinPartitions never exchanges), and the write's
@@ -1741,7 +1592,7 @@ final class LakeTable private (
     *     paths agree wherever the classic path is deterministic)
     *
     * Write parallelism = touched buckets (one task each); eligibility is
-    * gated in [[spjEligible]]. */
+    * gated in [[MergePlan.decide]]. */
   private[graft] def buildMergedSpj(snap: TableSnapshot, evolved: StructType,
       touched: Seq[Int], alignedBatch: DataFrame, salted: Boolean): DataFrame = {
     val cols = evolved.fieldNames.toSeq
@@ -1813,8 +1664,8 @@ final class LakeTable private (
       val snap = snapshot()
       if (snap.numBuckets == newNumBuckets) return
       val curSchema = StructType.fromDDL(snap.schemaDdl)
-      val cores = spark.sparkContext.defaultParallelism
-      val writeFactor = math.max(1, math.ceil(2.0 * cores / newNumBuckets).toInt)
+      val writeFactor = MergePlan.fanOut(spark.sparkContext.defaultParallelism, newNumBuckets,
+        small = false)
       val reSnap = snap.copy(numBuckets = newNumBuckets)
       val emptyBatch = align(
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema),
@@ -2974,17 +2825,6 @@ object LakeTable {
   private[tables] val spjConfState =
     new java.util.IdentityHashMap[SparkSession, Array[Any]]()
 
-  /** Rows bound under which an engine operation (merge write, maintenance
-    * rewrite, MV refresh window) counts as SMALL: it keeps one write task
-    * per bucket and runs with adaptive query execution scoped OFF — AQE's
-    * per-exchange stage jobs and replanning cost more than they can recover
-    * on a fixed-shape plan over this little data, while big operations keep
-    * AQE (skew-join splitting and partition coalescing are exactly the
-    * 100-TB tools). Parameterised (env), sized in DATA terms — never in
-    * core counts — so production-scale operations are untouched. */
-  private[tables] def smallOpRows: Long =
-    sys.env.getOrElse("GRAFT_MERGE_SMALL_ROWS", "1000000").toLong
-
   /** Generic scoped session-conf window (same interleaving hazard and the
     * same refcounted-baseline cure as [[LakeTable.withSpjConfs]], keyed per
     * (session, conf key)): every exit restores the BASELINE captured when no
@@ -3033,16 +2873,6 @@ object LakeTable {
     * live write→commit window is anywhere near this long; a crashed one
     * must not pin garbage forever). */
   final val InflightMarkerTtlMs: Long = 60L * 60 * 1000
-
-  /** Auto-salt floor: below this many batch rows the hot-key straggler is
-    * smaller than the extra exchange the salt pass costs, whatever the
-    * skew (SKEW.json's crossover was measured at millions of events). */
-  final val AutoSaltMinRows = 65536L
-
-  /** Auto-salt trigger: hottest-bucket excess share of the batch. 0.6 sits
-    * between the measured borderline (50%-on-1-key: salted 0.9×) and the
-    * measured win (90%-on-1-key: salted 1.93×) — SKEW.json. */
-  final val AutoSaltTopShare = 0.6
 
   /** Merge-on-read layer bound before a bucket auto-compacts: caps read
     * amplification of a hot bucket at maxLayers× a clean scan. 32 keeps the

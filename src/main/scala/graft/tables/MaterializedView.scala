@@ -130,10 +130,9 @@ final class MaterializedView private (
     // execution scoped off: the refresh is a dozen fixed-shape tiny plans
     // (changelog join, delta agg, broadcast probes, state merge) and AQE's
     // per-exchange stage jobs + replanning dominate their wall. Big bases
-    // keep AQE — its skew/coalescing wins are the 100-TB tools. Same gate
-    // and rationale as LakeTable's small-merge window.
-    val small = LakeTable.readSnapshot(Paths.get(base.root), to).rowCount <=
-      LakeTable.smallOpRows
+    // keep AQE — its skew/coalescing wins are the 100-TB tools. Same bound
+    // and rationale as the merge's small-op mode (MergePlan.SmallOpRows).
+    val small = MergePlan.small(LakeTable.readSnapshot(Paths.get(base.root), to).rowCount)
     def run(): Unit = if (fromRetained) incrementalRefresh(from, to) else fullRebuild(to)
     if (small)
       LakeTable.withScopedConf(spark, "spark.sql.adaptive.enabled", "false")(run())

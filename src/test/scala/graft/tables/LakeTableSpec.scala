@@ -93,10 +93,6 @@ class LakeTableSpec extends SparkTestBase {
   test("property: storage-partitioned COW merges equal classic COW merges " +
       "across random streams, MOR interleavings, and schema evolution") {
     import org.apache.spark.sql.functions.{col, concat, lit}
-    def withSpjMode[A](mode: String)(f: => A): A = {
-      sys.props("graft.cow.spj") = mode
-      try f finally sys.props.remove("graft.cow.spj")
-    }
     val rnd = new scala.util.Random(20260818L)
     // include a NULL key: the classic path LWW-groups null keys, so the SPJ
     // full-outer join must match them null-safely (<=>) or it duplicates
@@ -104,6 +100,8 @@ class LakeTableSpec extends SparkTestBase {
     (0 until 3).foreach { round =>
       val classic = newTable()
       val spj = newTable()
+      classic.planPin = MergePlan.Pin(spj = Some(false))
+      spj.planPin = MergePlan.Pin(spj = Some(true))
       var wv = 0L
       (0 until 6).foreach { b =>
         val rows = (0 until (1 + rnd.nextInt(12))).map { _ =>
@@ -114,11 +112,16 @@ class LakeTableSpec extends SparkTestBase {
         val df0 = rows.toDF("k", "wv", "v")
         val df = if (evolve) df0.withColumn("extra", concat(lit("x"), col("wv"))) else df0
         val mor = rnd.nextInt(4) == 0 // occasional MOR layer → SPJ must resolve dirty buckets
-        withSpjMode("0") { classic.merge(df, s"r$round-b$b", mor = mor) }
-        withSpjMode("1") { spj.merge(df, s"r$round-b$b", mor = mor) }
+        classic.merge(df, s"r$round-b$b", mor = mor)
+        spj.merge(df, s"r$round-b$b", mor = mor)
+        // the route that ran: the first batch lands in an empty table
+        def ran(t: LakeTable) = t.lastMergePlan.map(_.route)
+        val oneJob = mor || b == 0
+        assert(ran(classic) === Some(if (oneJob) MergePlan.OneJob else MergePlan.ClassicCow))
+        assert(ran(spj) === Some(if (oneJob) MergePlan.OneJob else MergePlan.SpjCow))
       }
-      withSpjMode("0") { classic.compact() }
-      withSpjMode("1") { spj.compact() }
+      classic.compact()
+      spj.compact()
       def state(t: LakeTable) = t.read()
         .selectExpr("k", "wv", "v", "cast(extra as string)")
         .collect().map(_.toSeq).toSet
@@ -314,9 +317,12 @@ class LakeTableSpec extends SparkTestBase {
     // storage-partitioned COW twin: tombstones are payload to the SPJ
     // winner logic, so the forced-SPJ fold must land identically
     val spjT = newDelTable()
-    sys.props("graft.cow.spj") = "1"
-    try batches.foreach { case (id, rows) => spjT.merge(df(rows), id) }
-    finally sys.props.remove("graft.cow.spj")
+    spjT.planPin = MergePlan.Pin(spj = Some(true))
+    batches.zipWithIndex.foreach { case ((id, rows), i) =>
+      spjT.merge(df(rows), id)
+      assert(spjT.lastMergePlan.map(_.route) ===
+        Some(if (i == 0) MergePlan.OneJob else MergePlan.SpjCow), id)
+    }
     assert(state(spjT) === state(cow))
     // purge reclaims the tombstones without changing the visible state
     val vBeforePurge = cow.currentVersion()
@@ -359,16 +365,18 @@ class LakeTableSpec extends SparkTestBase {
         (col("id") + 200000).as("wv"), concat(lit("w"), col("id")).as("v")))
     val auto = newTable()
     val expected = Seq(false, true, false, false)
+    // the seed lands in an empty table; the rest take a COW route
+    def ran(t: LakeTable) = t.lastMergePlan.map(p => (p.route != MergePlan.OneJob, p.salted))
     batches(spark).zip(expected).foreach { case ((id, df), wantSalted) =>
       auto.merge(df, id)
-      assert(auto.lastMergeSalted === wantSalted, s"batch $id")
+      assert(ran(auto) === Some((id != "seed", wantSalted)), s"batch $id")
     }
     val off = newTable()
-    sys.props("graft.merge.autosalt") = "0"
-    try batches(spark).foreach { case (id, df) =>
+    off.planPin = MergePlan.Pin(autoSalt = false)
+    batches(spark).foreach { case (id, df) =>
       off.merge(df, id)
-      assert(!off.lastMergeSalted, s"batch $id")
-    } finally sys.props.remove("graft.merge.autosalt")
+      assert(ran(off) === Some((id != "seed", false)), s"batch $id")
+    }
     def state(t: LakeTable) =
       t.read().as[(String, Long, String)].collect().sortBy(r => (r._1, r._2)).toSeq
     assert(state(auto) === state(off))
