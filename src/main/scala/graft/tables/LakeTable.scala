@@ -185,6 +185,8 @@ final class LakeTable private (
     * the write job itself (observed metric) instead of a count_distinct
     * stats pass */
   val SrcFlagCol = "_ghasbatch"
+  /** clustering's scratch sort key: the materialized z-value */
+  private val ZValCol = "__graft_zval"
 
   /** The plan the last merge from this handle ran (specs, benches and
     * observability). Volatile: the supported stream+maintenance pattern
@@ -963,124 +965,105 @@ final class LakeTable private (
       s"batch missing key columns ${snap.keyCols}")
 
     val alignedBatch = align(batch, evolved)
-    var inflightMarker: JPath = null
-    try {
-      val counterNames = counterCols.keys.toSeq.sorted
-      val counterAggs = counterNames.map(n => counterCols(n).cast("long").as(s"_c_$n"))
-      val cores = spark.sparkContext.defaultParallelism
-      val newVersion = snap.version + 1
-      // UNIQUE staging dir: two ingest writers racing is a hard error at
-      // commit time, but the error must stay a METADATA conflict — sharing
-      // a version-named dir would let the loser's overwrite-write clobber
-      // the winner's already-committed files before the guard fires. The
-      // inflight marker shields the dir from a concurrent expire() until
-      // the commit lands (see withInflightMarker/expire).
-      val commitRel =
-        s"data/commit-$newVersion-${java.lang.Long.toHexString(System.nanoTime())}"
-      inflightMarker = Paths.get(root, "meta", s"inflight-${commitRel.stripPrefix("data/")}")
-      Files.createDirectories(Paths.get(root, "meta"))
-      Files.write(inflightMarker, Array.emptyByteArray)
+    val counterNames = counterCols.keys.toSeq.sorted
+    val counterAggs = counterNames.map(n => counterCols(n).cast("long").as(s"_c_$n"))
+    val cores = spark.sparkContext.defaultParallelism
 
-      // COW stats pass: one CHEAP job (touched buckets for existing-side
-      // pruning, row count, caller counters — plain hash aggregation, no
-      // count_distinct/Expand). The upsert count (distinct batch keys) is
-      // observed ON the write job instead: the merge aggregation carries
-      // max(_ghasbatch) per key group, and its sum over the merged output
-      // is exactly the distinct-batch-key count.
-      val emptyTable = snap.rowCount == 0L && snap.bucketFiles.values.forall(_.isEmpty)
-      val size = batchSize(alignedBatch, rowsHint)
-      val stats =
-        if (!MergePlan.needsStats(mor, emptyTable)) Array.empty[org.apache.spark.sql.Row]
-        else withSmallPlanConfs(MergePlan.batchSmall(size)) {
-          alignedBatch
-            .groupBy(bucketExpr(snap.keyCols, snap.numBuckets).as(BucketCol))
-            .agg(count(lit(1)).as("_nrows"), counterAggs: _*)
-            .collect()
-        }
-      val batchRows = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val statsTouched = batchRows.keys.toSeq.sorted
-      // old touched rows from the incrementally-maintained bucketRows (no
-      // re-read); the plan and the COW rowCount delta below both need them
-      val oldTouchedRows = statsTouched.map(b => snap.bucketRows.getOrElse(b,
-        countRows(snap.bucketFiles.getOrElse(b, Nil).map(rel => LakeTable.dataPath(root, rel)),
-          curSchema))).sum
-      val plan = MergePlan.decide(mor, emptyTable, snap.numBuckets, cores, batchRows,
-        oldTouchedRows, salted, size, planPin)
-      lastMergePlan = Some(plan)
-
-      // One-job: rows_in + caller counters ride the write plan as observed
-      // metrics (CollectMetrics: zero extra scans); touched buckets and the
-      // upsert count (= post-dedup rows = distinct batch keys) come from
-      // the written files' footers. COW: the write observes the upserts.
-      val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId-$newVersion")
-      val upsertAgg = coalesce(sum(col(SrcFlagCol)), lit(0L)).cast("long").as("_upserts")
-      // built inside the write's conf windows: the SPJ plan must be planned
-      // under the SPJ confs
-      def output(): DataFrame = plan.route match {
-        case MergePlan.OneJob =>
-          val observed = alignedBatch.observe(obs, count(lit(1)).as("_nrows"), counterAggs: _*)
-            .withColumn(BucketCol, bucketExpr(snap.keyCols, snap.numBuckets))
-            .withColumn(SubSplitCol,
-              pmod(xxhash64(snap.keyCols.map(col): _*), lit(plan.writeFactor)).cast("int"))
-          val base =
-            if (plan.salted) Dedup.saltedPreAggregate(observed,
-              snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols,
-              numSalts = math.max(16, cores))
-            else observed
-          // dedup rides the one (bucket, subsplit) exchange exactly like the
-          // classic plan; partition count mirrors it too (numBuckets ×
-          // writeFactor ≥ waveFactor·cores — fewer, larger sort partitions
-          // measurably hurt the narrow-parallelism levels)
-          Dedup.latestByKey(
-              base.repartition(math.max(1, snap.numBuckets * plan.writeFactor),
-                col(BucketCol), col(SubSplitCol)),
-              snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols)
-            .drop(SubSplitCol)
-        case MergePlan.SpjCow =>
-          // existing side unshuffled (see buildMergedSpj)
-          buildMergedSpj(snap, evolved, statsTouched, alignedBatch, plan.salted)
-            .observe(obs, upsertAgg)
-            .drop(SrcFlagCol)
-        case MergePlan.ClassicCow =>
-          // ONE-shuffle LWW merge: in-batch dedup and old∪new resolution are
-          // one aggregation riding the (bucket, subsplit) repartition — see
-          // buildMerged
-          val touchedFiles = statsTouched.flatMap(b => snap.bucketFiles.getOrElse(b, Nil))
-            .map(rel => LakeTable.dataPath(root, rel))
-          val existing =
-            if (touchedFiles.isEmpty)
-              align(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema), evolved)
-            else align(spark.read.schema(curSchema).parquet(touchedFiles: _*), evolved)
-          buildMerged(existing, alignedBatch, snap, statsTouched.size,
-              plan.writeFactor, plan.salted, withSrcFlag = true)
-            .observe(obs, upsertAgg)
-            .drop(SubSplitCol, SrcFlagCol)
+    // COW stats pass: one CHEAP job (touched buckets for existing-side
+    // pruning, row count, caller counters — plain hash aggregation, no
+    // count_distinct/Expand). The upsert count (distinct batch keys) is
+    // observed ON the write job instead: the merge aggregation carries
+    // max(_ghasbatch) per key group, and its sum over the merged output
+    // is exactly the distinct-batch-key count.
+    val emptyTable = snap.rowCount == 0L && snap.bucketFiles.values.forall(_.isEmpty)
+    val size = batchSize(alignedBatch, rowsHint)
+    val stats =
+      if (!MergePlan.needsStats(mor, emptyTable)) Array.empty[org.apache.spark.sql.Row]
+      else withSmallPlanConfs(MergePlan.batchSmall(size)) {
+        alignedBatch
+          .groupBy(bucketExpr(snap.keyCols, snap.numBuckets).as(BucketCol))
+          .agg(count(lit(1)).as("_nrows"), counterAggs: _*)
+          .collect()
       }
-      def write(): Unit = bucketWriter(output(), snap)
-        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
+    val batchRows = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val statsTouched = batchRows.keys.toSeq.sorted
+    // old touched rows from the incrementally-maintained bucketRows (no
+    // re-read); the plan and the COW rowCount delta below both need them
+    val oldTouchedRows = statsTouched.map(b => snap.bucketRows.getOrElse(b,
+      countRows(snap.bucketFiles.getOrElse(b, Nil).map(rel => LakeTable.dataPath(root, rel)),
+        curSchema))).sum
+    val plan = MergePlan.decide(mor, emptyTable, snap.numBuckets, cores, batchRows,
+      oldTouchedRows, salted, size, planPin)
+    lastMergePlan = Some(plan)
+
+    // One-job: rows_in + caller counters ride the write plan as observed
+    // metrics (CollectMetrics: zero extra scans); touched buckets and the
+    // upsert count (= post-dedup rows = distinct batch keys) come from
+    // the written files' footers. COW: the write observes the upserts.
+    val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId-${snap.version + 1}")
+    val upsertAgg = coalesce(sum(col(SrcFlagCol)), lit(0L)).cast("long").as("_upserts")
+    // built inside the write's conf windows: the SPJ plan must be planned
+    // under the SPJ confs
+    def output(): DataFrame = plan.route match {
+      case MergePlan.OneJob =>
+        val observed = alignedBatch.observe(obs, count(lit(1)).as("_nrows"), counterAggs: _*)
+          .withColumn(BucketCol, bucketExpr(snap.keyCols, snap.numBuckets))
+          .withColumn(SubSplitCol,
+            pmod(xxhash64(snap.keyCols.map(col): _*), lit(plan.writeFactor)).cast("int"))
+        val base =
+          if (plan.salted) Dedup.saltedPreAggregate(observed,
+            snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols,
+            numSalts = math.max(16, cores))
+          else observed
+        // dedup rides the one (bucket, subsplit) exchange exactly like the
+        // classic plan; partition count mirrors it too (numBuckets ×
+        // writeFactor ≥ waveFactor·cores — fewer, larger sort partitions
+        // measurably hurt the narrow-parallelism levels)
+        Dedup.latestByKey(
+            base.repartition(math.max(1, snap.numBuckets * plan.writeFactor),
+              col(BucketCol), col(SubSplitCol)),
+            snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols)
+          .drop(SubSplitCol)
+      case MergePlan.SpjCow =>
+        // existing side unshuffled (see buildMergedSpj)
+        buildMergedSpj(snap, evolved, statsTouched, alignedBatch, plan.salted)
+          .observe(obs, upsertAgg)
+          .drop(SrcFlagCol)
+      case MergePlan.ClassicCow =>
+        // ONE-shuffle LWW merge: in-batch dedup and old∪new resolution are
+        // one aggregation riding the (bucket, subsplit) repartition — see
+        // buildMerged
+        val touchedFiles = statsTouched.flatMap(b => snap.bucketFiles.getOrElse(b, Nil))
+          .map(rel => LakeTable.dataPath(root, rel))
+        val existing =
+          if (touchedFiles.isEmpty)
+            align(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema), evolved)
+          else align(spark.read.schema(curSchema).parquet(touchedFiles: _*), evolved)
+        buildMerged(existing, alignedBatch, snap, statsTouched.size,
+            plan.writeFactor, plan.salted, withSrcFlag = true)
+          .observe(obs, upsertAgg)
+          .drop(SubSplitCol, SrcFlagCol)
+    }
+    var upserts = 0L
+    val committed = stagedCommit(snap, "commit", snap.sortOrder, snap.targetFileRows,
+        statsFirst = snap.sortOrder)(sink =>
       withSmallPlanConfs(plan.small) {
-        if (plan.route == MergePlan.SpjCow) withSpjConfs(Some(statsTouched.size))(write())
-        else write()
-      }
-      touchInflight(commitRel)
-      val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-      val (writtenRows, writtenStats) =
-        writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-          statsFirst = snap.sortOrder)
+        if (plan.route == MergePlan.SpjCow) withSpjConfs(Some(statsTouched.size))(sink(output()))
+        else sink(output())
+      }) { staged =>
       val m = obs.get
-      val (touched, rowsIn, upserts, customCounters) =
-        if (plan.route == MergePlan.OneJob)
-          (written.keys.toSeq.sorted, m("_nrows").asInstanceOf[Long], writtenRows.values.sum,
+      val (touched, rowsIn, customCounters) =
+        if (plan.route == MergePlan.OneJob) {
+          upserts = staged.rows.values.sum
+          (staged.files.keys.toSeq.sorted, m("_nrows").asInstanceOf[Long],
             counterNames.map(n => n -> m(s"_c_$n").asInstanceOf[Long]).toMap)
-        else
-          (statsTouched, batchRows.values.sum, m("_upserts").asInstanceOf[Long],
+        } else {
+          upserts = m("_upserts").asInstanceOf[Long]
+          (statsTouched, batchRows.values.sum,
             counterNames.zipWithIndex.map { case (n, i) =>
               n -> stats.map(_.getLong(2 + i)).sum
             }.toMap)
-      if ((rowsIn > 0 || oldTouchedRows > 0) && written.isEmpty)
-        throw new IllegalStateException(
-          s"staging dir $commitRel produced no files for a non-empty merge — " +
-            "was it swept by a concurrent expire()?")
+        }
       // --- commit, with OCC rebase over maintenance-only interleavings:
       // the merge's data files were computed against `snap`, but an
       // interleaved COMPACTION changes no logical state, so the same files
@@ -1106,34 +1089,32 @@ final class LakeTable private (
           if (mor) {
             // APPEND the new layer; a bucket becomes dirty (needs read-time
             // resolution) once it holds more than the fresh layer
-            val bf = s.bucketFiles ++ written.map { case (b, fs) =>
+            val bf = s.bucketFiles ++ staged.files.map { case (b, fs) =>
               b -> (s.bucketFiles.getOrElse(b, Nil) ++ fs)
             }
-            val br = s.bucketRows ++ writtenRows.map { case (b, n) =>
+            val br = s.bucketRows ++ staged.rows.map { case (b, n) =>
               b -> (s.bucketRows.getOrElse(b, 0L) + n)
             }
             val dirty = (s.morBuckets ++
               touched.filter(b => s.bucketFiles.getOrElse(b, Nil).nonEmpty)).distinct.sorted
-            val layers = s.bucketLayers ++ written.keys.map { b =>
+            val layers = s.bucketLayers ++ staged.files.keys.map { b =>
               val before =
                 s.bucketLayers.getOrElse(b, if (s.bucketFiles.getOrElse(b, Nil).isEmpty) 0 else 1)
               b -> (before + 1)
             }
-            (bf, br, s.rowCount + writtenRows.values.sum, dirty, layers)
+            (bf, br, s.rowCount + staged.rows.values.sum, dirty, layers)
           } else {
             // copy-on-write REPLACES touched buckets (and resolves any of
-            // their MOR layers in the same pass). New files need ONE footer
-            // pass, parallelized — the serial driver-side footer loop was a
-            // measured scaling bottleneck. The removed-row count comes from
-            // the stored bucket counts of the snapshot being committed
-            // AGAINST (equal to the stats fork's oldTouchedRows when s is
-            // the original snap).
+            // their MOR layers in the same pass). The removed-row count
+            // comes from the stored bucket counts of the snapshot being
+            // committed AGAINST (equal to the stats fork's oldTouchedRows
+            // when s is the original snap).
             val removed = touched.map(b => s.bucketRows.getOrElse(b, 0L)).sum
-            (s.bucketFiles.filter { case (b, _) => !touched.contains(b) } ++ written,
-              s.bucketRows.filter { case (b, _) => !touched.contains(b) } ++ writtenRows,
-              s.rowCount - removed + writtenRows.values.sum,
+            (s.bucketFiles -- touched ++ staged.files,
+              s.bucketRows -- touched ++ staged.rows,
+              s.rowCount - removed + staged.rows.values.sum,
               s.morBuckets.filterNot(touched.contains),
-              s.bucketLayers.filter { case (b, _) => !touched.contains(b) })
+              s.bucketLayers -- touched)
           }
 
         // --- bounded bookkeeping: retention + rollup ---
@@ -1181,54 +1162,48 @@ final class LakeTable private (
           bucketLayers = newBucketLayers,
           maxLayers = s.maxLayers,
           tombstoneCol = s.tombstoneCol,
-          // a rebase over a concurrent DROP COLUMN keeps the batch files'
-          // bytes but must not re-publish the dropped columns' bounds —
-          // dropColumns scrubbed them, and stats for a schema-absent column
-          // would otherwise persist in every snapshot until a rewrite
-          fileStats = s.fileStats ++ (
-            if (s.droppedCols.isEmpty) writtenStats
-            else writtenStats.map { case (rel, st) =>
-              rel -> st.copy(cols = st.cols.filterNot(e =>
-                s.droppedCols.contains(e._1.toLowerCase)))
-            }),
+          fileStats = s.fileStats ++ staged.stats,
           sortOrder = s.sortOrder,
           targetFileRows = s.targetFileRows,
           tags = s.tags,
           droppedCols = s.droppedCols))
       }
-      val committed = occCommit(snap)(cur =>
-          maintenanceOnlyBetween(snap, cur) ||
-            disjointWritersBetween(snap, cur, touched))(buildCommit)
-        .getOrElse(throw new IllegalStateException("merge commit built nothing"))
-      // read-amplification bound: a hot bucket past maxLayers compacts NOW,
-      // not at the stream's next periodic trigger (its read cost is already
-      // maxLayers× a clean scan; waiting compounds it)
-      if (mor) {
-        val over = committed.bucketLayers.collect {
-          case (b, n) if n > snap.maxLayers => b
-        }.toSeq.sorted
-        if (over.nonEmpty) compactBuckets(over)
-      }
-      upserts
-    } finally {
-      if (inflightMarker != null) Files.deleteIfExists(inflightMarker)
+      Publish(required = rowsIn > 0 || oldTouchedRows > 0,
+        rebase = cur => maintenanceOnlyBetween(snap, cur) ||
+          disjointWritersBetween(snap, cur, touched),
+        build = buildCommit)
+    }.getOrElse(throw new IllegalStateException("merge commit built nothing"))
+    // read-amplification bound: a hot bucket past maxLayers compacts NOW,
+    // not at the stream's next periodic trigger (its read cost is already
+    // maxLayers× a clean scan; waiting compounds it)
+    if (mor) {
+      val over = committed.bucketLayers.collect {
+        case (b, n) if n > snap.maxLayers => b
+      }.toSeq.sorted
+      if (over.nonEmpty) compactBuckets(over)
     }
+    upserts
   }
 
-  /** The bucket parquet writer every commit path goes through: honors the
-    * table's persisted WRITE-PATH SORT ORDER (a task-local
-    * `sortWithinPartitions` — never an exchange; the write's required
-    * ordering on the partition column is a satisfied prefix, so Catalyst
-    * adds no second sort) and the per-file row cap that turns the sort
-    * into range-sliced files. Both default off; with neither set this is
-    * exactly `df.write`. */
-  private def bucketWriter(df: DataFrame, s: TableSnapshot)
+  /** The bucket parquet writer every commit path goes through: a
+    * task-local `sortWithinPartitions(bucket, sortBy…)` (never an
+    * exchange; the write's required ordering on the partition column is a
+    * satisfied prefix, so Catalyst adds no second sort) and a per-file row
+    * cap (`cap`, 0 = none) that turns the sort into range-sliced files.
+    * Merge, compaction, purge and rebucket pass the table's persisted
+    * WRITE-PATH SORT ORDER and cap (both default off — then this is exactly
+    * `df.write`); clustering passes its own. The z-order scratch column is
+    * projected away after the sort that consumes it. */
+  private def bucketWriter(df: DataFrame, sortBy: Seq[String], cap: Long)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
     val sorted =
-      if (s.sortOrder.isEmpty) df
-      else df.sortWithinPartitions((BucketCol +: s.sortOrder).map(col): _*)
+      if (sortBy.isEmpty) df
+      else {
+        val s = df.sortWithinPartitions((BucketCol +: sortBy).map(col): _*)
+        if (sortBy.contains(ZValCol)) s.drop(ZValCol) else s
+      }
     val w = sorted.write
-    if (s.targetFileRows > 0L) w.option("maxRecordsPerFile", s.targetFileRows) else w
+    if (cap > 0L) w.option("maxRecordsPerFile", cap) else w
   }
 
   /** Rewrite every merge-on-read bucket into a single resolved layer (the
@@ -1248,67 +1223,14 @@ final class LakeTable private (
     val snap = snapshot()
     val dirty = buckets.filter(snap.morBuckets.contains).distinct.sorted
     if (dirty.isEmpty) return 0
-    val curSchema = StructType.fromDDL(snap.schemaDdl)
-    // a UNIQUE staging dir (never `commit-<v>`): a racing ingest merge may be
-    // writing data/commit-<v+1> at this very moment — maintenance must never
-    // share a data directory with it
-    val commitRel = s"data/maint-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
     // ZERO-SHUFFLE compaction: the layers of each bucket are already
     // co-located by construction, so the LWW resolution grouped on
     // (keys…, bucket) rides the scan's KeyGroupedPartitioning — each dirty
     // bucket is one task that reads its layers, resolves, and writes ONE
     // defragmented file. No exchange at any scale.
-    withInflightMarker(commitRel) {
-    withSmallPlanConfs(MergePlan.storedSmall(snap, dirty)) {
-    withSpjConfs(Some(dirty.size)) {
-      bucketWriter(Dedup.latestByKey(bucketScanDF(snap, dirty),
-          snap.keyCols :+ BucketCol, snap.orderCols), snap)
-        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-    }
-    }
-    touchInflight(commitRel)
-    val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-    val (writtenRows, writtenStats) =
-      writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-        statsFirst = snap.sortOrder)
-    if (written.isEmpty && dirty.exists(b => snap.bucketRows.getOrElse(b, 0L) > 0))
-      throw new IllegalStateException(
-        s"staging dir $commitRel produced no files for non-empty dirty buckets — " +
-          "was it swept by a concurrent expire()?")
-    // OCC: compaction is a logical no-op, so it rebases over ANY interleaved
-    // commit with the same layout — a bucket the interleaved writer touched
-    // (file list changed since we read it) is simply dropped from this
-    // compaction (its resolved output is stale; it stays dirty and the next
-    // pass picks it up). A rebucket interleaving (bucket count changed)
-    // invalidates everything and still fails loudly.
-    var valid: Seq[Int] = dirty
-    val committed = occCommit(snap)(cur => cur.numBuckets == snap.numBuckets) { s =>
-      valid = dirty.filter(b =>
-        s.bucketFiles.getOrElse(b, Nil) == snap.bucketFiles.getOrElse(b, Nil))
-      if (valid.isEmpty) None
-      else {
-        val w = written.filter { case (b, _) => valid.contains(b) }
-        val wr = writtenRows.filter { case (b, _) => valid.contains(b) }
-        val oldDirtyRows = valid.map(b => s.bucketRows.getOrElse(b, 0L)).sum
-        Some(s.copy(
-          version = s.version + 1,
-          bucketFiles = s.bucketFiles.filter { case (b, _) => !valid.contains(b) } ++ w,
-          bucketRows = s.bucketRows.filter { case (b, _) => !valid.contains(b) } ++ wr,
-          totals = s.totals
-            .updated("compactions", s.totals.getOrElse("compactions", 0L) + 1L)
-            .updated("compacted_buckets",
-              s.totals.getOrElse("compacted_buckets", 0L) + valid.size.toLong),
-          rowCount = s.rowCount - oldDirtyRows + wr.values.sum,
-          morBuckets = s.morBuckets.filterNot(valid.contains),
-          bucketLayers = s.bucketLayers.filter { case (b, _) => !valid.contains(b) },
-          fileStats = s.fileStats ++
-            writtenStats.filter { case (rel, _) => w.values.exists(_.contains(rel)) }))
-      }
-    }
-    // sweep staging output that lost the race (stale buckets, or everything)
-    sweepStaging(commitRel, written,
-      kept = if (committed.isDefined) valid.toSet else Set.empty)
-    if (committed.isDefined) valid.size else 0
+    rewriteBuckets(snap, dirty, snap.sortOrder, snap.targetFileRows, snap.sortOrder,
+        mayEmpty = false)((n, _) => Seq("compactions" -> 1L, "compacted_buckets" -> n.toLong)) {
+      Dedup.latestByKey(bucketScanDF(snap, dirty), snap.keyCols :+ BucketCol, snap.orderCols)
     }
   }
 
@@ -1337,50 +1259,11 @@ final class LakeTable private (
         .select(col(BucketCol)).distinct().collect().map(_.getInt(0)).toSeq.sorted
     }
     if (candidates.isEmpty) return 0
-    val curSchema = StructType.fromDDL(snap.schemaDdl)
-    val commitRel = s"data/maint-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
-    withInflightMarker(commitRel) {
-    withSmallPlanConfs(MergePlan.storedSmall(snap, candidates)) {
-    withSpjConfs(Some(candidates.size)) {
-      bucketWriter(visible(snap, Dedup.latestByKey(bucketScanDF(snap, candidates),
-          snap.keyCols :+ BucketCol, snap.orderCols)), snap)
-        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-    }
-    }
-    touchInflight(commitRel)
-    // a bucket whose every key was tombstoned writes NO file — its list
-    // becomes empty, not carried forward (so no empty-staging guard here)
-    val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-    val (writtenRows, writtenStats) =
-      writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-        statsFirst = snap.sortOrder)
-    var valid: Seq[Int] = candidates
-    val committed = occCommit(snap)(cur => cur.numBuckets == snap.numBuckets) { s =>
-      valid = candidates.filter(b =>
-        s.bucketFiles.getOrElse(b, Nil) == snap.bucketFiles.getOrElse(b, Nil))
-      if (valid.isEmpty) None
-      else {
-        val w = valid.map(b => b -> written.getOrElse(b, Nil)).toMap
-        val wr = valid.map(b => b -> writtenRows.getOrElse(b, 0L)).toMap
-        val oldRows = valid.map(b => s.bucketRows.getOrElse(b, 0L)).sum
-        Some(s.copy(
-          version = s.version + 1,
-          bucketFiles = s.bucketFiles.filter { case (b, _) => !valid.contains(b) } ++ w,
-          bucketRows = s.bucketRows.filter { case (b, _) => !valid.contains(b) } ++ wr,
-          totals = s.totals
-            .updated("tombstone_purges", s.totals.getOrElse("tombstone_purges", 0L) + 1L)
-            .updated("purged_rows",
-              s.totals.getOrElse("purged_rows", 0L) + (oldRows - wr.values.sum)),
-          rowCount = s.rowCount - oldRows + wr.values.sum,
-          morBuckets = s.morBuckets.filterNot(valid.contains),
-          bucketLayers = s.bucketLayers.filter { case (b, _) => !valid.contains(b) },
-          fileStats = s.fileStats ++
-            writtenStats.filter { case (rel, _) => w.values.exists(_.contains(rel)) }))
-      }
-    }
-    sweepStaging(commitRel, written,
-      kept = if (committed.isDefined) valid.toSet else Set.empty)
-    if (committed.isDefined) valid.size else 0
+    // a bucket whose every key was tombstoned writes NO file
+    rewriteBuckets(snap, candidates, snap.sortOrder, snap.targetFileRows, snap.sortOrder,
+        mayEmpty = true)((_, dropped) => Seq("tombstone_purges" -> 1L, "purged_rows" -> dropped)) {
+      visible(snap, Dedup.latestByKey(bucketScanDF(snap, candidates),
+        snap.keyCols :+ BucketCol, snap.orderCols))
     }
   }
 
@@ -1450,84 +1333,87 @@ final class LakeTable private (
     val todo = buckets.filter(b => snap.bucketFiles.getOrElse(b, Nil).nonEmpty)
       .distinct.sorted
     if (todo.isEmpty) return 0
-    val commitRel = s"data/maint-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
-    withInflightMarker(commitRel) {
-    withSmallPlanConfs(MergePlan.storedSmall(snap, todo)) {
-    withSpjConfs(Some(todo.size)) {
-      // resolve rides the KGP scan (one partition per bucket), the sort is
-      // task-local (sortWithinPartitions never exchanges), and the write's
-      // required ordering (partition col first) is a satisfied prefix of
-      // (bucket, sortCols…) — Catalyst inserts no extra sort either
-      val resolved0 = Dedup.latestByKey(bucketScanDF(snap, todo),
+    require(!zorder || !curSchema.fieldNames.contains(ZValCol),
+      s"table schema reserves no room for the z-value scratch column '$ZValCol'")
+    // MATERIALIZE the z-value once per row and sort on the long: sorting on
+    // the raw expression would re-evaluate the ~100-node interleave inside
+    // the sort comparator on every comparison (measured 2.7× the rewrite
+    // wall); the writer projects it away after the sort
+    val sortBy = if (zorder) Seq(ZValCol) else sortCols
+    // explicit cap wins; otherwise the table's persisted write cap applies
+    val cap = if (maxRowsPerFile > 0L) maxRowsPerFile else snap.targetFileRows
+    // resolve rides the KGP scan (one partition per bucket), the sort is
+    // task-local (sortWithinPartitions never exchanges), and the write's
+    // required ordering (partition col first) is a satisfied prefix of
+    // (bucket, sortBy…) — Catalyst inserts no extra sort either
+    rewriteBuckets(snap, todo, sortBy, cap, statsFirst = sortCols, mayEmpty = false)(
+        (n, _) => Seq("clusterings" -> 1L, "clustered_buckets" -> n.toLong)) {
+      val resolved = Dedup.latestByKey(bucketScanDF(snap, todo),
         snap.keyCols :+ BucketCol, snap.orderCols)
-      val resolved =
-        if (!zorder)
-          resolved0.sortWithinPartitions((BucketCol +: sortCols).map(col): _*)
-        else {
-          // dimension bounds folded from the snapshot's per-file stats of
-          // the buckets being rewritten — driver-side constants, zero I/O
-          val files = todo.flatMap(b => snap.bucketFiles.getOrElse(b, Nil))
-          val dims = sortCols.map { c =>
-            val dt = curSchema.fields.find(_.name == c).get.dataType
-            val (lo, hi) = ZOrder.dimBounds(files, snap.fileStats, c, dt)
-            (col(c), dt, lo, hi)
-          }
-          // MATERIALIZE the z-value once per row and sort on the long:
-          // sorting on the raw expression would re-evaluate the ~100-node
-          // interleave inside the sort comparator on every comparison
-          // (measured 2.7× the rewrite wall); the drop above the sort
-          // projects it away before the write
-          val zc = "__graft_zval"
-          require(!curSchema.fieldNames.contains(zc),
-            s"table schema reserves no room for the z-value scratch column '$zc'")
-          resolved0.withColumn(zc, ZOrder.zvalue(dims))
-            .sortWithinPartitions(col(BucketCol), col(zc))
-            .drop(zc)
-        }
-      // explicit cap wins; otherwise the table's persisted write cap applies
-      val cap = if (maxRowsPerFile > 0L) maxRowsPerFile else snap.targetFileRows
-      val w = resolved.write
-      (if (cap > 0L) w.option("maxRecordsPerFile", cap) else w)
-        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-    }
-    }
-    touchInflight(commitRel)
-    val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-    val (writtenRows, writtenStats) =
-      writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-        statsFirst = sortCols)
-    if (written.isEmpty && todo.exists(b => snap.bucketRows.getOrElse(b, 0L) > 0))
-      throw new IllegalStateException(
-        s"staging dir $commitRel produced no files for non-empty buckets — " +
-          "was it swept by a concurrent expire()?")
-    var valid: Seq[Int] = todo
-    val committed = occCommit(snap)(cur => cur.numBuckets == snap.numBuckets) { s =>
-      valid = todo.filter(b =>
-        s.bucketFiles.getOrElse(b, Nil) == snap.bucketFiles.getOrElse(b, Nil))
-      if (valid.isEmpty) None
+      if (!zorder) resolved
       else {
-        val w = written.filter { case (b, _) => valid.contains(b) }
-        val wr = writtenRows.filter { case (b, _) => valid.contains(b) }
-        val oldRows = valid.map(b => s.bucketRows.getOrElse(b, 0L)).sum
-        Some(s.copy(
-          version = s.version + 1,
-          bucketFiles = s.bucketFiles.filter { case (b, _) => !valid.contains(b) } ++ w,
-          bucketRows = s.bucketRows.filter { case (b, _) => !valid.contains(b) } ++ wr,
-          totals = s.totals
-            .updated("clusterings", s.totals.getOrElse("clusterings", 0L) + 1L)
-            .updated("clustered_buckets",
-              s.totals.getOrElse("clustered_buckets", 0L) + valid.size.toLong),
-          rowCount = s.rowCount - oldRows + wr.values.sum,
-          morBuckets = s.morBuckets.filterNot(valid.contains),
-          bucketLayers = s.bucketLayers.filter { case (b, _) => !valid.contains(b) },
-          fileStats = s.fileStats ++
-            writtenStats.filter { case (rel, _) => w.values.exists(_.contains(rel)) }))
+        // dimension bounds folded from the snapshot's per-file stats of
+        // the buckets being rewritten — driver-side constants, zero I/O
+        val files = todo.flatMap(b => snap.bucketFiles.getOrElse(b, Nil))
+        resolved.withColumn(ZValCol, ZOrder.zvalue(sortCols.map { c =>
+          val dt = curSchema.fields.find(_.name == c).get.dataType
+          val (lo, hi) = ZOrder.dimBounds(files, snap.fileStats, c, dt)
+          (col(c), dt, lo, hi)
+        }))
       }
     }
-    sweepStaging(commitRel, written,
-      kept = if (committed.isDefined) valid.toSet else Set.empty)
-    if (committed.isDefined) valid.size else 0
+  }
+
+  /** The shared body of the three maintenance rewrites ([[compactBuckets]],
+    * [[purgeTombstones]], [[clusterBuckets]]): one [[stagedCommit]] of
+    * `rewrite` (the resolved rows of `todo`, built inside the small-op and
+    * storage-partitioned conf windows) that REPLACES each rewritten
+    * bucket's file list — with an empty list when it wrote nothing, which
+    * only a purge of an all-tombstone bucket (`mayEmpty`) or a zero-row
+    * bucket does. `tally(buckets rewritten, rows dropped)` gives the
+    * `totals` counters to bump.
+    *
+    * OCC: a rewrite changes no logical state the interleaved writer could
+    * have seen, so it rebases over ANY interleaved commit with the same
+    * layout — a bucket the interleaved writer touched (file list changed
+    * since `snap`) is simply dropped from this rewrite (its output is
+    * stale; the next pass picks it up). A rebucket interleaving (bucket
+    * count changed) invalidates everything and still fails loudly.
+    * @return buckets rewritten */
+  private def rewriteBuckets(snap: TableSnapshot, todo: Seq[Int], sortBy: Seq[String],
+      cap: Long, statsFirst: Seq[String], mayEmpty: Boolean)(
+      tally: (Int, Long) => Seq[(String, Long)])(rewrite: => DataFrame): Int = {
+    var valid: Seq[Int] = todo
+    val committed = stagedCommit(snap, "maint", sortBy, cap, statsFirst)(sink =>
+      withSmallPlanConfs(MergePlan.storedSmall(snap, todo)) {
+        withSpjConfs(Some(todo.size))(sink(rewrite))
+      }) { staged =>
+      Publish(required = !mayEmpty && todo.exists(b => snap.bucketRows.getOrElse(b, 0L) > 0),
+        rebase = _.numBuckets == snap.numBuckets,
+        build = { s =>
+          valid = todo.filter(b =>
+            s.bucketFiles.getOrElse(b, Nil) == snap.bucketFiles.getOrElse(b, Nil))
+          if (valid.isEmpty) None
+          else {
+            val w = valid.map(b => b -> staged.files.getOrElse(b, Nil)).toMap
+            val wr = valid.map(b => b -> staged.rows.getOrElse(b, 0L)).toMap
+            val oldRows = valid.map(b => s.bucketRows.getOrElse(b, 0L)).sum
+            val landed = w.values.flatten.toSet
+            Some(s.copy(
+              version = s.version + 1,
+              bucketFiles = s.bucketFiles -- valid ++ w,
+              bucketRows = s.bucketRows -- valid ++ wr,
+              totals = tally(valid.size, oldRows - wr.values.sum).foldLeft(s.totals) {
+                case (t, (k, n)) => t.updated(k, t.getOrElse(k, 0L) + n)
+              },
+              rowCount = s.rowCount - oldRows + wr.values.sum,
+              morBuckets = s.morBuckets.filterNot(valid.contains),
+              bucketLayers = s.bucketLayers -- valid,
+              fileStats = s.fileStats ++ staged.stats.filter { case (rel, _) => landed(rel) }))
+          }
+        })
     }
+    if (committed.isDefined) valid.size else 0
   }
 
   /** The ONE-shuffle LWW merge plan (exposed for plan tests): in-batch
@@ -1670,45 +1556,31 @@ final class LakeTable private (
       val emptyBatch = align(
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema),
         curSchema)
-      val newVersion = snap.version + 1
-      // unique staging dir — never share data/commit-<v> with a racing merge
-      val commitRel = s"data/maint-$newVersion-${java.lang.Long.toHexString(System.nanoTime())}"
-      val done = withInflightMarker(commitRel) {
-      bucketWriter(buildMerged(align(readSnapshotDF(snap), curSchema), emptyBatch, reSnap,
-          touchedCount = newNumBuckets, writeFactor = writeFactor, salted = false)
-        .drop(SubSplitCol), snap)
-        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$commitRel")
-      touchInflight(commitRel)
-      val written = listBucketFiles(Paths.get(root).resolve(commitRel), commitRel, BucketCol)
-      val (writtenRows, writtenStats) =
-        writtenMeta(written, curSchema, snap.keyCols, snap.orderCols,
-          statsFirst = snap.sortOrder)
-      if (written.isEmpty && snap.rowCount > 0)
-        throw new IllegalStateException(
-          s"staging dir $commitRel produced no files rebucketing a non-empty table — " +
-            "was it swept by a concurrent expire()?")
       try {
-        commit(reSnap.copy(
-          version = newVersion,
-          bucketFiles = written,
-          bucketRows = writtenRows,
-          totals = snap.totals.updated("rebuckets", snap.totals.getOrElse("rebuckets", 0L) + 1L),
-          rowCount = writtenRows.values.sum,
-          morBuckets = Nil,
-          bucketLayers = Map.empty,
-          fileStats = writtenStats,
-          // every file was rewritten through the current schema, so no file
-          // can still carry a dropped column's values — names are reusable
-          droppedCols = Nil))
-        true
+        stagedCommit(snap, "maint", snap.sortOrder, snap.targetFileRows,
+            statsFirst = snap.sortOrder)(sink =>
+          sink(buildMerged(align(readSnapshotDF(snap), curSchema), emptyBatch, reSnap,
+              touchedCount = newNumBuckets, writeFactor = writeFactor, salted = false)
+            .drop(SubSplitCol))) { staged =>
+          Publish(required = snap.rowCount > 0, rebase = _ => false,
+            build = _ => Some(reSnap.copy(
+              version = snap.version + 1,
+              bucketFiles = staged.files,
+              bucketRows = staged.rows,
+              totals = snap.totals.updated("rebuckets", snap.totals.getOrElse("rebuckets", 0L) + 1L),
+              rowCount = staged.rows.values.sum,
+              morBuckets = Nil,
+              bucketLayers = Map.empty,
+              fileStats = staged.stats,
+              // every file was rewritten through the current schema, so no
+              // file can still carry a dropped column's values — names are
+              // reusable
+              droppedCols = Nil)))
+        }
+        return
       } catch {
-        case e: java.util.ConcurrentModificationException =>
-          deleteRecursively(Paths.get(root).resolve(commitRel)) // stale rewrite
-          if (attempts >= 3) throw e
-          false
+        case _: java.util.ConcurrentModificationException if attempts < 3 => ()
       }
-      }
-      if (done) return
     }
   }
 
@@ -2566,9 +2438,81 @@ final class LakeTable private (
     out.toSeq
   }
 
+  /** THE staged bucket write: every commit that writes data files — merge,
+    * compaction, purge, clustering, rebucket — goes through this one step.
+    * In order:
+    *  1. stage: a UNIQUE staging dir `data/<kind>-<v>-<hex>` (`kind` is
+    *     `commit` for merges, `maint` for maintenance) — never a
+    *     version-named dir a racing writer could share and overwrite-clobber
+    *     — and its `inflight-` marker ([[withInflightMarker]]), which
+    *     shields the dir from a concurrent [[expire]] until step 6 ends;
+    *  2. write: `write(sink)` opens the caller's conf windows, builds its
+    *     output and hands it to `sink` — [[bucketWriter]] with `sortBy`
+    *     and `cap`, partitioned by bucket, into the staging dir;
+    *  3. footer: [[touchInflight]], then one parallel footer pass
+    *     ([[listBucketFiles]], [[writtenMeta]]) for per-bucket files and
+    *     rows and per-file bounds;
+    *  4. guard: `publish(staged)` says what to commit; when it `required`
+    *     output and the dir holds none, a concurrent expire swept it — fail
+    *     loudly rather than commit data loss;
+    *  5. commit: [[occCommit]] of `build`, rebasing when `rebase` accepts
+    *     the interleaved state; the staged files' bounds are scrubbed of
+    *     the committed snapshot's dropped columns (a DROP COLUMN that
+    *     landed while this write was in flight already scrubbed every
+    *     other file's);
+    *  6. sweep: [[sweepStaging]] deletes the staged files the committed
+    *     snapshot does not reference — all of them when the commit built
+    *     nothing or lost (ConcurrentModificationException, thrown before
+    *     anything is published; rethrown after the sweep).
+    * Any other failure leaves the staging dir to [[expire]]'s marker-TTL
+    * sweep.
+    * @return the committed snapshot; None when `build` had nothing left */
+  private def stagedCommit(snap: TableSnapshot, kind: String, sortBy: Seq[String],
+      cap: Long, statsFirst: Seq[String])(write: (DataFrame => Unit) => Unit)(
+      publish: Staged => Publish): Option[TableSnapshot] = {
+    val rel = s"data/$kind-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
+    withInflightMarker(rel) {
+      write(df => bucketWriter(df, sortBy, cap)
+        .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$rel"))
+      touchInflight(rel)
+      val files = listBucketFiles(Paths.get(root).resolve(rel), rel, BucketCol)
+      val (rows, stats) = writtenMeta(files, StructType.fromDDL(snap.schemaDdl),
+        snap.keyCols, snap.orderCols, statsFirst)
+      val staged = Staged(rel, files, rows, stats)
+      val p = publish(staged)
+      if (p.required && files.isEmpty)
+        throw new IllegalStateException(
+          s"staging dir $rel produced no files for non-empty input — " +
+            "was it swept by a concurrent expire()?")
+      def scrubbed(next: TableSnapshot): TableSnapshot =
+        if (next.droppedCols.isEmpty) next
+        else next.copy(fileStats = next.fileStats ++ stats.collect {
+          case (f, st) if next.fileStats.contains(f) =>
+            f -> st.copy(cols = st.cols.filterNot(e => next.droppedCols.contains(e._1.toLowerCase)))
+        })
+      val committed =
+        try occCommit(snap)(p.rebase)(s => p.build(s).map(scrubbed))
+        catch {
+          case e: java.util.ConcurrentModificationException =>
+            sweepStaging(staged, None)
+            throw e
+        }
+      sweepStaging(staged, committed)
+      committed
+    }
+  }
+
   /** Run `f` with an `inflight-<dir>` marker protecting `commitRel`'s data
     * directory from a concurrent [[expire]] between first write and commit
     * (the dir is unreferenced by any snapshot during that window). */
+  private def withInflightMarker[A](commitRel: String)(f: => A): A = {
+    val meta = Paths.get(root, "meta")
+    Files.createDirectories(meta)
+    val marker = meta.resolve(s"inflight-${commitRel.stripPrefix("data/")}")
+    Files.write(marker, Array.emptyByteArray)
+    try f finally Files.deleteIfExists(marker)
+  }
+
   /** Restart `commitRel`'s inflight-marker staleness clock — called the
     * moment the (arbitrarily long) parquet write completes, so the marker
     * TTL only ever has to cover the SHORT footer-list→commit window. A
@@ -2581,24 +2525,17 @@ final class LakeTable private (
     catch { case _: java.io.IOException => () }
   }
 
-  /** Post-OCC staging sweep shared by compaction and purge: delete staged
-    * output of buckets that lost the rebase; remove the whole dir when
-    * nothing landed (tolerating a racing expire having removed it first). */
-  private def sweepStaging(commitRel: String, written: Map[Int, Seq[String]],
-      kept: Set[Int]): Unit = {
-    written.foreach { case (b, fs) =>
-      if (!kept.contains(b)) fs.foreach(rel => Files.deleteIfExists(Paths.get(root).resolve(rel)))
-    }
-    if (kept.isEmpty && Files.exists(Paths.get(root).resolve(commitRel)))
-      deleteRecursively(Paths.get(root).resolve(commitRel))
-  }
-
-  private def withInflightMarker[A](commitRel: String)(f: => A): A = {
-    val meta = Paths.get(root, "meta")
-    Files.createDirectories(meta)
-    val marker = meta.resolve(s"inflight-${commitRel.stripPrefix("data/")}")
-    Files.write(marker, Array.emptyByteArray)
-    try f finally Files.deleteIfExists(marker)
+  /** Step 6 of [[stagedCommit]]: delete the staged files `committed` does
+    * not reference (a rewrite's buckets that lost the rebase, or everything
+    * when nothing committed); remove the whole dir when none landed
+    * (tolerating a racing expire having removed it first). */
+  private def sweepStaging(staged: Staged, committed: Option[TableSnapshot]): Unit = {
+    val landed = committed.fold(Set.empty[String])(c =>
+      staged.files.keys.flatMap(b => c.bucketFiles.getOrElse(b, Nil)).toSet)
+    val (kept, lost) = staged.files.values.flatten.partition(landed)
+    lost.foreach(rel => Files.deleteIfExists(Paths.get(root).resolve(rel)))
+    val dir = Paths.get(root).resolve(staged.rel)
+    if (kept.isEmpty && Files.exists(dir)) deleteRecursively(dir)
   }
 
   private def deleteRecursively(p: JPath): Unit = {
@@ -2779,6 +2716,18 @@ final class LakeTable private (
 object LakeTable {
 
   private val mapper = new ObjectMapper()
+
+  /** What one [[LakeTable.stagedCommit]] write left in its staging dir
+    * `rel`: files and footer row counts per bucket, footer bounds per file. */
+  private final case class Staged(rel: String, files: Map[Int, Seq[String]],
+      rows: Map[Int, Long], stats: Map[String, FileStats])
+
+  /** How a writer publishes its staged output: whether non-empty output was
+    * `required` (none then means the dir was swept), which interleaved
+    * snapshots it `rebase`s over, and the snapshot it `build`s against a
+    * base (None: nothing left to commit). */
+  private final case class Publish(required: Boolean, rebase: TableSnapshot => Boolean,
+      build: TableSnapshot => Option[TableSnapshot])
 
   /** Materialize a directory listing with the stream CLOSED. `Files.list`
     * holds an open descriptor until closed; call sites that iterate lazily

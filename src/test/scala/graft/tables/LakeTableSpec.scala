@@ -2,6 +2,8 @@ package graft.tables
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkTestBase
@@ -382,36 +384,76 @@ class LakeTableSpec extends SparkTestBase {
     assert(state(auto) === state(off))
   }
 
-  test("OCC: a compaction racing an ingest merge rebases — both land, " +
+  // one race for the three maintenance rewrites: an ingest merge lands
+  // inside the rewrite's commit window, and the rewrite rebases over it
+  Seq[(String, LakeTable => Int, String)](
+    ("a compaction", _.compact(), "compactions"),
+    ("a purge", _.purgeTombstones(), "tombstone_purges"),
+    ("a cluster", _.cluster(Seq("wv")), "clusterings")).foreach { case (what, rewrite, counter) =>
+  test(s"OCC: $what racing an ingest merge rebases — both land, " +
       "invalidated buckets stay dirty, fold equality holds") {
-    val root = Files.createTempDirectory("laketbl-occ-compact").toString
-    val t = LakeTable.createOrOpen(spark, root, schema, Seq("k"), Seq("wv"), 4)
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val root = Files.createTempDirectory("laketbl-occ-rewrite").toString
+    val t = LakeTable.createOrOpen(spark, root,
+      StructType.fromDDL("k STRING, wv BIGINT, v STRING, deleted BOOLEAN"),
+      Seq("k"), Seq("wv"), 4, tombstoneCol = Some("deleted"))
     val t2 = LakeTable.open(spark, root)
     val keys = ('a' to 'h').map(_.toString)
-    t.merge(keys.map(k => (k, 1L, s"$k@1")).toDF("k", "wv", "v"), "b1", mor = true)
-    t.merge(keys.map(k => (k, 2L, s"$k@2")).toDF("k", "wv", "v"), "b2", mor = true)
-    val dirtyBefore = t.snapshot().morBuckets.toSet
-    assert(dirtyBefore.size >= 2, s"want ≥2 dirty buckets, got $dirtyBefore")
-    // just before the compaction commits, an ingest merge lands from a
-    // second handle: the compaction must rebase, dropping only the buckets
-    // the merge touched
+    def bucketOf(k: String): Int =
+      Seq(k).toDF("k").select(pmod(xxhash64(col("k")), lit(4)).cast("int")).as[Int].head()
+    // the purge reclaims every other key's delete, "a" among them (the
+    // racing merge re-creates it); the other rewrites see no deletes
+    val deleted =
+      if (counter == "tombstone_purges") keys.indices.filter(_ % 2 == 0).map(keys).toSet
+      else Set.empty[String]
+    t.merge(keys.map(k => (k, 1L, s"$k@1", false)).toDF("k", "wv", "v", "deleted"), "b1",
+      mor = true)
+    t.merge(keys.map(k => (k, 2L, s"$k@2", deleted(k))).toDF("k", "wv", "v", "deleted"), "b2",
+      mor = true)
+    val before = t.snapshot()
+    val target = counter match {
+      case "compactions"      => before.morBuckets.toSet
+      case "tombstone_purges" => deleted.map(bucketOf)
+      case _                  => before.bucketFiles.collect { case (b, fs) if fs.nonEmpty => b }.toSet
+    }
+    assert(target.size >= 2 && target(bucketOf("a")), s"want ≥2 buckets incl. a's, got $target")
+    // just before the rewrite commits, an ingest merge lands from a second
+    // handle: the rewrite must rebase, dropping only the bucket the merge
+    // touched
     var fired = false
     t.onBeforeCommit = () => if (!fired) {
       fired = true
-      t2.merge(Seq(("a", 3L, "a@3")).toDF("k", "wv", "v"), "race")
+      t2.merge(Seq(("a", 3L, "a@3", false)).toDF("k", "wv", "v", "deleted"), "race")
     }
-    val compacted = try t.compact() finally t.onBeforeCommit = () => ()
+    val rewritten = try rewrite(t) finally t.onBeforeCommit = () => ()
     assert(fired)
     val s = t.snapshot()
     assert(s.appliedBatches.contains("race"), "racing merge must have landed")
-    // the COW race-merge resolved + rewrote a's bucket itself; compaction
+    assert(s.totals.getOrElse(counter, 0L) === 1L, s"$what must have landed")
+    // the COW race-merge resolved + rewrote a's bucket itself; the rewrite
     // rebased onto the rest — nothing is dirty anymore and both committed
-    assert(compacted === dirtyBefore.size - 1, s"compacted=$compacted dirty=$dirtyBefore")
+    assert(rewritten === target.size - 1, s"rewritten=$rewritten target=$target")
     assert(s.morBuckets.isEmpty, s"morBuckets=${s.morBuckets}")
-    val state = t.read().as[(String, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(state("a") === ((3L, "a@3")))
-    keys.filterNot(_ == "a").foreach(k => assert(state(k) === ((2L, s"$k@2")), k))
-    assert(s.rowCount === keys.size.toLong && t.logicalRowCount() === keys.size.toLong)
+    val state = t.read().select("k", "wv", "v").as[(String, Long, String)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    val expected = keys.filterNot(k => k == "a" || deleted(k)).map(k => k -> ((2L, s"$k@2"))).toMap +
+      ("a" -> ((3L, "a@3")))
+    assert(state === expected)
+    assert(t.logicalRowCount() === expected.size.toLong)
+    if (deleted.isEmpty) assert(s.rowCount === keys.size.toLong)
+    // the stale output staged for a's bucket was swept: every file left
+    // under a maintenance staging dir is one the current snapshot reads
+    val live = s.bucketFiles.values.flatten.toSet
+    val staged = {
+      val ls = Files.walk(Paths.get(root, "data"))
+      try ls.iterator().asScala.map(p => Paths.get(root).relativize(p).toString)
+        .filter(r => r.startsWith("data/maint-") && r.endsWith(".parquet")).toSet
+      finally ls.close()
+    }
+    // (a purge may write nothing at all: every key of its buckets deleted)
+    assert(staged.nonEmpty || deleted.nonEmpty, "the rewrite staged no files")
+    assert(staged.subsetOf(live), s"unreferenced staged files: ${staged -- live}")
+  }
   }
 
   test("OCC: an ingest merge racing a compaction rebases over the " +
@@ -442,10 +484,22 @@ class LakeTableSpec extends SparkTestBase {
       fired2 = true
       t2.merge(Seq(("z", 1L, "z@1")).toDF("k", "wv", "v"), "race2")
     }
+    def commitDirs() = new java.io.File(s"$root/data").list().filter(_.startsWith("commit-")).toSet
+    val dirsBefore = commitDirs()
     try intercept[java.util.ConcurrentModificationException] {
       t.merge(Seq(("y", 1L, "y@1")).toDF("k", "wv", "v"), "b4")
     } finally t.onBeforeCommit = () => ()
     assert(fired2)
+    // the loser swept its staging dir at once; the only new dir is the
+    // winner's, and the table reads the winner's state
+    val s2 = t.snapshot()
+    val newDirs = commitDirs() -- dirsBefore
+    assert(newDirs.size === 1 &&
+      s2.bucketFiles.values.flatten.exists(_.startsWith(s"data/${newDirs.head}/")),
+      s"new commit dirs: $newDirs")
+    assert(s2.appliedBatches.contains("race2") && !s2.appliedBatches.contains("b4"))
+    val state2 = t.read().as[(String, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(state2.get("z") === Some((1L, "z@1")) && !state2.contains("y"))
   }
 
   test("OCC: rebucket re-runs from the fresh snapshot when an ingest " +

@@ -95,6 +95,34 @@ class SchemaDropSpec extends SparkTestBase {
     assert(changes.columns.toSeq === Seq("k", "wv", "v"))
   }
 
+  test("a compaction or clustering in flight across a DROP COLUMN does not " +
+      "republish the dropped column's bounds") {
+    def noBoundsOn(t: LakeTable, c: String): Boolean =
+      t.snapshot().fileStats.values.forall(st => !st.cols.keySet.exists(_.equalsIgnoreCase(c)))
+    Seq[(String, LakeTable => Int)](
+      "tag" -> (_.compact()),
+      "v" -> (_.cluster(Seq("wv")))).foreach { case (dropped, rewrite) =>
+      val t = newTable()
+      val t2 = LakeTable.open(spark, t.root)
+      t.merge(Seq(("a", 1L, "a1", "x"), ("b", 1L, "b1", "y"))
+        .toDF("k", "wv", "v", "tag"), "b1", mor = true)
+      t.merge(Seq(("a", 2L, "a2", "x2"), ("b", 2L, "b2", "y2"))
+        .toDF("k", "wv", "v", "tag"), "b2", mor = true)
+      assert(!noBoundsOn(t, dropped), s"'$dropped' must carry bounds before the drop")
+      // the drop lands inside the rewrite's commit window: the rewrite's
+      // staged files were harvested through the pre-drop schema, and the
+      // drop moves no bucket file list, so the rewrite rebases over it
+      var fired = false
+      t.onBeforeCommit = () => if (!fired) { fired = true; t2.dropColumns(Seq(dropped)) }
+      val rewritten = try rewrite(t) finally t.onBeforeCommit = () => ()
+      assert(fired && rewritten > 0)
+      val s = t.snapshot()
+      assert(s.droppedCols === Seq(dropped))
+      assert(s.morBuckets.isEmpty, "the rewrite must have landed on top of the drop")
+      assert(noBoundsOn(t, dropped), s"'$dropped' bounds republished: ${s.fileStats}")
+    }
+  }
+
   test("rebucket rewrites every file and clears the ledger — name reusable, reads null") {
     val t = newTable()
     t.merge(Seq(("a", 1L, "a1", "x"), ("b", 1L, "b1", "y"))
