@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.SnapshotReplay
 import graft.tables.MergePlan
 
@@ -71,17 +69,8 @@ object MorBench {
     val events = fullEvents + deltaEvents
     val snapNames = "snap-full" +: (1 to deltas).map(d => s"snap-inc$d")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$work/spark-local")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.create(
+      DevSession.builder(cpus).config("spark.local.dir", s"$work/spark-local"))
 
     final case class R(fullSec: Double, replaySec: Double, compactSec: Double,
         storedRows: Long, finalRows: Long)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time a SUBSET of `SparkEntry.queries` (iterate on one query
   * without paying the full Bench pass). Usage:
   *   runMain graft.QueryBench q16_snapshot_replay q30_repo_cdc [reps]
@@ -16,21 +14,13 @@ object QueryBench {
     }
     require(names.nonEmpty, "pass query names")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "8g")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val builder = DevSession.builder(cpus)
     // A/B seam: GRAFT_QB_CONF="k=v;k=v" overlays session confs (dev-only —
     // the frozen Bench harness never reads it)
     sys.env.get("GRAFT_QB_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.create(builder)
     StageProfiler.maybeAttach(spark) // honors GRAFT_STAGE_PROFILE=1 as documented
     names.foreach { n =>
       require(SparkEntry.queries.contains(n), s"unknown query $n")

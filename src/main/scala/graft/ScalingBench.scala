@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.SnapshotFixture
 import graft.streaming.SnapshotReplay
 
@@ -117,22 +115,16 @@ object ScalingBench {
           "dist-layout SPARK_HOME outside spark-class")
     val execMemMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "3072").toInt
     val runs = plan.map { cpus =>
-      val builder = SparkSession.builder()
+      // Tungsten sort/agg pages OFF-HEAP (DevSession's default): the merge's
+      // reduce stage (shuffle fetch + sort-agg + parquet encode) otherwise
+      // allocates its sorter pages on-heap, and task GC time grows 4x going
+      // 4→16 threads in one heap (measured: 74.7→97.9 s summed task time, gc
+      // 2.4→9.4 s). With off-heap pages the same stage scales at ~1.0
+      // task-time ratio (66.5→64.0 s) — this is how a real executor would be
+      // configured. Executor JVMs in procs mode get a third of their memory.
+      val builder = DevSession.builder(cpus)
         .appName(s"graft-scaling-$cpus")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .config("spark.local.dir", s"$work/spark-local")
-        // Tungsten sort/agg pages OFF-HEAP: the merge's reduce stage (shuffle
-        // fetch + sort-agg + parquet encode) otherwise allocates its sorter
-        // pages on-heap, and task GC time grows 4x going 4→16 threads in one
-        // heap (measured: 74.7→97.9 s summed task time, gc 2.4→9.4 s). With
-        // off-heap pages the same stage scales at ~1.0 task-time ratio
-        // (66.5→64.0 s) — this is how a real executor would be configured.
-        .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size",
-          if (mode == "procs") s"${execMemMb / 3}m" else "8g")
       if (mode == "procs") {
         require(sys.env.contains("SPARK_HOME"),
           "SPARK_GRAFT_SCALE_MODE=procs needs SPARK_HOME (e.g. /opt/spark) so " +
@@ -156,16 +148,14 @@ object ScalingBench {
         builder
           .master(s"local-cluster[$nExec,$execCores,$execMemMb]")
           .config("spark.executor.memory", s"${execMemMb}m")
+          .config("spark.memory.offHeap.size", s"${execMemMb / 3}m")
           .config("spark.executor.extraClassPath", sys.props("java.class.path"))
           .config("spark.executor.extraJavaOptions",
             org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions() +
               s" -XX:ActiveProcessorCount=$execCores -XX:+UseG1GC" +
               " -XX:ParallelGCThreads=2 -XX:ConcGCThreads=1")
-      } else {
-        builder.master(s"local[$cpus]")
       }
-      val spark = builder.getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = DevSession.create(builder)
       StageProfiler.maybeAttach(spark)
       // IN-SESSION warmup batch (never timed): in procs mode every session
       // spawns FRESH executor JVMs, so executor registration + JIT would

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.SnapshotFixture
 import graft.streaming.SnapshotReplay
 import graft.tables.MergePlan
@@ -67,17 +65,8 @@ object SkewBench {
       ScalingBench.defaultWorkDir("graft-skew"))
     val events = ensureSkewedInput(s"$work/input", accountsPerVec, hotFraction, hotKeys)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$work/spark-local")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.create(
+      DevSession.builder(cpus).config("spark.local.dir", s"$work/spark-local"))
     StageProfiler.maybeAttach(spark)
 
     // warmup (JIT both plan shapes), then interleaved reps with the arm

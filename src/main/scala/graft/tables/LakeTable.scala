@@ -199,11 +199,7 @@ final class LakeTable private (
     * handles `LakeCatalog`/`LakeDml` open never set it. */
   @volatile private[graft] var planPin: MergePlan.Pin = MergePlan.Pin()
 
-  def currentVersion(): Long = {
-    val vf = Paths.get(root, "meta", "VERSION")
-    if (Files.exists(vf)) new String(Files.readAllBytes(vf), StandardCharsets.UTF_8).trim.toLong
-    else 0L
-  }
+  def currentVersion(): Long = LakeTable.currentVersion(root)
 
   def snapshot(): TableSnapshot = readSnapshot(Paths.get(root), currentVersion())
 
@@ -224,11 +220,20 @@ final class LakeTable private (
     * [[expire]] retention window is readable; its snapshot pins the exact
     * file set, so the result is stable even as newer merges land. */
   def readAt(version: Long): DataFrame = {
-    val p = Paths.get(root, "meta", s"v$version.json")
-    require(Files.exists(p),
-      s"version $version is not retained (expired or never existed) at $root")
-    val s = readSnapshot(Paths.get(root), version)
+    val s = retainedSnapshot(version)
     visible(s, readSnapshotDF(s))
+  }
+
+  /** [[readAt]]'s resolved rows with tombstone winners KEPT — the changelog
+    * of a window from an empty table to `version` (the change stream's
+    * initial snapshot load once v0 has been expired). */
+  private[tables] def resolvedAt(version: Long): DataFrame =
+    readSnapshotDF(retainedSnapshot(version))
+
+  private def retainedSnapshot(version: Long): TableSnapshot = {
+    require(Files.exists(Paths.get(root, "meta", s"v$version.json")),
+      s"version $version is not retained (expired or never existed) at $root")
+    readSnapshot(Paths.get(root), version)
   }
 
   /** Hide tombstone winners from a RESOLVED row set (must run after LWW
@@ -307,12 +312,8 @@ final class LakeTable private (
       allowPurgedWindow: Boolean = false): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    Seq(fromVersion, toVersion).foreach { v =>
-      require(Files.exists(Paths.get(root, "meta", s"v$v.json")),
-        s"version $v is not retained (expired or never existed) at $root")
-    }
-    val oldSnap = readSnapshot(Paths.get(root), fromVersion)
-    val newSnap = readSnapshot(Paths.get(root), toVersion)
+    val oldSnap = retainedSnapshot(fromVersion)
+    val newSnap = retainedSnapshot(toVersion)
     // a tombstone PURGE inside the window removed delete markers a lagging
     // consumer has not seen — its deletes can no longer surface here, so a
     // window spanning a purge silently loses them. Fail loudly unless the
@@ -324,7 +325,9 @@ final class LakeTable private (
         "deletes purged inside the window cannot surface to this consumer. " +
         "Read up to the pre-purge version first, or purge only after every " +
         "changelog consumer has passed the deletes' versions " +
-        "(readChanges(from, to, allowPurgedWindow = true) overrides)")
+        "(readChanges(from, to, allowPurgedWindow = true) or the change " +
+        "stream's allowPurgedWindow=true option overrides; the typed feed " +
+        "is purge-safe)")
     val newSchema = StructType.fromDDL(newSnap.schemaDdl)
     // across a rebucket boundary the bucket ids of the SAME key differ
     // between the two layouts: bucket-diff pruning and bucket-aligned
@@ -356,30 +359,30 @@ final class LakeTable private (
     if (changed.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
-    withSpjConfs(Some(changed.size)) {
-      def side(s: TableSnapshot): DataFrame = {
-        val scan = bucketScanDF(s, changed)
-        // align the (possibly narrower) old schema onto the new one so the
-        // anti-join columns line up; Project preserves the partitioning
-        val aligned = scan.select(newSchema.fieldNames.toSeq.map { c =>
-          if (scan.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
-          else lit(null).cast(newSchema(c).dataType).as(c)
-        } :+ col(BucketCol): _*)
-        if (changed.exists(s.morBuckets.contains))
-          Dedup.latestByKey(aligned, s.keyCols :+ BucketCol, s.orderCols)
-        else aligned
-      }
-      // the bucket column joins with plain equality (non-null by
-      // construction, and it must stay a direct key so the scans'
-      // KeyGroupedPartitioning aligns); data columns null-safely. The
-      // session-wide SPJ confs (set at table construction) keep this shape
-      // however the caller derives or re-plans the lazy result.
-      side(newSnap).alias("n")
-        .join(side(oldSnap).alias("o"),
-          antiCond("n", "o", newSnap.keyCols ++ newSnap.orderCols, plainEq = Seq(BucketCol)),
-          "left_anti")
-        .drop(BucketCol)
+    def side(s: TableSnapshot): DataFrame = {
+      val scan = bucketScanDF(s, changed)
+      // align the (possibly narrower) old schema onto the new one so the
+      // anti-join columns line up; Project preserves the partitioning
+      val aligned = scan.select(newSchema.fieldNames.toSeq.map { c =>
+        if (scan.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
+        else lit(null).cast(newSchema(c).dataType).as(c)
+      } :+ col(BucketCol): _*)
+      if (changed.exists(s.morBuckets.contains))
+        Dedup.latestByKey(aligned, s.keyCols :+ BucketCol, s.orderCols)
+      else aligned
     }
+    // the bucket column joins with plain equality (non-null by
+    // construction, and it must stay a direct key so the scans'
+    // KeyGroupedPartitioning aligns); data columns null-safely. Both sides
+    // report the same KeyGroupedPartitioning, so no exchange is planned
+    // whatever the session's shuffle-partition count, and the session-wide
+    // SPJ confs (set at table construction) keep this shape however the
+    // caller derives or re-plans the lazy result.
+    side(newSnap).alias("n")
+      .join(side(oldSnap).alias("o"),
+        antiCond("n", "o", newSnap.keyCols ++ newSnap.orderCols, plainEq = Seq(BucketCol)),
+        "left_anti")
+      .drop(BucketCol)
   }
 
   /** TYPED CHANGELOG (≙ Delta Change Data Feed): every row-level change
@@ -414,12 +417,8 @@ final class LakeTable private (
   def readChangesTyped(fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    Seq(fromVersion, toVersion).foreach { v =>
-      require(Files.exists(Paths.get(root, "meta", s"v$v.json")),
-        s"version $v is not retained (expired or never existed) at $root")
-    }
-    val oldSnap = readSnapshot(Paths.get(root), fromVersion)
-    val newSnap = readSnapshot(Paths.get(root), toVersion)
+    val oldSnap = retainedSnapshot(fromVersion)
+    val newSnap = retainedSnapshot(toVersion)
     val newSchema = StructType.fromDDL(newSnap.schemaDdl)
     val keys = newSnap.keyCols
 
@@ -476,29 +475,27 @@ final class LakeTable private (
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
     }
-    withSpjConfs(Some(changed.size)) {
-      def side(s: TableSnapshot, as: String): DataFrame = {
-        val aligned = align(bucketScanDF(s, changed))
-        val winners =
-          if (changed.exists(s.morBuckets.contains))
-            Dedup.latestByKey(aligned, s.keyCols :+ BucketCol, s.orderCols)
-          else aligned
-        pack(winners, as, Seq(BucketCol))
-      }
-      val n = side(newSnap, "_nrow").alias("n")
-      val o = side(oldSnap, "_orow").alias("o")
-      val cond = (keys.map(k => col(s"n.$k") <=> col(s"o.$k")) :+
-        (col(s"n.$BucketCol") === col(s"o.$BucketCol"))).reduce(_ && _)
-      classified(n.join(o, cond, "full_outer"))
+    def side(s: TableSnapshot, as: String): DataFrame = {
+      val aligned = align(bucketScanDF(s, changed))
+      val winners =
+        if (changed.exists(s.morBuckets.contains))
+          Dedup.latestByKey(aligned, s.keyCols :+ BucketCol, s.orderCols)
+        else aligned
+      pack(winners, as, Seq(BucketCol))
     }
+    val n = side(newSnap, "_nrow").alias("n")
+    val o = side(oldSnap, "_orow").alias("o")
+    val cond = (keys.map(k => col(s"n.$k") <=> col(s"o.$k")) :+
+      (col(s"n.$BucketCol") === col(s"o.$BucketCol"))).reduce(_ && _)
+    classified(n.join(o, cond, "full_outer"))
   }
 
   /** STREAMING CHANGELOG (CDC egress as a Structured Streaming source —
     * ≙ Delta CDF / a binlog tail of this table): an unbounded stream whose
     * micro-batches are consecutive [[readChanges]] windows, offsets = table
-    * versions, checkpoint-resumable. See
-    * [[graft.tables.dsv2.LakeCdfSource]] for the options and the per-bucket
-    * zero-shuffle execution shape.
+    * versions, checkpoint-resumable; each micro-batch's rows come from one
+    * [[readChanges]] (or, typed, [[readChangesTyped]]) call. See
+    * [[graft.tables.dsv2.LakeCdfSource]] for the options.
     *
     * {{{
     *   table.readChangeStream()
@@ -814,7 +811,9 @@ final class LakeTable private (
 
   /** Partitioning-reporting scan over `buckets` of snapshot `snap` (DSv2,
     * `KeyGroupedPartitioning(identity(_gbucket))`) — the storage-partitioned
-    * read path. Requires [[withSpjConfs]] around plan + execution. */
+    * read path. Two such scans join with no exchange under the session-wide
+    * SPJ confs; a join that shuffles its other side INTO this layout needs
+    * [[withSpjConfs]]' shuffle-partition cap around plan + execution. */
   private def bucketScanDF(snap: TableSnapshot, buckets: Seq[Int]): DataFrame =
     spark.read.format(graft.tables.dsv2.LakeBucketSource.Name)
       .option("root", root)
@@ -1045,8 +1044,8 @@ final class LakeTable private (
           .drop(SubSplitCol, SrcFlagCol)
     }
     var upserts = 0L
-    val committed = stagedCommit(snap, "commit", snap.sortOrder, snap.targetFileRows,
-        statsFirst = snap.sortOrder)(sink =>
+    val committed = stagedCommit(snap, evolved, "commit", snap.sortOrder,
+        snap.targetFileRows, statsFirst = snap.sortOrder)(sink =>
       withSmallPlanConfs(plan.small) {
         if (plan.route == MergePlan.SpjCow) withSpjConfs(Some(statsTouched.size))(sink(output()))
         else sink(output())
@@ -1384,7 +1383,8 @@ final class LakeTable private (
       cap: Long, statsFirst: Seq[String], mayEmpty: Boolean)(
       tally: (Int, Long) => Seq[(String, Long)])(rewrite: => DataFrame): Int = {
     var valid: Seq[Int] = todo
-    val committed = stagedCommit(snap, "maint", sortBy, cap, statsFirst)(sink =>
+    val committed = stagedCommit(snap, StructType.fromDDL(snap.schemaDdl), "maint",
+        sortBy, cap, statsFirst)(sink =>
       withSmallPlanConfs(MergePlan.storedSmall(snap, todo)) {
         withSpjConfs(Some(todo.size))(sink(rewrite))
       }) { staged =>
@@ -1557,7 +1557,7 @@ final class LakeTable private (
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema),
         curSchema)
       try {
-        stagedCommit(snap, "maint", snap.sortOrder, snap.targetFileRows,
+        stagedCommit(snap, curSchema, "maint", snap.sortOrder, snap.targetFileRows,
             statsFirst = snap.sortOrder)(sink =>
           sink(buildMerged(align(readSnapshotDF(snap), curSchema), emptyBatch, reSnap,
               touchedCount = newNumBuckets, writeFactor = writeFactor, salted = false)
@@ -1846,8 +1846,7 @@ final class LakeTable private (
       s"cannot fast-forward: this table logically advanced past version " +
         s"$clonedV (now at ${head.version}) since the clone was taken — " +
         "re-clone and re-apply the audit")
-    val cloneV = new String(Files.readAllBytes(
-      Paths.get(cloneRoot, "meta", "VERSION")), StandardCharsets.UTF_8).trim.toLong
+    val cloneV = LakeTable.currentVersion(cloneRoot)
     val cSnap = readSnapshot(Paths.get(cloneRoot), cloneV)
     // a publish must NOT smuggle a bucket-layout change in with its data:
     // the changelog stream treats a numBuckets-changing commit as a
@@ -2451,7 +2450,9 @@ final class LakeTable private (
     *     and `cap`, partitioned by bucket, into the staging dir;
     *  3. footer: [[touchInflight]], then one parallel footer pass
     *     ([[listBucketFiles]], [[writtenMeta]]) for per-bucket files and
-    *     rows and per-file bounds;
+    *     rows and per-file bounds over `schema` — the schema the files were
+    *     written with (a merge's evolved schema, so a column the merge adds
+    *     gets bounds in the very files that introduce it);
     *  4. guard: `publish(staged)` says what to commit; when it `required`
     *     output and the dir holds none, a concurrent expire swept it — fail
     *     loudly rather than commit data loss;
@@ -2467,8 +2468,9 @@ final class LakeTable private (
     * Any other failure leaves the staging dir to [[expire]]'s marker-TTL
     * sweep.
     * @return the committed snapshot; None when `build` had nothing left */
-  private def stagedCommit(snap: TableSnapshot, kind: String, sortBy: Seq[String],
-      cap: Long, statsFirst: Seq[String])(write: (DataFrame => Unit) => Unit)(
+  private def stagedCommit(snap: TableSnapshot, schema: StructType, kind: String,
+      sortBy: Seq[String], cap: Long, statsFirst: Seq[String])(
+      write: (DataFrame => Unit) => Unit)(
       publish: Staged => Publish): Option[TableSnapshot] = {
     val rel = s"data/$kind-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
     withInflightMarker(rel) {
@@ -2476,8 +2478,7 @@ final class LakeTable private (
         .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$rel"))
       touchInflight(rel)
       val files = listBucketFiles(Paths.get(root).resolve(rel), rel, BucketCol)
-      val (rows, stats) = writtenMeta(files, StructType.fromDDL(snap.schemaDdl),
-        snap.keyCols, snap.orderCols, statsFirst)
+      val (rows, stats) = writtenMeta(files, schema, snap.keyCols, snap.orderCols, statsFirst)
       val staged = Staged(rel, files, rows, stats)
       val p = publish(staged)
       if (p.required && files.isEmpty)
@@ -2885,6 +2886,14 @@ object LakeTable {
       Some((n.get("sourceRoot").asText(), n.get("sourceVersion").asLong(),
         n.get("sourceTag").asText()))
     }
+  }
+
+  /** The published head version of the table at `root` (0 before its
+    * create commit): the one reader of the `meta/VERSION` pointer. */
+  private[graft] def currentVersion(root: String): Long = {
+    val vf = Paths.get(root, "meta", "VERSION")
+    if (Files.exists(vf)) new String(Files.readAllBytes(vf), StandardCharsets.UTF_8).trim.toLong
+    else 0L
   }
 
   def open(spark: SparkSession, root: String): LakeTable = {

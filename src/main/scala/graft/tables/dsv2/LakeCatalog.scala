@@ -103,7 +103,7 @@ final class LakeCatalog extends TableCatalog
         case None => throw new NoSuchTableException(ident)
       }
     }
-    val version = LakeCdfSource.currentVersion(root.toString)
+    val version = LakeTable.currentVersion(root.toString)
     new LakeSqlTable(ident, root.toString,
       LakeTable.readSnapshot(root, version))
   }
@@ -131,7 +131,7 @@ final class LakeCatalog extends TableCatalog
     val v = version.toLongOption.getOrElse {
       val target = metaParent.getOrElse(root)
       val head = LakeTable.readSnapshot(target,
-        LakeCdfSource.currentVersion(target.toString))
+        LakeTable.currentVersion(target.toString))
       head.tags.getOrElse(version, throw new IllegalArgumentException(
         s"VERSION AS OF '$version': no such tag on ${ident.name()} (tags: " +
           s"${head.tags.keys.toSeq.sorted.mkString(", ")})"))

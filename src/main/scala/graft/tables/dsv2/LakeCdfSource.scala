@@ -1,28 +1,26 @@
 package graft.tables.dsv2
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.{Optional => JOptional}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, RowOrdering, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources.StreamSourceProvider
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.tables.{LakeTable, TableSnapshot}
 
 /** STREAMING CHANGELOG SOURCE (CDC egress ≙ Delta CDF / Iceberg incremental
-  * read, expressed as a Spark `MicroBatchStream`): tail a
+  * read, expressed as a Structured Streaming `Source`): tail a
   * [[graft.tables.LakeTable]] as an unbounded stream of changed rows —
   * `spark.readStream.format(LakeCdfSource.Name).option("root", …).load()`.
   *
@@ -36,19 +34,18 @@ import graft.tables.{LakeTable, TableSnapshot}
   * the exactly-once story (the ingest half is the merge's `(app, seq)`
   * ledger).
   *
-  * Scale shape (one task per CHANGED bucket, zero shuffles, no driver data):
-  *  1. metadata-only bucket pruning — buckets whose file lists are identical
-  *     at both versions are never read;
-  *  2. the OLD side of each changed bucket is read COLUMN-PRUNED to
-  *     `keys… ++ orderCols…` (parquet never materializes payload bytes) into
-  *     a per-task hash set. No LWW resolve is needed there: winners are
-  *     monotone under the LWW fold, so a new-side winner's tuple can only
-  *     ever equal the old side's WINNER for that key, never a shadowed
-  *     layer row — plain membership over all old tuples is exact;
-  *  3. the NEW side streams through Spark's own parquet reader and emits
-  *     rows whose tuple is absent from the old set. Merge-on-read buckets
-  *     are LWW-folded in the task first (bounded by one bucket, the same
-  *     working set a compaction task holds).
+  * Scale shape: a micro-batch IS the batch changelog. `getBatch` returns
+  * `readChanges(v1, v2)` (`readChangesTyped` under `typed=true`) projected
+  * onto the stream's schema — metadata bucket-diff pruning, both sides from
+  * the partitioning-reporting bucket scan with merge-on-read layers
+  * LWW-resolved in place, one storage-partitioned anti-join (full-outer
+  * join when typed) per changed bucket, zero exchanges — so the stream and
+  * the batch read cannot disagree on any row, equal-ordering ties included.
+  * The batch is planned when it RUNS, not when `getBatch` returns: a
+  * restarted query asks once more for its last committed window and drops
+  * the answer, and that window's start may have been expired since. So a
+  * window that cannot be read (purge guard, retention) fails where the
+  * batch runs — inside a `foreachBatch` function, as that function's error.
   *
   * Versions crossing a REBUCKET are handled without a layout-crossing join:
   * the rebucket commit changes no logical rows, so admission control clamps
@@ -73,41 +70,41 @@ import graft.tables.{LakeTable, TableSnapshot}
   * fail-loud guard on windows spanning a tombstone purge); `typed=true`
   * (emit the TYPED feed — every batch row classified in a `_change_type`
   * column as insert / update_preimage / update_postimage / delete, the
-  * streaming twin of [[graft.tables.LakeTable.readChangesTyped]]; both
-  * bucket versions fold to winners in the task, preimages are exact
-  * retractions for downstream incremental aggregation, and purge-spanning
-  * windows are safe).
+  * streaming twin of [[graft.tables.LakeTable.readChangesTyped]]: preimages
+  * are exact retractions for downstream incremental aggregation, and
+  * purge-spanning windows are safe).
   *
   * Failure contract: if the stream falls behind [[LakeTable.expire]]'s
-  * retention (its checkpointed version is no longer on disk), planning fails
-  * with a clear error instead of silently skipping versions — size
+  * retention (its checkpointed version is no longer on disk), the batch
+  * fails with a clear error instead of silently skipping versions — size
   * `expire(keepVersions=…)` to cover the slowest consumer, exactly like
   * binlog retention vs replica lag.
   *
-  * The stream's schema is FIXED at query start (the table schema at source
-  * resolution). Columns added by later schema evolution are not surfaced
-  * until the query restarts; evolved files project onto the start schema
-  * (missing columns read as null — the same alignment the batch changelog
-  * applies).
+  * The stream's schema is FIXED when the query starts (the table schema at
+  * `load()`, read again when the query creates its source — a schema change
+  * between the two fails the first batch loudly). Columns added by later
+  * schema evolution are not surfaced until the query restarts; evolved rows
+  * project onto the start schema (missing columns read as null — the same
+  * alignment the batch changelog applies).
   */
-final class LakeCdfSource extends TableProvider {
+final class LakeCdfSource extends StreamSourceProvider {
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val root = LakeBucketSource.require(options, "root")
-    val version = LakeCdfSource.currentVersion(root)
-    val data = StructType.fromDDL(LakeTable.readSnapshot(Paths.get(root), version).schemaDdl)
-    if (LakeCdfSource.isTyped(options))
-      StructType(data.fields :+ org.apache.spark.sql.types.StructField(
-        LakeCdfSource.ChangeTypeCol, org.apache.spark.sql.types.StringType,
-        nullable = false))
-    else data
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) = {
+    require(schema.isEmpty,
+      "the lake changelog stream takes its schema from the table; a " +
+        "user-specified schema is not supported")
+    val opts = CaseInsensitiveMap(parameters)
+    (s"lake_cdf(${LakeCdfSource.root(opts)})", LakeCdfSource.streamSchema(opts))
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new LakeCdfTable(schema, new CaseInsensitiveStringMap(properties))
-
-  override def supportsExternalMetadata(): Boolean = false
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source = {
+    val opts = CaseInsensitiveMap(parameters)
+    new LakeCdfStream(sqlContext.sparkSession, LakeCdfSource.root(opts),
+      LakeCdfSource.streamSchema(opts), opts)
+  }
 }
 
 object LakeCdfSource {
@@ -120,14 +117,20 @@ object LakeCdfSource {
   /** classification column of the TYPED stream (option `typed=true`) */
   val ChangeTypeCol = "_change_type"
 
-  private[dsv2] def isTyped(options: CaseInsensitiveStringMap): Boolean =
-    Option(options.get("typed")).exists(_.toBoolean)
+  private def root(opts: CaseInsensitiveMap[String]): String =
+    opts.getOrElse("root", throw new IllegalArgumentException("option 'root' is required"))
 
-  private[dsv2] def currentVersion(root: String): Long = {
-    val vf = Paths.get(root, "meta", "VERSION")
-    if (Files.exists(vf))
-      new String(Files.readAllBytes(vf), StandardCharsets.UTF_8).trim.toLong
-    else 0L
+  private[dsv2] def isTyped(options: Map[String, String]): Boolean =
+    options.get("typed").exists(_.toBoolean)
+
+  /** the table schema at the head version; typed mode appends the
+    * classification column */
+  private def streamSchema(opts: CaseInsensitiveMap[String]): StructType = {
+    val data = StructType.fromDDL(LakeTable.readSnapshot(Paths.get(root(opts)),
+      LakeTable.currentVersion(root(opts))).schemaDdl)
+    if (isTyped(opts))
+      StructType(data.fields :+ StructField(ChangeTypeCol, StringType, nullable = false))
+    else data
   }
 
   /** `startingTimestamp` accepts epoch millis (all digits), an ISO-8601
@@ -163,7 +166,7 @@ object LakeCdfSource {
     * stream's `startingTimestamp` — the "snapshot + tail = live state"
     * invariant requires the two anchors to agree exactly. */
   private[dsv2] def versionAtOrBefore(root: String, millis: Long): Option[Long] = {
-    val head = currentVersion(root)
+    val head = LakeTable.currentVersion(root)
     val rootP = Paths.get(root)
     LakeMetadataTables.retainedVersions(rootP).filter(_ <= head)
       .filter(v => LakeTable.committedAt(rootP, v) <= millis)
@@ -176,94 +179,80 @@ object LakeCdfSource {
         s"no table versions under $root/meta"))
 }
 
-final class LakeCdfTable(streamSchema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  private val root = LakeBucketSource.require(options, "root")
-
-  override def name(): String = s"lake_cdf($root)"
-  override def schema(): StructType = streamSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LakeCdfScan(root, streamSchema, options)
-    }
-}
-
-final class LakeCdfScan(root: String, streamSchema: StructType,
-    options: CaseInsensitiveStringMap) extends Scan {
-  override def readSchema(): StructType = streamSchema
-  override def description(): String = s"LakeCdfScan(root=$root)"
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new LakeCdfStream(root, streamSchema, options)
-}
-
 /** version offset: `{"version":N}` means "changes up to and including table
-  * version N have been emitted". `baselineEmpty` marks a
-  * `startingVersion=earliest` anchor whose pre-image was already expired:
-  * version N is retained but its CONTENTS have not been emitted yet, so the
-  * first micro-batch diffs against an EMPTY old side (initial snapshot
-  * load); the flag is consumed by that batch and never reappears. */
-final case class LakeCdfOffset(version: Long, baselineEmpty: Boolean = false)
-    extends Offset {
+  * version N have been emitted". The FIRST batch's end offset also carries
+  * the stream's `anchor` — the version the stream starts after — so a query
+  * restarted before that batch committed replays the same window. With
+  * `baselineEmpty` (a `startingVersion=earliest` anchor whose pre-image was
+  * already expired) the first batch diffs against an EMPTY old side: it
+  * emits version N's resolved state (initial snapshot load). Equality is
+  * the json's, as for every streaming offset. */
+final class LakeCdfOffset(val version: Long, private[dsv2] val anchor: Option[Long] = None,
+    val baselineEmpty: Boolean = false) extends Offset {
   override def json: String =
-    if (baselineEmpty) s"""{"version":$version,"baseline":"empty"}"""
-    else s"""{"version":$version}"""
+    s"""{"version":$version""" + anchor.fold("")(a => s""","anchor":$a""") +
+      (if (baselineEmpty) ""","baseline":"empty"}""" else "}")
 }
 
-final class LakeCdfStream(root: String, streamSchema: StructType,
-    options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+object LakeCdfOffset {
+  /** ours as-is; a checkpointed (serialized) offset parsed from its json */
+  private[dsv2] def apply(o: OffsetV2): LakeCdfOffset = o match {
+    case l: LakeCdfOffset => l
+    case _ =>
+      val m = LakeCdfSource.offsetMapper.readTree(o.json)
+      new LakeCdfOffset(m.get("version").asLong(),
+        Option(m.get("anchor")).map(_.asLong()), m.has("baseline"))
+  }
+}
+
+final class LakeCdfStream(spark: SparkSession, root: String,
+    override val schema: StructType, options: CaseInsensitiveMap[String])
+    extends Source with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   private val maxVersionsPerBatch: Long =
-    Option(options.get("maxVersionsPerBatch")).map(_.toLong).getOrElse(Long.MaxValue)
+    options.get("maxVersionsPerBatch").map(_.toLong).getOrElse(Long.MaxValue)
   require(maxVersionsPerBatch >= 1, "maxVersionsPerBatch must be >= 1")
   private val allowPurgedWindow: Boolean =
-    Option(options.get("allowPurgedWindow")).exists(_.toBoolean)
+    options.get("allowPurgedWindow").exists(_.toBoolean)
   private val typed: Boolean = LakeCdfSource.isTyped(options)
-  /** table columns of the stream (typed mode appends the classification) */
-  private val dataSchema: StructType =
-    if (typed) StructType(streamSchema.dropRight(1)) else streamSchema
 
-  /** snapshots are immutable once committed — cache them driver-side;
-    * entries at or below the committed offset are dropped in [[commit]] */
-  private val snapCache = mutable.Map.empty[Long, TableSnapshot]
-  private def snap(v: Long): TableSnapshot = synchronized {
-    snapCache.getOrElseUpdate(v,
-      try LakeTable.readSnapshot(Paths.get(root), v)
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"table version $v of $root is not readable — if the stream lagged " +
-            "past expire()'s retention window, raise keepVersions to cover the " +
-            "slowest changelog consumer (like binlog retention vs replica lag)", e)
-      })
-  }
+  private lazy val table = LakeTable.open(spark, root)
+
+  private def snap(v: Long): TableSnapshot =
+    try LakeTable.readSnapshot(Paths.get(root), v)
+    catch { case e: Exception => throw unreadable(v, e) }
+
+  private def unreadable(v: Long, e: Exception) = new IllegalStateException(
+    s"table version $v of $root is not readable — if the stream lagged " +
+      "past expire()'s retention window, raise keepVersions to cover the " +
+      "slowest changelog consumer (like binlog retention vs replica lag)", e)
 
   @volatile private var availableNowTarget: Option[Long] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(LakeCdfSource.currentVersion(root))
+    availableNowTarget = Some(LakeTable.currentVersion(root))
 
-  override def initialOffset(): Offset = {
-    val sv = Option(options.get("startingVersion"))
-    val st = Option(options.get("startingTimestamp"))
-    val sg = Option(options.get("startingTag"))
+  /** The version the stream starts after and whether its baseline is
+    * empty, resolved ONCE per query run from the starting options (the
+    * first batch's offset then carries it). */
+  private lazy val anchor: (Long, Boolean) = resolveAnchor()
+  private def resolveAnchor(): (Long, Boolean) = {
+    val sv = options.get("startingVersion")
+    val st = options.get("startingTimestamp")
+    val sg = options.get("startingTag")
     require(Seq(sv, st, sg).count(_.isDefined) <= 1,
       "options startingVersion, startingTimestamp and startingTag are " +
         "mutually exclusive")
-    sg.foreach { tag =>
-      // named-ref anchor (Iceberg tag analog): tail everything AFTER the
-      // tagged version, so `VERSION AS OF '<tag>'` state + this stream's
-      // batches = live state — the named twin of startingTimestamp
-      val head = snap(LakeCdfSource.currentVersion(root))
-      val v = head.tags.getOrElse(tag, throw new IllegalArgumentException(
-        s"startingTag: no tag '$tag' on $root (tags: " +
-          s"${head.tags.keys.toSeq.sorted.mkString(", ")})"))
-      return LakeCdfOffset(v)
-    }
-    val v = st match {
-      case Some(ts) =>
+    val v = (sv, st, sg) match {
+      case (_, _, Some(tag)) =>
+        // named-ref anchor (Iceberg tag analog): tail everything AFTER the
+        // tagged version, so `VERSION AS OF '<tag>'` state + this stream's
+        // batches = live state — the named twin of startingTimestamp
+        val head = snap(LakeTable.currentVersion(root))
+        head.tags.getOrElse(tag, throw new IllegalArgumentException(
+          s"startingTag: no tag '$tag' on $root (tags: " +
+            s"${head.tags.keys.toSeq.sorted.mkString(", ")})"))
+      case (_, Some(ts), _) =>
         // wall-clock anchor, the dual of the catalog's TIMESTAMP AS OF: the
         // offset is the LAST retained version committed at or before t, so
         // `TIMESTAMP AS OF t` state + this stream's batches = live state
@@ -275,8 +264,8 @@ final class LakeCdfStream(root: String, streamSchema: StructType,
               s"or before ${java.time.Instant.ofEpochMilli(millis)}; older " +
               "snapshots may have been expired — use startingVersion=earliest " +
               "for the full retained history"))
-      case None => sv.getOrElse("latest") match {
-        case "latest" => LakeCdfSource.currentVersion(root)
+      case _ => sv.getOrElse("latest") match {
+        case "latest" => LakeTable.currentVersion(root)
         case "earliest" =>
           val e = LakeCdfSource.earliestRetainedVersion(root)
           // v0 is the empty CREATE commit, so anchoring AT a retained v0 is
@@ -285,126 +274,116 @@ final class LakeCdfStream(root: String, streamSchema: StructType,
           // batch emits that state as inserts (initial snapshot load), THEN
           // tails — otherwise every row already present at the anchor would
           // silently never reach the consumer.
-          return LakeCdfOffset(e, baselineEmpty = e > 0L)
+          return (e, e > 0L)
         case n => n.toLong
       }
     }
-    LakeCdfOffset(v)
+    (v, false)
   }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  override def latestOffset(): Offset =
+  override def getOffset: Option[Offset] =
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) is the admission-control entry point")
 
-  /** Admission control: advance from `start` to the current table version,
-    * clamped by (a) `maxVersionsPerBatch`, (b) the Trigger.AvailableNow
-    * target pinned at query start, and (c) the first REBUCKET boundary —
-    * a micro-batch never spans a bucket-layout change (the boundary batch
-    * ends AT the rebucket version; its diff runs under the old layout
-    * against the pre-rebucket snapshot, which is logically identical). */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val startOff = start.asInstanceOf[LakeCdfOffset]
-    val from = startOff.version
-    var end = LakeCdfSource.currentVersion(root)
+  /** Admission control: advance from `start` (null before the first batch:
+    * the stream's anchor) to the current table version, clamped by (a)
+    * `maxVersionsPerBatch`, (b) the Trigger.AvailableNow target pinned at
+    * query start, and (c) the first REBUCKET boundary — a micro-batch never
+    * spans a bucket-layout change (the boundary batch ends AT the rebucket
+    * version; its diff runs under the old layout against the pre-rebucket
+    * snapshot, which is logically identical).
+    *
+    * The first call always returns an offset carrying the anchor, even when
+    * nothing is new: the (then empty) first batch pins a `latest` or
+    * timestamp anchor in the checkpoint, so a restarted query tails from
+    * where this one started instead of from the head at restart. */
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
+    val (from, baselineEmpty) =
+      if (start == null) anchor else (LakeCdfOffset(start).version, false)
+    var end = LakeTable.currentVersion(root)
     availableNowTarget.foreach(t => end = math.min(end, t))
     val cap = // saturating from + maxVersionsPerBatch (unlimited default overflows)
       if (maxVersionsPerBatch > Long.MaxValue - from) Long.MaxValue
       else from + maxVersionsPerBatch
-    end = math.min(end, cap)
-    // a pending empty-baseline anchor must emit ITS OWN version's contents
-    // even when no commit has landed since: returning the plain offset at
-    // the same version schedules the initial-load batch (the offsets differ
-    // in json), after which the flag is gone for good
-    if (end <= from) return LakeCdfOffset(from)
-    // a pending empty-baseline anchor never reads a diff base at `from`:
-    // the initial-load batch reads ONLY snap(end) (see planInputPartitions'
-    // baselineEmpty branch), so no rebucket boundary inside the window can
-    // matter — and probing the anchor version's ledger below would fail if
-    // a concurrent expire() retired it between initialOffset and this first
-    // batch, even though nothing in the batch needs that version. Skip the
-    // clamp walk entirely.
-    if (startOff.baselineEmpty) return LakeCdfOffset(end)
-    // clamp at the first layout change (rebucket counter bump) in (from, end]
+    end = math.max(from, math.min(end, cap))
+    // an empty-baseline anchor never reads a diff base: the initial-load
+    // batch reads ONLY its end version, so no rebucket boundary inside the
+    // window can matter — and probing the anchor version's ledger would fail
+    // if a concurrent expire() retired it meanwhile, even though nothing in
+    // the batch needs that version. Skip the clamp walk entirely.
+    if (!baselineEmpty) end = clampAtRebucket(from, end)
+    if (start == null) new LakeCdfOffset(end, Some(from), baselineEmpty)
+    else if (end == from) start
+    else new LakeCdfOffset(end)
+  }
+
+  /** `end`, or the first layout change (rebucket counter bump) in
+    * `(from, end]` */
+  private def clampAtRebucket(from: Long, end: Long): Long = {
+    if (end == from) return end
     val baseRebuckets = rebucketsAt(from)
-    var v = from + 1
-    while (v <= end) {
-      if (rebucketsAt(v) != baseRebuckets) return LakeCdfOffset(v)
-      v += 1
-    }
-    LakeCdfOffset(end)
+    (from + 1 to end).find(v => rebucketsAt(v) != baseRebuckets).getOrElse(end)
   }
 
   /** Counter-only probe for the admission clamp. A lagged stream's catch-up
-    * walks every version in its window; materializing (and driver-caching)
-    * the FULL snapshot of each — bucketFiles + fileStats maps — just to
-    * read one counter is the difference between a bounded scan and a
-    * driver-OOM at 10k retained versions. This parses the ledger's totals
-    * node only and caches one Long per version. The walk stays LINEAR, not
-    * a binary search: rollback() reverts totals to the restored snapshot's,
-    * so the counter is NOT monotone across a rollback commit. */
+    * walks every version in its window; materializing the FULL snapshot of
+    * each — bucketFiles + fileStats maps — just to read one counter is the
+    * difference between a bounded scan and a driver-OOM at 10k retained
+    * versions. This parses the ledger's totals node only and caches one
+    * Long per version. The walk stays LINEAR, not a binary search:
+    * rollback() reverts totals to the restored snapshot's, so the counter
+    * is NOT monotone across a rollback commit. */
   private val rebucketsCache = mutable.Map.empty[Long, Long]
   private def rebucketsAt(v: Long): Long = synchronized {
-    rebucketsCache.getOrElseUpdate(v,
-      snapCache.get(v).map(_.totals.getOrElse("rebuckets", 0L)).getOrElse {
-        val node =
-          try LakeCdfSource.offsetMapper.readTree(
-            Files.readAllBytes(Paths.get(root, "meta", s"v$v.json")))
-          catch {
-            case e: Exception => throw new IllegalStateException(
-              s"table version $v of $root is not readable — if the stream " +
-                "lagged past expire()'s retention window, raise keepVersions " +
-                "to cover the slowest changelog consumer", e)
-          }
-        val t = node.get("totals")
-        val c = if (t == null) null else t.get("rebuckets")
-        if (c == null) 0L else c.asLong()
-      })
+    rebucketsCache.getOrElseUpdate(v, {
+      val node =
+        try LakeCdfSource.offsetMapper.readTree(
+          Files.readAllBytes(Paths.get(root, "meta", s"v$v.json")))
+        catch { case e: Exception => throw unreadable(v, e) }
+      val t = node.get("totals")
+      val c = if (t == null) null else t.get("rebuckets")
+      if (c == null) 0L else c.asLong()
+    })
   }
 
-  override def reportLatestOffset(): Offset =
-    LakeCdfOffset(LakeCdfSource.currentVersion(root))
+  override def reportLatestOffset(): OffsetV2 =
+    new LakeCdfOffset(LakeTable.currentVersion(root))
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val startOff = start.asInstanceOf[LakeCdfOffset]
-    val from = startOff.version
-    val to = end.asInstanceOf[LakeCdfOffset].version
-    if (startOff.baselineEmpty) {
+  /** The window `(start, end]` as one streaming DataFrame whose rows come
+    * from the batch changelog, planned when the batch runs. */
+  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val to = LakeCdfOffset(end)
+    val from = start.map(LakeCdfOffset(_).version).orElse(to.anchor).getOrElse(
+      throw new IllegalStateException(
+        s"first batch offset ${to.json} of the changelog stream on $root " +
+          "carries no anchor — restart the query from a fresh checkpoint"))
+    val baselineEmpty = start.isEmpty && to.baselineEmpty
+    val rows = new DeferredRows(spark.sparkContext,
+      () => project(changes(from, to.version, baselineEmpty)).queryExecution.toRdd)
+    org.apache.spark.sql.graftshim.StreamBatchDF(spark, rows, schema, isStreaming = true)
+  }
+
+  private def changes(from: Long, to: Long, baselineEmpty: Boolean): DataFrame = {
+    if (baselineEmpty) {
       // INITIAL SNAPSHOT LOAD (startingVersion=earliest past an expired
       // v0): the anchor's pre-image no longer exists, so the old side is
-      // EMPTY — emit the full state at `to` as inserts (to == from when no
-      // commit landed since the anchor). No purge/rebucket guards apply:
+      // EMPTY — the untyped feed emits the resolved state at `to`
+      // (tombstone winners included, as a window from v0 would), the typed
+      // feed its live winners as inserts. No purge/rebucket guards apply:
       // with no prior consumer state there is nothing a purge or layout
       // change could invalidate.
-      val toSnap = snap(to)
-      val changed = toSnap.bucketFiles.collect {
-        case (b, fs) if fs.nonEmpty => b
-      }.toSeq.sorted
-      if (changed.isEmpty) return Array.empty
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val allRel = changed.flatMap(b => toSnap.bucketFiles(b)).distinct
-      val lens = LakeBucketSource.statLengths(root, allRel, conf)
-      return changed.zipWithIndex.map { case (b, idx) =>
-        val newFiles = toSnap.bucketFiles(b).map { rel =>
-          PartitionedFile(
-            partitionValues = InternalRow.empty,
-            filePath = org.apache.spark.paths.SparkPath.fromPathString(
-              LakeTable.dataPath(root, rel)),
-            start = 0L, length = lens(rel))
-        }.toArray
-        LakeCdfPartition(idx, b, Array.empty[PartitionedFile], newFiles,
-          newDirty = toSnap.morBuckets.contains(b)): InputPartition
-      }.toArray
+      return if (typed) table.readAt(to).withColumn(LakeCdfSource.ChangeTypeCol, lit("insert"))
+        else table.resolvedAt(to)
     }
-    if (to <= from) return Array.empty
     val fromSnap = snap(from)
+    val toSnap = snap(to)
     // a window ending AT a rebucket diffs against the pre-rebucket version:
     // the rebucket commit itself changed no logical rows (maintenance-only by
     // construction — asserted here), and (from, to-1] shares fromSnap's layout
-    val toSnap0 = snap(to)
-    val toSnap =
-      if (toSnap0.numBuckets == fromSnap.numBuckets) toSnap0
+    val upTo =
+      if (toSnap.numBuckets == fromSnap.numBuckets) to
       else {
         val pre = snap(to - 1)
         // the boundary commit must be a PURE rebucket before its pre-image
@@ -415,283 +394,59 @@ final class LakeCdfStream(root: String, streamSchema: StructType,
         // from this side). A rollback ACROSS a layout change also lands
         // here: its counters revert rather than increment.
         require(pre.numBuckets == fromSnap.numBuckets &&
-          toSnap0.totals.getOrElse("rebuckets", 0L) ==
+          toSnap.totals.getOrElse("rebuckets", 0L) ==
             pre.totals.getOrElse("rebuckets", 0L) + 1L &&
-          toSnap0.totals.getOrElse("clones", 0L) ==
+          toSnap.totals.getOrElse("clones", 0L) ==
             pre.totals.getOrElse("clones", 0L),
           s"micro-batch ($from, $to] spans a bucket-layout change that is not " +
             "a single pure rebucket boundary (a rollback across a rebucket, " +
             "or a layout-changing publish) — restart the stream from a " +
             "version at or after the layout change")
-        pre
+        to - 1
       }
-    // the TYPED stream is purge-tolerant (a fully-vanished key synthesizes a
-    // delete from the old side); the untyped stream would silently lose the
-    // purged tombstone rows, so it fails loudly
-    require(typed || allowPurgedWindow ||
-      toSnap.totals.getOrElse("tombstone_purges", 0L) ==
-        fromSnap.totals.getOrElse("tombstone_purges", 0L),
-      s"changelog window ($from, $to] spans a tombstone purge: deletes purged " +
-        "inside the window cannot surface to this consumer. Purge only after " +
-        "every changelog consumer has passed the deletes' versions, or set " +
-        "option allowPurgedWindow=true (or consume the typed stream)")
-    val changed = toSnap.bucketFiles.keys.filter { b =>
-      toSnap.bucketFiles.getOrElse(b, Nil) != fromSnap.bucketFiles.getOrElse(b, Nil)
-    }.toSeq.sorted
-    if (changed.isEmpty) return Array.empty
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val allRel = changed.flatMap(b =>
-      fromSnap.bucketFiles.getOrElse(b, Nil) ++ toSnap.bucketFiles.getOrElse(b, Nil)).distinct
-    val lens = LakeBucketSource.statLengths(root, allRel, conf)
-    def files(s: TableSnapshot, b: Int): Array[PartitionedFile] =
-      s.bucketFiles.getOrElse(b, Nil).map { rel =>
-        PartitionedFile(
-          partitionValues = InternalRow.empty,
-          filePath = org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
-          start = 0L, length = lens(rel))
-      }.toArray
-    changed.zipWithIndex.map { case (b, idx) =>
-      LakeCdfPartition(idx, b, files(fromSnap, b), files(toSnap, b),
-        newDirty = toSnap.morBuckets.contains(b)): InputPartition
-    }.toArray
+    // the TYPED feed is purge-tolerant (a fully-vanished key synthesizes a
+    // delete from the old side); the untyped one keeps readChanges' guard
+    if (typed) table.readChangesTyped(from, upTo)
+    else table.readChanges(from, upTo, allowPurgedWindow)
   }
 
-  /** Table-identity fields (keys, orders, tombstone column) are immutable
-    * for the table's lifetime — resolve them ONCE per stream instead of
-    * parsing a fresh head snapshot every micro-batch. */
-  private lazy val identitySnap: TableSnapshot =
-    snap(LakeCdfSource.currentVersion(root))
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    val s = identitySnap
-    val keyOrder = (s.keyCols ++ s.orderCols).toIndexedSeq
-    val tupleSchema = StructType(keyOrder.map(c => dataSchema(dataSchema.fieldIndex(c))))
-    val empty = StructType(Nil)
-    // untyped: the old side reads ONLY the LWW tuple columns
-    // (parquet-pruned — membership is all that's needed); typed: the old
-    // side must supply full preimage rows, so it reads the data schema
-    val oldFactory = LakeBucketSource.parquetReaderFactory(
-      spark, if (typed) dataSchema else tupleSchema,
-      if (typed) dataSchema else tupleSchema, empty, Array.empty)
-    val newFactory = LakeBucketSource.parquetReaderFactory(
-      spark, dataSchema, dataSchema, empty, Array.empty)
-    new LakeCdfReaderFactory(oldFactory, newFactory, dataSchema,
-      s.keyCols, s.orderCols, if (typed) s.tombstoneCol else None, typed)
-  }
-
-  override def deserializeOffset(json: String): Offset = {
-    val m = LakeCdfSource.offsetMapper.readTree(json)
-    LakeCdfOffset(m.get("version").asLong(), m.has("baseline"))
-  }
+  /** the changelog's (evolved) columns onto the stream's fixed schema */
+  private def project(df: DataFrame): DataFrame =
+    df.select(schema.fields.toSeq.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)
 
   override def commit(end: Offset): Unit = synchronized {
-    val v = end.asInstanceOf[LakeCdfOffset].version
-    snapCache.filterInPlace((k, _) => k >= v)
+    val v = LakeCdfOffset(end).version
     rebucketsCache.filterInPlace((k, _) => k >= v)
   }
 
   override def stop(): Unit = ()
 
-  override def metrics(latestConsumed: JOptional[Offset]): java.util.Map[String, String] = {
-    val cur = LakeCdfSource.currentVersion(root)
+  override def metrics(latestConsumed: JOptional[OffsetV2]): java.util.Map[String, String] = {
+    val cur = LakeTable.currentVersion(root)
     val consumed = if (latestConsumed.isPresent)
-      latestConsumed.get.asInstanceOf[LakeCdfOffset].version else cur
+      LakeCdfOffset(latestConsumed.get).version else cur
     Map(
       "tableVersion" -> cur.toString,
       "versionsBehind" -> math.max(0L, cur - consumed).toString).asJava
   }
+
+  override def toString: String = s"LakeCdfStream[$root]"
 }
 
-/** One CHANGED bucket = one input partition: old-version files (tuple
-  * columns only) + new-version files (full rows). */
-final case class LakeCdfPartition(index: Int, bucket: Int,
-    oldFiles: Array[PartitionedFile], newFiles: Array[PartitionedFile],
-    newDirty: Boolean) extends InputPartition
-
-final class LakeCdfReaderFactory(oldFactory: ParquetPartitionReaderFactory,
-    newFactory: ParquetPartitionReaderFactory, dataSchema: StructType,
-    keyCols: Seq[String], orderCols: Seq[String], tombstoneCol: Option[String],
-    typed: Boolean) extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    if (typed)
-      new LakeCdfTypedPartitionReader(p.asInstanceOf[LakeCdfPartition],
-        oldFactory, newFactory, dataSchema, keyCols, orderCols, tombstoneCol)
-    else
-      new LakeCdfPartitionReader(p.asInstanceOf[LakeCdfPartition],
-        oldFactory, newFactory, dataSchema, keyCols, orderCols)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-}
-
-/** Per-bucket changed-row reader. Memory bound: the old side holds one
-  * UnsafeRow of `keys… ++ orderCols…` per stored old-version row of THIS
-  * bucket (payload columns are never read); a merge-on-read new side
-  * additionally folds its winners (≤ one bucket — the compaction working
-  * set). Equality is byte-wise on the projected tuple, which is exactly the
-  * batch changelog's null-safe `<=>` semantics. */
-/** TYPED per-bucket changed-row reader (the streaming twin of
-  * `LakeTable.readChangesTyped`): folds BOTH versions of the bucket to
-  * their per-key LWW winners in the task, then classifies each key —
-  * insert / update_preimage + update_postimage / delete (the delete payload
-  * is the old winner, not the tombstone marker) — appending the
-  * `_change_type` column. Memory bound: two winner maps of one bucket (2×
-  * the compaction working set; the typed stream trades the untyped
-  * reader's tuple-pruned old side for exact preimages). */
-final class LakeCdfTypedPartitionReader(p: LakeCdfPartition,
-    oldFactory: ParquetPartitionReaderFactory,
-    newFactory: ParquetPartitionReaderFactory, dataSchema: StructType,
-    keyCols: Seq[String], orderCols: Seq[String], tombstoneCol: Option[String])
-    extends PartitionReader[InternalRow] {
-
-  private def bound(cols: Seq[String]) = cols.map { c =>
-    val i = dataSchema.fieldIndex(c)
-    BoundReference(i, dataSchema(i).dataType, dataSchema(i).nullable)
-  }
-  private val keyProj = UnsafeProjection.create(bound(keyCols))
-  private val orderProj = UnsafeProjection.create(bound(orderCols))
-  private val ord = RowOrdering.createNaturalAscendingOrdering(
-    orderCols.map(c => dataSchema(dataSchema.fieldIndex(c)).dataType))
-  private val tombIdx = tombstoneCol.map(dataSchema.fieldIndex)
-  private def isTomb(row: InternalRow): Boolean =
-    tombIdx.exists(i => !row.isNullAt(i) && row.getBoolean(i))
-
-  private def foldWinners(factory: ParquetPartitionReaderFactory,
-      files: Array[PartitionedFile]): java.util.HashMap[UnsafeRow, (UnsafeRow, InternalRow)] = {
-    val winners = new java.util.HashMap[UnsafeRow, (UnsafeRow, InternalRow)]()
-    if (files.nonEmpty) {
-      val r = factory.createReader(FilePartition(p.index, files))
-      try while (r.next()) {
-        val row = r.get()
-        val k = keyProj(row)
-        val o = orderProj(row)
-        val prev = winners.get(k)
-        if (prev == null || ord.compare(o, prev._1) > 0)
-          winners.put(k.copy(), (o.copy(), row.copy()))
-      } finally r.close()
-    }
-    winners
-  }
-
-  private val oldWinners = foldWinners(oldFactory, p.oldFiles)
-  private val newWinners = foldWinners(newFactory, p.newFiles)
-
-  private def withType(row: InternalRow, t: String): InternalRow =
-    new org.apache.spark.sql.catalyst.expressions.JoinedRow(row,
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(t))))
-
-  private val pending = new java.util.ArrayDeque[InternalRow]()
-  private val newIter = newWinners.entrySet().iterator()
-  // a LIVE old winner whose key carries no stored rows at all in the new
-  // version can only arise from a purge that emptied the bucket's files —
-  // surface it as a delete (the purge-tolerance the untyped stream lacks)
-  private lazy val vanishedIter = {
-    import scala.jdk.CollectionConverters._
-    oldWinners.entrySet().iterator().asScala
-      .filter(e => !newWinners.containsKey(e.getKey) && !isTomb(e.getValue._2))
-      .map(e => withType(e.getValue._2, "delete"))
-  }
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (pending.isEmpty && newIter.hasNext) {
-      val e = newIter.next()
-      val (nOrder, n) = e.getValue
-      val old = oldWinners.get(e.getKey)
-      val nLive = !isTomb(n)
-      if (old == null || isTomb(old._2)) {
-        if (nLive) pending.add(withType(n, "insert"))
-      } else if (!nLive) {
-        pending.add(withType(old._2, "delete"))
-      } else if (old._1 != nOrder) {
-        pending.add(withType(old._2, "update_preimage"))
-        pending.add(withType(n, "update_postimage"))
-      }
-    }
-    while (pending.isEmpty && vanishedIter.hasNext) pending.add(vanishedIter.next())
-    if (pending.isEmpty) false
-    else { current = pending.poll(); true }
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = ()
-}
-
-final class LakeCdfPartitionReader(p: LakeCdfPartition,
-    oldFactory: ParquetPartitionReaderFactory,
-    newFactory: ParquetPartitionReaderFactory, streamSchema: StructType,
-    keyCols: Seq[String], orderCols: Seq[String])
-    extends PartitionReader[InternalRow] {
-
-  private val tupleSchema = StructType(
-    (keyCols ++ orderCols).map(c => streamSchema(streamSchema.fieldIndex(c))))
-
-  // (keys…, orders…) tuples present in the OLD version of this bucket — the
-  // old reader's output schema IS the tuple schema, so this is an identity
-  // projection to a hashable UnsafeRow
-  private val oldTuples: java.util.HashSet[UnsafeRow] = {
-    val set = new java.util.HashSet[UnsafeRow]()
-    if (p.oldFiles.nonEmpty) {
-      val proj = UnsafeProjection.create(tupleSchema)
-      val r = oldFactory.createReader(FilePartition(p.index, p.oldFiles))
-      try while (r.next()) set.add(proj(r.get()).copy())
-      finally r.close()
-    }
-    set
-  }
-
-  private def bound(cols: Seq[String]) = cols.map { c =>
-    val i = streamSchema.fieldIndex(c)
-    BoundReference(i, streamSchema(i).dataType, streamSchema(i).nullable)
-  }
-  private val tupleProj = UnsafeProjection.create(bound(keyCols ++ orderCols))
-
-  private var newReader: PartitionReader[InternalRow] = _
-  private var foldedIter: Iterator[InternalRow] = _
-  private var current: InternalRow = _
-
-  if (p.newFiles.nonEmpty) {
-    newReader = newFactory.createReader(FilePartition(p.index, p.newFiles))
-    if (p.newDirty) {
-      // merge-on-read bucket: LWW-fold to winners in the task (ascending
-      // natural order on the order columns, matching the merge's max_by)
-      val keyProj = UnsafeProjection.create(bound(keyCols))
-      val orderProj = UnsafeProjection.create(bound(orderCols))
-      val ord = RowOrdering.createNaturalAscendingOrdering(
-        orderCols.map(c => streamSchema(streamSchema.fieldIndex(c)).dataType))
-      val winners = new java.util.HashMap[UnsafeRow, (UnsafeRow, InternalRow)]()
-      try while (newReader.next()) {
-        val row = newReader.get()
-        val k = keyProj(row)
-        val o = orderProj(row)
-        val prev = winners.get(k)
-        if (prev == null) winners.put(k.copy(), (o.copy(), row.copy()))
-        else if (ord.compare(o, prev._1) > 0) winners.put(k.copy(), (o.copy(), row.copy()))
-      } finally { newReader.close(); newReader = null }
-      foldedIter = winners.values().iterator().asScala.map(_._2)
-    }
-  }
-
-  override def next(): Boolean = {
-    if (foldedIter != null) {
-      while (foldedIter.hasNext) {
-        val row = foldedIter.next()
-        if (!oldTuples.contains(tupleProj(row))) { current = row; return true }
-      }
-      false
-    } else if (newReader != null) {
-      while (newReader.next()) {
-        val row = newReader.get()
-        if (!oldTuples.contains(tupleProj(row))) { current = row; return true }
-      }
-      false
-    } else false
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = if (newReader != null) { newReader.close(); newReader = null }
+/** A micro-batch's rows, built on first use: `getBatch` hands out this RDD
+  * and the changelog behind it is planned only when a job runs it (the
+  * first `partitions` call, made on the submitting thread). */
+private final class DeferredRows(sc: SparkContext,
+    @transient private val build: () => RDD[InternalRow])
+    extends RDD[InternalRow](sc, Nil) {
+  @transient private lazy val rows = build()
+  override protected def getDependencies: Seq[Dependency[_]] = Seq(new OneToOneDependency(rows))
+  override protected def getPartitions: Array[Partition] = rows.partitions
+  override protected def getPreferredLocations(split: Partition): Seq[String] =
+    rows.preferredLocations(split)
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+    firstParent[InternalRow].iterator(split, context)
 }

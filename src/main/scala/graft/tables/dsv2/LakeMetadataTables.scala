@@ -97,7 +97,7 @@ private[dsv2] object LakeMetadataTables {
     // exists (CREATE_NEW) before its bytes are complete — the VERSION
     // pointer only swaps after the json is durable, so capping at the
     // pointer is what makes listing-while-ingesting safe
-    val head = LakeCdfSource.currentVersion(root.toString)
+    val head = LakeTable.currentVersion(root.toString)
     val cap = upTo.fold(head)(math.min(_, head))
     val headTags = LakeTable.readSnapshot(root, head).tags
     retainedVersions(root)
@@ -189,9 +189,9 @@ private final class LakeMetadataTable(ident: Identifier, root: JPath,
       private lazy val data: Array[InternalRow] = kind match {
         case "history" => LakeMetadataTables.historyRows(root, versionPin)
         case "files" => LakeMetadataTables.filesRows(root,
-          versionPin.getOrElse(LakeCdfSource.currentVersion(root.toString)))
+          versionPin.getOrElse(LakeTable.currentVersion(root.toString)))
         case "partitions" => LakeMetadataTables.partitionsRows(root,
-          versionPin.getOrElse(LakeCdfSource.currentVersion(root.toString)))
+          versionPin.getOrElse(LakeTable.currentVersion(root.toString)))
       }
       override def rows(): Array[InternalRow] = data
       override def readSchema(): StructType = schema()

@@ -240,6 +240,27 @@ class FileStatsSpec extends SparkTestBase {
     assert(nulls === Set("a"))
   }
 
+  test("a merge that adds a column harvests its bounds in the files that " +
+      "introduce it, so a filter on the new column skips them") {
+    val t = LakeTable.createOrOpen(spark, Files.createTempDirectory("fstats-evo").toString,
+      StructType.fromDDL("k STRING, wv BIGINT"), Seq("k"), Seq("wv"), 4)
+    t.merge(Seq(("a", 1L)).toDF("k", "wv"), "b1")
+    val before = t.snapshot().bucketFiles.values.flatten.toSet
+    t.merge((0 until 20).map(i => (s"n$i", 2L, i.toLong)).toDF("k", "wv", "x"), "b2")
+    val snap = LakeTable.readSnapshot(java.nio.file.Paths.get(t.root), t.currentVersion())
+    val added = snap.bucketFiles.values.flatten.toSet -- before
+    assert(added.nonEmpty)
+    added.foreach { rel =>
+      val x = snap.fileStats(rel).cols.get("x")
+      assert(x.exists(c => c.min.isDefined && c.max.isDefined), s"$rel carries no x bounds")
+    }
+    // every x is below 20: a filter above that prunes every file the merge
+    // wrote, and only files from before the column existed are read
+    val prunedBefore = LakeBucketScan.statsPrunedFiles.get()
+    assert(bucketScanDF(t).filter(col("x") > 100L).count() === 0L)
+    assert(LakeBucketScan.statsPrunedFiles.get() - prunedBefore >= added.size)
+  }
+
   test("compaction and rebucket refresh the bounds they rewrite") {
     val t = newTable()
     t.merge(Seq(("a", 1L, "a1"), ("b", 2L, "b2")).toDF("k", "wv", "v"), "b1", mor = true)

@@ -708,9 +708,8 @@ class LakeTableSpec extends SparkTestBase {
       .as[(String, Long, String, Option[String])].collect().sortBy(_._1).toSeq
     assert(rows === Seq(("k0", 5L, "v0b", Some("e0")), ("x1", 1L, "x1v", Some("ex"))))
     // the plan moves nothing: no exchange on either side of the anti join —
-    // asserted on a DataFrame inspected OUTSIDE any conf scope, because
-    // readChanges pins its physical plan while the SPJ confs are active
-    // (callers act on the result lazily)
+    // both sides report the same bucket partitioning, and the plan is built
+    // here, by the caller, under the session's own confs
     val exec = t.readChanges(v1, v2).queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p

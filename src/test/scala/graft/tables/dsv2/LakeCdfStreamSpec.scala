@@ -5,6 +5,10 @@ import java.nio.file.Files
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.StreamBatchDF
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -47,6 +51,13 @@ class LakeCdfStreamSpec extends SparkTestBase {
     q.awaitTermination()
     batches.toSeq
   }
+
+  /** a source micro-batch's rows, re-wrapped as a batch DataFrame (a
+    * streaming one cannot be collected outside a running query) */
+  private def batchRows(batch: DataFrame): Seq[Row] =
+    StreamBatchDF(spark, batch.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd
+    }.get, batch.schema).collect().toSeq
 
   private def rowSet(rows: Seq[Row]): Set[Seq[Any]] = rows.map(_.toSeq.toIndexedSeq: Seq[Any]).toSet
 
@@ -391,28 +402,87 @@ class LakeCdfStreamSpec extends SparkTestBase {
     t.merge(Seq(("a", 1L, "a1"), ("b", 1L, "b1")).toDF("k", "wv", "v"), "b1")
     t.merge(Seq(("c", 1L, "c1")).toDF("k", "wv", "v"), "b2")
     t.expire(keepVersions = 2) // v0 gone -> earliest anchor is baselineEmpty
-    // drive the stream internals directly so the expire can land INSIDE the
-    // initialOffset -> first-batch window (a concurrent maintenance thread
+    // drive the source directly so the expire can land INSIDE the
+    // first-offset -> first-batch window (a concurrent maintenance thread
     // in production; not reachable deterministically through a drain)
-    val stream = new LakeCdfStream(t.root, StructType.fromDDL(schema.toDDL),
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("root", t.root, "startingVersion", "earliest")))
-    val anchor = stream.initialOffset().asInstanceOf[LakeCdfOffset]
-    assert(anchor.baselineEmpty && anchor.version > 0L)
-    // new commits land and the anchor version itself is retired
+    val source = new LakeCdfStream(spark, t.root, StructType.fromDDL(schema.toDDL),
+      CaseInsensitiveMap(Map("root" -> t.root, "startingVersion" -> "earliest")))
+    val end = LakeCdfOffset(source.latestOffset(null, ReadLimit.allAvailable()))
+    val anchor = end.anchor.get
+    assert(end.baselineEmpty && anchor > 0L && end.version === t.currentVersion())
+    // new commits land and the anchor version itself is retired; the window
+    // end stays retained
     t.merge(Seq(("d", 1L, "d1")).toDF("k", "wv", "v"), "b3")
-    t.expire(keepVersions = 1)
-    assert(!Files.exists(java.nio.file.Paths.get(t.root, "meta", s"v${anchor.version}.json")))
-    // the first batch must still plan: full state at the window end, no
+    t.expire(keepVersions = 2)
+    assert(!Files.exists(java.nio.file.Paths.get(t.root, "meta", s"v$anchor.json")))
+    // the first batch still runs: the full state at the window end, no
     // probe of the (expired) anchor version
-    val end = stream.latestOffset(anchor,
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-      .asInstanceOf[LakeCdfOffset]
-    assert(end.version === t.currentVersion() && !end.baselineEmpty)
-    val parts = stream.planInputPartitions(anchor, end)
-    assert(parts.nonEmpty)
-    val loaded = parts.collect { case p: LakeCdfPartition => p }
-    assert(loaded.forall(_.oldFiles.isEmpty)) // initial load: no diff base
-    assert(loaded.flatMap(_.newFiles).nonEmpty)
+    val batch = source.getBatch(None, end)
+    assert(batch.isStreaming)
+    val rows = batchRows(batch)
+    assert(rowSet(rows) === rowSet(t.readAt(end.version).collect().toSeq))
+    assert(rowSet(rows).map(_.head) === Set("a", "b", "c"))
+  }
+
+  test("a restart survives the expiry of its last committed window's start") {
+    val t = newTable()
+    val ckpt = Files.createTempDirectory("lakecdf-ckpt").toString
+    t.merge(Seq(("a", 1L, "a1")).toDF("k", "wv", "v"), "b1")
+    drain(t, ckpt, Map("startingVersion" -> "0"))
+    t.merge(Seq(("b", 1L, "b1")).toDF("k", "wv", "v"), "b2")
+    val v2 = t.currentVersion()
+    assert(drain(t, ckpt).flatMap(_._2).map(_.getString(0)) === Seq("b"))
+    // the last committed window is (v1, v2]; retire v1. A restarted query
+    // asks for that window once more and drops it — it must not need v1
+    t.merge(Seq(("c", 1L, "c1")).toDF("k", "wv", "v"), "b3")
+    t.expire(keepVersions = 2)
+    assert(!Files.exists(java.nio.file.Paths.get(t.root, "meta", s"v${v2 - 1}.json")))
+    assert(drain(t, ckpt).flatMap(_._2).map(_.getString(0)) === Seq("c"))
+  }
+
+  test("equal-ordering ties across merge-on-read layers resolve exactly as " +
+      "the batch changelog and the keyed read resolve them") {
+    val t = newTable()
+    // two MOR layers carrying the SAME (k, wv) with different payloads
+    t.merge(Seq(("k", 1L, "first"), ("o", 1L, "o1")).toDF("k", "wv", "v"), "b1", mor = true)
+    t.merge(Seq(("k", 1L, "second")).toDF("k", "wv", "v"), "b2", mor = true)
+    val v = t.currentVersion()
+    val untyped = drain(t, Files.createTempDirectory("lakecdf-tie").toString,
+      Map("startingVersion" -> "0")).flatMap(_._2)
+    val typed = drain(t, Files.createTempDirectory("lakecdf-tie-typed").toString,
+      Map("startingVersion" -> "0", "typed" -> "true")).flatMap(_._2)
+    assert(rowSet(untyped) === rowSet(t.readChanges(0L, v).collect().toSeq))
+    assert(rowSet(typed) === rowSet(t.readChangesTyped(0L, v).collect().toSeq))
+    val point = t.read(Map("k" -> "k")).collect().map(_.toSeq).toSeq
+    assert(point.size === 1)
+    assert(untyped.filter(_.getString(0) == "k").map(_.toSeq) === point)
+    assert(typed.filter(_.getString(0) == "k").map(_.toSeq.dropRight(1)) === point)
+  }
+
+  test("query progress reports the source's tableVersion and versionsBehind") {
+    val t = newTable()
+    (1 to 3).foreach { i =>
+      t.merge(Seq((s"k$i", i.toLong, s"v$i")).toDF("k", "wv", "v"), s"b$i")
+    }
+    val head = t.currentVersion()
+    val q = t.readChangeStream(Map("startingVersion" -> "0", "maxVersionsPerBatch" -> "1"))
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("lakecdf-metrics").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: DataFrame, _: Long) => df.count(); () }
+      .start()
+    q.awaitTermination()
+    val progress = q.recentProgress.toSeq
+    assert(progress.size >= 3)
+    val behind = progress.map { p =>
+      val m = p.sources(0).metrics
+      assert(m.get("tableVersion") === head.toString)
+      val end = LakeCdfSource.offsetMapper.readTree(p.sources(0).endOffset).get("version").asLong()
+      assert(m.get("versionsBehind") === (head - end).toString)
+      m.get("versionsBehind").toLong
+    }
+    // one version per batch: the first batch trails the head, the last none
+    assert(behind.head === head - 1L)
+    assert(q.lastProgress.sources(0).metrics.get("versionsBehind") === "0")
   }
 }
