@@ -179,6 +179,9 @@ final class LakeTable private (
   spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
   val BucketCol = "_gbucket"
+  /** a grouped bucket scan's group column ([[MergePlan.BucketGroups]]);
+    * dropped before every write */
+  private val GroupCol = graft.tables.dsv2.LakeBucketSource.GroupCol
   val SubSplitCol = "_gsubsplit"
   /** merge-internal marker: 1 on batch rows, max()'d per key group — its
     * sum over the merged output = distinct batch keys = upserts, counted on
@@ -268,17 +271,20 @@ final class LakeTable private (
 
   /** ZERO-SHUFFLE resolve of dirty (merge-on-read) buckets: the layers of a
     * bucket are co-located by construction, so LWW resolution grouped on
-    * `(keys…, bucket)` over the partitioning-reporting scan plans NO
-    * exchange — each dirty bucket is one task that reads its layers and
-    * resolves in place (the same shape as [[compactBuckets]]). The previous
+    * `(keys…, bucket, group)` over the grouped bucket scan plans NO
+    * exchange — each group of dirty buckets is one task that reads their
+    * layers and resolves in place (the same shape as [[compactBuckets]]);
+    * a small read packs its dirty buckets into at most `cores` groups,
+    * a big one keeps one per bucket ([[MergePlan.groups]]). The previous
     * form (plain parquet read + keys-only dedup) hashed EVERY dirty-bucket
     * row through an exchange on every read — at a MOR-heavy 100 TB stream
     * with maxLayers of debt, that re-shuffles the whole dirty region per
     * read. */
   private def morResolvedDF(s: TableSnapshot, dirtySorted: Seq[Int],
       narrow: DataFrame => DataFrame = identity): DataFrame =
-    Dedup.latestByKey(narrow(bucketScanDF(s, dirtySorted)), s.keyCols :+ BucketCol, s.orderCols)
-      .drop(BucketCol)
+    Dedup.latestByKey(narrow(groupScanDF(s, scanGroups(Seq(s), dirtySorted))),
+      s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
+      .drop(BucketCol, GroupCol)
 
   /** CHANGELOG READ (CDC egress, ≙ Iceberg incremental scan): every row
     * NEW OR UPDATED between two retained versions — the rows a downstream
@@ -300,12 +306,13 @@ final class LakeTable private (
     *     IDENTICAL in both snapshots cannot have changed; only differing
     *     buckets are read AT ALL (a delta touching k% of buckets reads k%
     *     of the table, twice);
-    *  2. both sides come from the partitioning-reporting scan pinned to
-    *     their version, MOR layers LWW-resolved in place (the grouping
-    *     rides the scan partitioning);
+    *  2. both sides come from the grouped bucket scan pinned to their
+    *     version, with the SAME bucket groups (sized by both sides' stored
+    *     rows, [[MergePlan.scanGroups]]), MOR layers LWW-resolved in place
+    *     (the grouping rides the scan partitioning);
     *  3. changed rows = new-side LEFT ANTI old-side on
-    *     (keys…, orderCols…, bucket) — a storage-partitioned join between
-    *     two scans of the SAME bucket layout: Catalyst aligns them with no
+    *     (keys…, orderCols…, bucket, group) — a storage-partitioned join
+    *     between two scans of the SAME layout: Catalyst aligns them with no
     *     exchange on either side.
     */
   def readChanges(fromVersion: Long, toVersion: Long,
@@ -359,20 +366,21 @@ final class LakeTable private (
     if (changed.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
+    val groups = scanGroups(Seq(newSnap, oldSnap), changed)
     def side(s: TableSnapshot): DataFrame = {
-      val scan = bucketScanDF(s, changed)
+      val scan = groupScanDF(s, groups)
       // align the (possibly narrower) old schema onto the new one so the
       // anti-join columns line up; Project preserves the partitioning
       val aligned = scan.select(newSchema.fieldNames.toSeq.map { c =>
         if (scan.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
         else lit(null).cast(newSchema(c).dataType).as(c)
-      } :+ col(BucketCol): _*)
+      } ++ Seq(col(BucketCol), col(GroupCol)): _*)
       if (changed.exists(s.morBuckets.contains))
-        Dedup.latestByKey(aligned, s.keyCols :+ BucketCol, s.orderCols)
+        Dedup.latestByKey(aligned, s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
       else aligned
     }
-    // the bucket column joins with plain equality (non-null by
-    // construction, and it must stay a direct key so the scans'
+    // the bucket and group columns join with plain equality (non-null by
+    // construction, and the group must stay a direct key so the scans'
     // KeyGroupedPartitioning aligns); data columns null-safely. Both sides
     // report the same KeyGroupedPartitioning, so no exchange is planned
     // whatever the session's shuffle-partition count, and the session-wide
@@ -380,9 +388,10 @@ final class LakeTable private (
     // caller derives or re-plans the lazy result.
     side(newSnap).alias("n")
       .join(side(oldSnap).alias("o"),
-        antiCond("n", "o", newSnap.keyCols ++ newSnap.orderCols, plainEq = Seq(BucketCol)),
+        antiCond("n", "o", newSnap.keyCols ++ newSnap.orderCols,
+          plainEq = Seq(BucketCol, GroupCol)),
         "left_anti")
-      .drop(BucketCol)
+      .drop(BucketCol, GroupCol)
   }
 
   /** TYPED CHANGELOG (≙ Delta Change Data Feed): every row-level change
@@ -408,8 +417,8 @@ final class LakeTable private (
     * the old side), so no guard is needed.
     *
     * Scale shape: identical to [[readChanges]] — metadata bucket-diff
-    * pruning, both sides LWW-resolved riding the partitioning-reporting
-    * scan, then ONE storage-partitioned FULL-OUTER join per changed bucket
+    * pruning, both sides LWW-resolved riding the grouped bucket scan, then
+    * ONE storage-partitioned FULL-OUTER join per group of changed buckets
     * (zero exchanges on either side; the same join shape as the merge
     * itself) classified and exploded in place. Across a rebucket boundary it
     * falls back to a logical key join (one shuffle per side, correct).
@@ -426,11 +435,11 @@ final class LakeTable private (
       df.select(newSchema.fieldNames.toSeq.map { c =>
         if (df.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
         else lit(null).cast(newSchema(c).dataType).as(c)
-      } ++ df.columns.toSeq.filter(_ == BucketCol).map(col): _*)
+      } ++ df.columns.toSeq.filter(c => c == BucketCol || c == GroupCol).map(col): _*)
 
     // one winner row per key per side, packed into a struct so the join's
-    // output stays unambiguous; `extraKey` keeps the bucket a join key on
-    // the storage-partitioned path
+    // output stays unambiguous; `extraKey` keeps the bucket and group join
+    // keys on the storage-partitioned path
     def pack(winners: DataFrame, as: String, extraKey: Seq[String]): DataFrame =
       winners.select((keys ++ extraKey).map(col) :+
         struct(newSchema.fieldNames.toSeq.map(col): _*).as(as): _*)
@@ -475,18 +484,19 @@ final class LakeTable private (
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
     }
+    val groups = scanGroups(Seq(newSnap, oldSnap), changed)
     def side(s: TableSnapshot, as: String): DataFrame = {
-      val aligned = align(bucketScanDF(s, changed))
+      val aligned = align(groupScanDF(s, groups))
       val winners =
         if (changed.exists(s.morBuckets.contains))
-          Dedup.latestByKey(aligned, s.keyCols :+ BucketCol, s.orderCols)
+          Dedup.latestByKey(aligned, s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
         else aligned
-      pack(winners, as, Seq(BucketCol))
+      pack(winners, as, Seq(BucketCol, GroupCol))
     }
     val n = side(newSnap, "_nrow").alias("n")
     val o = side(oldSnap, "_orow").alias("o")
-    val cond = (keys.map(k => col(s"n.$k") <=> col(s"o.$k")) :+
-      (col(s"n.$BucketCol") === col(s"o.$BucketCol"))).reduce(_ && _)
+    val cond = (keys.map(k => col(s"n.$k") <=> col(s"o.$k")) ++
+      Seq(BucketCol, GroupCol).map(c => col(s"n.$c") === col(s"o.$c"))).reduce(_ && _)
     classified(n.join(o, cond, "full_outer"))
   }
 
@@ -537,11 +547,11 @@ final class LakeTable private (
       val dirty = s.morBuckets.toSet
       val cleanRows = s.bucketRows.collect { case (b, n) if !dirty.contains(b) => n }.sum
       // logical rows in a dirty bucket = its distinct key groups; the
-      // distinct's grouping includes the bucket so it rides the scan's
-      // partitioning (zero exchange), and column pruning shrinks the
+      // distinct's grouping includes the bucket group so it rides the
+      // scan's partitioning (zero exchange), and column pruning shrinks the
       // parquet read to the key columns alone — no payload bytes touched
-      cleanRows + bucketScanDF(s, s.morBuckets.sorted)
-        .select((s.keyCols :+ BucketCol).map(col): _*)
+      cleanRows + groupScanDF(s, scanGroups(Seq(s), s.morBuckets.sorted))
+        .select((s.keyCols ++ Seq(BucketCol, GroupCol)).map(col): _*)
         .distinct().count()
     }
   }
@@ -727,7 +737,9 @@ final class LakeTable private (
     * as in [[read]]). */
   def readBucketed(): DataFrame = {
     val s = snapshot()
-    val scan = bucketScanDF(s, 0 until s.numBuckets)
+    // the per-bucket scan (`KeyGroupedPartitioning(identity(_gbucket))`,
+    // one task per bucket): the layout a co-located join aligns on
+    val scan = graft.tables.dsv2.LakeBucketSource.scan(spark, root, s, 0 until s.numBuckets, None)
     // CLEAN table (no merge-on-read debt): every bucket is post-LWW, one
     // row per key — serve the scan DIRECTLY. Besides skipping a no-op agg,
     // this leaves the scan immediately under any join the caller writes, so
@@ -809,27 +821,39 @@ final class LakeTable private (
   private def bucketExpr(keyCols: Seq[String], numBuckets: Int) =
     pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int")
 
-  /** Partitioning-reporting scan over `buckets` of snapshot `snap` (DSv2,
-    * `KeyGroupedPartitioning(identity(_gbucket))`) — the storage-partitioned
-    * read path. Two such scans join with no exchange under the session-wide
-    * SPJ confs; a join that shuffles its other side INTO this layout needs
-    * [[withSpjConfs]]' shuffle-partition cap around plan + execution. */
-  private def bucketScanDF(snap: TableSnapshot, buckets: Seq[Int]): DataFrame =
-    spark.read.format(graft.tables.dsv2.LakeBucketSource.Name)
-      .option("root", root)
-      .option("version", snap.version.toString)
-      .option("buckets", buckets.mkString(","))
-      .load()
+  /** The GROUPED bucket scan every engine-internal read goes through
+    * (`KeyGroupedPartitioning(identity(_ggroup))`, one task per group of
+    * `groups`). Two such scans with the same groups join with no exchange
+    * under the session-wide SPJ confs; a join that shuffles its other side
+    * INTO this layout needs [[withSpjConfs]]' shuffle-partition cap (the
+    * group count) around plan + execution. */
+  private def groupScanDF(snap: TableSnapshot, groups: MergePlan.BucketGroups): DataFrame =
+    graft.tables.dsv2.LakeBucketSource.scan(spark, root, snap, groups.buckets, Some(groups))
+
+  /** [[MergePlan.scanGroups]] of a scan over non-empty `buckets`. */
+  private def scanGroups(snaps: Seq[TableSnapshot], buckets: Seq[Int]): MergePlan.BucketGroups =
+    MergePlan.scanGroups(snaps, buckets, spark.sparkContext.defaultParallelism)
+      .getOrElse(throw new IllegalArgumentException("a bucket scan needs buckets"))
+
+  /** `_ggroup` of a row of bucket `_gbucket` under `groups` — one array
+    * lookup; -1 for a bucket outside the groups. Lets a batch side shuffle
+    * into a grouped scan's partitioning. */
+  private def groupExpr(groups: MergePlan.BucketGroups, numBuckets: Int): Column = {
+    val byBucket = Array.fill(numBuckets)(-1)
+    groups.of.foreach { case (b, g) => byBucket(b) = g }
+    element_at(typedLit(byBucket), col(BucketCol) + 1)
+  }
 
   /** Run `f` with storage-partitioned-join planning enabled (scan-reported
     * KeyGroupedPartitioning honored; the non-aligned side of a join shuffled
     * INTO it). Session confs are restored afterwards — callers outside the
     * merge see their own settings.
     *
-    * `scanPartitions` (the bucket count of the participating scan) caps
-    * `spark.sql.shuffle.partitions` for the duration: EnsureRequirements
-    * picks the candidate shuffle spec with the MOST partitions, so a
-    * session whose shuffle-partition count exceeds the scan's bucket count
+    * `scanPartitions` (the partition count of the participating scan: its
+    * bucket group count) caps `spark.sql.shuffle.partitions` for the
+    * duration: EnsureRequirements picks the candidate shuffle spec with the
+    * MOST partitions, so a session whose shuffle-partition count exceeds
+    * the scan's partition count
     * would win the contest for the hash side and silently re-shuffle the
     * TABLE side — the exact plan this path exists to avoid (ties and
     * smaller counts choose the scan's KeyGroupedPartitioning; probed, and
@@ -1015,17 +1039,17 @@ final class LakeTable private (
             numSalts = math.max(16, cores))
           else observed
         // dedup rides the one (bucket, subsplit) exchange exactly like the
-        // classic plan; partition count mirrors it too (numBuckets ×
-        // writeFactor ≥ waveFactor·cores — fewer, larger sort partitions
-        // measurably hurt the narrow-parallelism levels)
+        // classic plan; partition count mirrors it too (a big write:
+        // numBuckets × writeFactor ≥ waveFactor·cores — fewer, larger sort
+        // partitions measurably hurt the narrow-parallelism levels; a small
+        // one: its min(numBuckets, cores) bucket groups)
         Dedup.latestByKey(
-            base.repartition(math.max(1, snap.numBuckets * plan.writeFactor),
-              col(BucketCol), col(SubSplitCol)),
+            base.repartition(plan.writePartitions, col(BucketCol), col(SubSplitCol)),
             snap.keyCols ++ Seq(BucketCol, SubSplitCol), snap.orderCols)
           .drop(SubSplitCol)
       case MergePlan.SpjCow =>
         // existing side unshuffled (see buildMergedSpj)
-        buildMergedSpj(snap, evolved, statsTouched, alignedBatch, plan.salted)
+        buildMergedSpj(snap, evolved, plan.groups.get, alignedBatch, plan.salted)
           .observe(obs, upsertAgg)
           .drop(SrcFlagCol)
       case MergePlan.ClassicCow =>
@@ -1038,8 +1062,8 @@ final class LakeTable private (
           if (touchedFiles.isEmpty)
             align(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema), evolved)
           else align(spark.read.schema(curSchema).parquet(touchedFiles: _*), evolved)
-        buildMerged(existing, alignedBatch, snap, statsTouched.size,
-            plan.writeFactor, plan.salted, withSrcFlag = true)
+        buildMerged(existing, alignedBatch, snap, plan.writePartitions, plan.writeFactor,
+            plan.salted, withSrcFlag = true)
           .observe(obs, upsertAgg)
           .drop(SubSplitCol, SrcFlagCol)
     }
@@ -1047,7 +1071,8 @@ final class LakeTable private (
     val committed = stagedCommit(snap, evolved, "commit", snap.sortOrder,
         snap.targetFileRows, statsFirst = snap.sortOrder)(sink =>
       withSmallPlanConfs(plan.small) {
-        if (plan.route == MergePlan.SpjCow) withSpjConfs(Some(statsTouched.size))(sink(output()))
+        if (plan.route == MergePlan.SpjCow)
+          withSpjConfs(plan.groups.map(_.count))(sink(output()))
         else sink(output())
       }) { staged =>
       val m = obs.get
@@ -1217,19 +1242,22 @@ final class LakeTable private (
     * rewrite of every dirty bucket). Compaction is recorded in `totals` only
     * — it is maintenance, not a batch, so it neither consumes a slot of the
     * bounded `appliedBatches` replay-detection window nor appears in batch
-    * lineage. */
+    * lineage. The buckets run in [[MergePlan.scanGroups]] groups: a small
+    * compaction in at most `cores` tasks, a big one in one task per bucket;
+    * either way each bucket gets one file. */
   def compactBuckets(buckets: Seq[Int]): Int = {
     val snap = snapshot()
     val dirty = buckets.filter(snap.morBuckets.contains).distinct.sorted
     if (dirty.isEmpty) return 0
     // ZERO-SHUFFLE compaction: the layers of each bucket are already
     // co-located by construction, so the LWW resolution grouped on
-    // (keys…, bucket) rides the scan's KeyGroupedPartitioning — each dirty
-    // bucket is one task that reads its layers, resolves, and writes ONE
-    // defragmented file. No exchange at any scale.
+    // (keys…, bucket, group) rides the scan's KeyGroupedPartitioning — each
+    // group of dirty buckets is one task that reads their layers, resolves,
+    // and writes ONE defragmented file per bucket. No exchange at any scale.
     rewriteBuckets(snap, dirty, snap.sortOrder, snap.targetFileRows, snap.sortOrder,
         mayEmpty = false)((n, _) => Seq("compactions" -> 1L, "compacted_buckets" -> n.toLong)) {
-      Dedup.latestByKey(bucketScanDF(snap, dirty), snap.keyCols :+ BucketCol, snap.orderCols)
+      groups => Dedup.latestByKey(groupScanDF(snap, groups),
+        snap.keyCols ++ Seq(BucketCol, GroupCol), snap.orderCols)
     }
   }
 
@@ -1253,16 +1281,18 @@ final class LakeTable private (
     val tc = snap.tombstoneCol.get
     val all = snap.bucketFiles.collect { case (b, fs) if fs.nonEmpty => b }.toSeq.sorted
     if (all.isEmpty) return 0
-    val candidates = withSpjConfs(Some(all.size)) {
-      bucketScanDF(snap, all).filter(coalesce(col(tc), lit(false)))
-        .select(col(BucketCol)).distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val allGroups = scanGroups(Seq(snap), all)
+    val candidates = withSpjConfs(Some(allGroups.count)) {
+      groupScanDF(snap, allGroups).filter(coalesce(col(tc), lit(false)))
+        .select(col(BucketCol), col(GroupCol)).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
     }
     if (candidates.isEmpty) return 0
     // a bucket whose every key was tombstoned writes NO file
     rewriteBuckets(snap, candidates, snap.sortOrder, snap.targetFileRows, snap.sortOrder,
         mayEmpty = true)((_, dropped) => Seq("tombstone_purges" -> 1L, "purged_rows" -> dropped)) {
-      visible(snap, Dedup.latestByKey(bucketScanDF(snap, candidates),
-        snap.keyCols :+ BucketCol, snap.orderCols))
+      groups => visible(snap, Dedup.latestByKey(groupScanDF(snap, groups),
+        snap.keyCols ++ Seq(BucketCol, GroupCol), snap.orderCols))
     }
   }
 
@@ -1277,8 +1307,8 @@ final class LakeTable private (
     * into [[TableSnapshot.fileStats]] prunes a range predicate down to the
     * few files whose slice overlaps it — instead of every file of every
     * bucket the key hash happens to spread the range over. The scan is the
-    * same zero-shuffle storage-partitioned read compaction uses (one task
-    * per bucket, resolve + local sort, NO exchange at any scale); the file
+    * same zero-shuffle grouped read compaction uses (one task per bucket
+    * group, resolve + local sort, NO exchange at any scale); the file
     * split is the writer's own `maxRecordsPerFile` cut, which preserves the
     * task-local sort order across the emitted files. OCC exactly like
     * compaction: a bucket touched by a racing ingest merge drops out of
@@ -1292,7 +1322,7 @@ final class LakeTable private (
     * bounds the curve normalizes against come from the snapshot's own
     * per-file statistics (driver-side constants, zero extra I/O) and the
     * z-value itself is a codegen'd column expression, so the rewrite plan
-    * is IDENTICAL to the plain sort's: one task per bucket, resolve +
+    * is IDENTICAL to the plain sort's: one task per bucket group, resolve +
     * task-local sort, no exchange at any scale.
     * @return buckets rewritten */
   def cluster(sortCols: Seq[String], maxRowsPerFile: Long = 0L,
@@ -1341,14 +1371,14 @@ final class LakeTable private (
     val sortBy = if (zorder) Seq(ZValCol) else sortCols
     // explicit cap wins; otherwise the table's persisted write cap applies
     val cap = if (maxRowsPerFile > 0L) maxRowsPerFile else snap.targetFileRows
-    // resolve rides the KGP scan (one partition per bucket), the sort is
+    // resolve rides the KGP scan (one task per bucket group), the sort is
     // task-local (sortWithinPartitions never exchanges), and the write's
     // required ordering (partition col first) is a satisfied prefix of
     // (bucket, sortBy…) — Catalyst inserts no extra sort either
     rewriteBuckets(snap, todo, sortBy, cap, statsFirst = sortCols, mayEmpty = false)(
-        (n, _) => Seq("clusterings" -> 1L, "clustered_buckets" -> n.toLong)) {
-      val resolved = Dedup.latestByKey(bucketScanDF(snap, todo),
-        snap.keyCols :+ BucketCol, snap.orderCols)
+        (n, _) => Seq("clusterings" -> 1L, "clustered_buckets" -> n.toLong)) { groups =>
+      val resolved = Dedup.latestByKey(groupScanDF(snap, groups),
+        snap.keyCols ++ Seq(BucketCol, GroupCol), snap.orderCols)
       if (!zorder) resolved
       else {
         // dimension bounds folded from the snapshot's per-file stats of
@@ -1365,8 +1395,9 @@ final class LakeTable private (
 
   /** The shared body of the three maintenance rewrites ([[compactBuckets]],
     * [[purgeTombstones]], [[clusterBuckets]]): one [[stagedCommit]] of
-    * `rewrite` (the resolved rows of `todo`, built inside the small-op and
-    * storage-partitioned conf windows) that REPLACES each rewritten
+    * `rewrite(groups)` (the resolved rows of `todo` over the grouped scan of
+    * `groups` — [[MergePlan.scanGroups]] of `todo` — built inside the
+    * small-op and storage-partitioned conf windows) that REPLACES each rewritten
     * bucket's file list — with an empty list when it wrote nothing, which
     * only a purge of an all-tombstone bucket (`mayEmpty`) or a zero-row
     * bucket does. `tally(buckets rewritten, rows dropped)` gives the
@@ -1381,12 +1412,14 @@ final class LakeTable private (
     * @return buckets rewritten */
   private def rewriteBuckets(snap: TableSnapshot, todo: Seq[Int], sortBy: Seq[String],
       cap: Long, statsFirst: Seq[String], mayEmpty: Boolean)(
-      tally: (Int, Long) => Seq[(String, Long)])(rewrite: => DataFrame): Int = {
+      tally: (Int, Long) => Seq[(String, Long)])(
+      rewrite: MergePlan.BucketGroups => DataFrame): Int = {
     var valid: Seq[Int] = todo
+    val groups = scanGroups(Seq(snap), todo)
     val committed = stagedCommit(snap, StructType.fromDDL(snap.schemaDdl), "maint",
         sortBy, cap, statsFirst)(sink =>
       withSmallPlanConfs(MergePlan.storedSmall(snap, todo)) {
-        withSpjConfs(Some(todo.size))(sink(rewrite))
+        withSpjConfs(Some(groups.count))(sink(rewrite(groups)))
       }) { staged =>
       Publish(required = !mayEmpty && todo.exists(b => snap.bucketRows.getOrElse(b, 0L) > 0),
         rebase = _.numBuckets == snap.numBuckets,
@@ -1429,9 +1462,13 @@ final class LakeTable private (
     * (its own shuffle, hot key spread over the salt space, ≤numSalts
     * survivors per key), so the bucket exchange then carries only collapsed
     * rows. Two shuffles instead of one — pay it only when the stream is
-    * actually skewed (SkewBench measures the crossover). */
+    * actually skewed (SkewBench measures the crossover).
+    *
+    * `partitions` is the bucket exchange's width ([[MergePlan.writePartitions]]:
+    * touched buckets × `writeFactor` sub-splits, or a small merge's bucket
+    * group count). */
   private[graft] def buildMerged(existing: DataFrame, alignedBatch: DataFrame,
-      snap: TableSnapshot, touchedCount: Int, writeFactor: Int, salted: Boolean,
+      snap: TableSnapshot, partitions: Int, writeFactor: Int, salted: Boolean,
       withSrcFlag: Boolean = false): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
     val base0 =
@@ -1450,7 +1487,7 @@ final class LakeTable private (
     val unioned = base
       .withColumn(BucketCol, bucketExpr(snap.keyCols, snap.numBuckets))
       .withColumn(SubSplitCol, pmod(xxhash64(snap.keyCols.map(col): _*), lit(writeFactor)).cast("int"))
-      .repartition(math.max(1, touchedCount * writeFactor), col(BucketCol), col(SubSplitCol))
+      .repartition(partitions, col(BucketCol), col(SubSplitCol))
     if (withSrcFlag)
       Dedup.latestByKeyCarryMax(unioned, snap.keyCols ++ Seq(BucketCol, SubSplitCol),
         snap.orderCols, SrcFlagCol)
@@ -1460,16 +1497,18 @@ final class LakeTable private (
 
   /** The STORAGE-PARTITIONED merge plan (SURVEY.md §7.5, built on
     * [[graft.tables.dsv2.LakeBucketSource]]): the existing side arrives from
-    * a scan that REPORTS KeyGroupedPartitioning over the bucket ids, so the
-    * full-outer LWW resolution join clusters on `(keys…, bucket)` WITHOUT
-    * shuffling a single existing row — only the (small) deduped batch side
-    * is exchanged into the scan's partitioning. This is the plan shape that
-    * survives 100×: a delta brushing k% of the table streams those buckets
-    * task-locally instead of pushing them through the wire.
+    * the grouped bucket scan, which REPORTS KeyGroupedPartitioning over the
+    * bucket group ids, so the full-outer LWW resolution join clusters on
+    * `(keys…, bucket, group)` WITHOUT shuffling a single existing row — only
+    * the (small) deduped batch side, which computes the same group
+    * ([[groupExpr]]), is exchanged into the scan's partitioning. This is
+    * the plan shape that survives 100×: a delta brushing k% of the table
+    * streams those buckets task-locally instead of pushing them through the
+    * wire.
     *
-    *   existing(scan, KGP[bucket], MOR layers LWW-resolved in place — the
-    *                                grouping rides the scan partitioning)
-    *      ⟗ full_outer on (keys…, bucket)
+    *   existing(scan, KGP[group], MOR layers LWW-resolved in place — the
+    *                               grouping rides the scan partitioning)
+    *      ⟗ full_outer on (keys…, bucket, group)
     *   batch(dedup max_by — its agg exchange + the KGP exchange carry only
     *         batch rows)
     *   → per-key winner by (orderCols) struct comparison, batch wins ties
@@ -1477,43 +1516,46 @@ final class LakeTable private (
     *     union-path max_by leaves exact-tie winners unspecified, so the two
     *     paths agree wherever the classic path is deterministic)
     *
-    * Write parallelism = touched buckets (one task each); eligibility is
-    * gated in [[MergePlan.decide]]. */
+    * Write parallelism = the touched buckets' groups (one task each);
+    * eligibility and groups are decided in [[MergePlan.decide]]. */
   private[graft] def buildMergedSpj(snap: TableSnapshot, evolved: StructType,
-      touched: Seq[Int], alignedBatch: DataFrame, salted: Boolean): DataFrame = {
+      groups: MergePlan.BucketGroups, alignedBatch: DataFrame, salted: Boolean): DataFrame = {
     val cols = evolved.fieldNames.toSeq
-    val existing0 = bucketScanDF(snap, touched)
+    val existing0 = groupScanDF(snap, groups)
+    val bucketCols = Seq(BucketCol, GroupCol)
     // align the scan (current schema) to the evolved schema, keeping the
-    // bucket column — a Project preserves the scan's reported partitioning
+    // bucket and group columns — a Project preserves the scan's reported
+    // partitioning
     val exAligned = existing0.select(cols.map { c =>
       if (existing0.columns.contains(c)) col(c).cast(evolved(c).dataType).as(c)
       else lit(null).cast(evolved(c).dataType).as(c)
-    } :+ col(BucketCol): _*)
+    } ++ bucketCols.map(col): _*)
     // dirty MOR buckets: resolve existing layers in place; grouping includes
-    // the bucket, so this aggregation needs NO exchange over the scan
+    // the group, so this aggregation needs NO exchange over the scan
     val exResolved =
-      if (touched.exists(snap.morBuckets.contains))
-        Dedup.latestByKey(exAligned, snap.keyCols :+ BucketCol, snap.orderCols)
+      if (groups.buckets.exists(snap.morBuckets.contains))
+        Dedup.latestByKey(exAligned, snap.keyCols ++ bucketCols, snap.orderCols)
       else exAligned
     val batchWithBucket =
       alignedBatch.withColumn(BucketCol, bucketExpr(snap.keyCols, snap.numBuckets))
+        .withColumn(GroupCol, groupExpr(groups, snap.numBuckets))
     val preAgg =
-      if (salted) Dedup.saltedPreAggregate(batchWithBucket, snap.keyCols :+ BucketCol,
+      if (salted) Dedup.saltedPreAggregate(batchWithBucket, snap.keyCols ++ bucketCols,
         snap.orderCols, numSalts = math.max(16, spark.sparkContext.defaultParallelism))
       else batchWithBucket
-    val batchDedup = Dedup.latestByKey(preAgg, snap.keyCols :+ BucketCol, snap.orderCols)
-    val joinCols = snap.keyCols :+ BucketCol
+    val batchDedup = Dedup.latestByKey(preAgg, snap.keyCols ++ bucketCols, snap.orderCols)
+    val joinCols = snap.keyCols ++ bucketCols
     val ex = exResolved.select(joinCols.map(col) :+ struct(cols.map(col): _*).as("_ex"): _*)
     val ba = batchDedup.select(
       joinCols.map(c => col(c).as(s"_gb_$c")) :+ struct(cols.map(col): _*).as("_ba"): _*)
     // NULL-SAFE key equality: the classic path groups null keys into one LWW
     // group, so the SPJ join must match them too — plain === would emit both
-    // the existing and the batch row for a null-keyed pair. The bucket column
-    // is non-null (hash of the keys) and keeps ===; both forms extract as
+    // the existing and the batch row for a null-keyed pair. The bucket and
+    // group columns are non-null and keep ===; both forms extract as
     // equi-join keys, so the storage-partitioned clustering is unaffected.
     val cond = snap.keyCols
       .map(k => col(k) <=> col(s"_gb_$k"))
-      .foldLeft(col(BucketCol) === col(s"_gb_$BucketCol"))(_ && _)
+      .foldLeft(bucketCols.map(c => col(c) === col(s"_gb_$c")).reduce(_ && _))(_ && _)
     val joined = ex.join(ba, cond, "full_outer")
       .withColumn(BucketCol, coalesce(col(BucketCol), col(s"_gb_$BucketCol")))
     val ordB = struct(snap.orderCols.map(o => col(s"_ba.$o")): _*)
@@ -1560,7 +1602,8 @@ final class LakeTable private (
         stagedCommit(snap, curSchema, "maint", snap.sortOrder, snap.targetFileRows,
             statsFirst = snap.sortOrder)(sink =>
           sink(buildMerged(align(readSnapshotDF(snap), curSchema), emptyBatch, reSnap,
-              touchedCount = newNumBuckets, writeFactor = writeFactor, salted = false)
+              partitions = newNumBuckets * writeFactor, writeFactor = writeFactor,
+              salted = false)
             .drop(SubSplitCol))) { staged =>
           Publish(required = snap.rowCount > 0, rebase = _ => false,
             build = _ => Some(reSnap.copy(
@@ -2400,15 +2443,16 @@ final class LakeTable private (
         out += (("rows_hashed_into_their_bucket", true, "no data files"))
       } else {
         // ONE job, zero exchanges: count + placement aggregates both group on
-        // the bucket column the scan reports partitioning for
+        // the bucket group column the scan reports partitioning for
+        val groups = scanGroups(Seq(s), withFiles)
         val perBucket =
-          try Some(withSpjConfs(Some(withFiles.size)) {
-            bucketScanDF(s, withFiles)
-              .groupBy(col(BucketCol))
+          try Some(withSpjConfs(Some(groups.count)) {
+            groupScanDF(s, groups)
+              .groupBy(col(BucketCol), col(GroupCol))
               .agg(count(lit(1)).as("_n"),
                 sum(when(bucketExpr(s.keyCols, s.numBuckets) =!= col(BucketCol), lit(1L))
                   .otherwise(lit(0L))).as("_misplaced"))
-              .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+              .collect().map(r => r.getInt(0) -> ((r.getLong(2), r.getLong(3)))).toMap
           })
           catch {
             case scala.util.control.NonFatal(e) =>
@@ -2447,7 +2491,9 @@ final class LakeTable private (
     *     shields the dir from a concurrent [[expire]] until step 6 ends;
     *  2. write: `write(sink)` opens the caller's conf windows, builds its
     *     output and hands it to `sink` — [[bucketWriter]] with `sortBy`
-    *     and `cap`, partitioned by bucket, into the staging dir;
+    *     and `cap`, partitioned by bucket, into the staging dir (a grouped
+    *     scan's `_ggroup` column is dropped first: a group task writes its
+    *     buckets' files in bucket order, one file per bucket as before);
     *  3. footer: [[touchInflight]], then one parallel footer pass
     *     ([[listBucketFiles]], [[writtenMeta]]) for per-bucket files and
     *     rows and per-file bounds over `schema` — the schema the files were
@@ -2474,7 +2520,7 @@ final class LakeTable private (
       publish: Staged => Publish): Option[TableSnapshot] = {
     val rel = s"data/$kind-${snap.version + 1}-${java.lang.Long.toHexString(System.nanoTime())}"
     withInflightMarker(rel) {
-      write(df => bucketWriter(df, sortBy, cap)
+      write(df => bucketWriter(df.drop(GroupCol), sortBy, cap)
         .partitionBy(BucketCol).mode("overwrite").parquet(s"$root/$rel"))
       touchInflight(rel)
       val files = listBucketFiles(Paths.get(root).resolve(rel), rel, BucketCol)

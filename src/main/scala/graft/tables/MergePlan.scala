@@ -1,22 +1,31 @@
 package graft.tables
 
 /** Everything [[LakeTable.merge]] decides before it writes: the route, the
-  * write fan-out, salting and the small-op mode. [[MergePlan.decide]] makes
-  * the decision once, from plain values, so it is testable without Spark;
-  * `merge()` only runs the plan.
+  * write fan-out, salting, the small-op mode and the bucket groups.
+  * [[MergePlan.decide]] makes the decision once, from plain values, so it
+  * is testable without Spark; `merge()` only runs the plan.
   *
   * @param route       [[MergePlan.OneJob]], [[MergePlan.ClassicCow]] or
   *                    [[MergePlan.SpjCow]]
   * @param writeFactor write sub-splits per bucket (key-hash `_gsubsplit`);
-  *                    1 on the SPJ route, which writes one task per touched
-  *                    bucket
+  *                    1 on the SPJ route, which writes one task per group
+  *                    of touched buckets
   * @param salted      the in-batch dedup takes the two-phase salted path
   *                    (the caller's choice, or auto-salt on a COW route)
   * @param small       the write runs with adaptive query execution scoped
-  *                    off and one write task per bucket
+  *                    off and its buckets packed into at most `cores` tasks
+  * @param groups      the task each bucket the write may touch runs in (all
+  *                    buckets on the one-job route, the touched ones on the
+  *                    COW routes; None for an empty batch) — see
+  *                    [[MergePlan.groups]]
   */
 final case class MergePlan(route: MergePlan.Route, writeFactor: Int, salted: Boolean,
-    small: Boolean)
+    small: Boolean, groups: Option[MergePlan.BucketGroups]) {
+
+  /** Partitions of the one-job and classic-COW write exchanges: every
+    * group's sub-splits. */
+  private[tables] def writePartitions: Int = math.max(1, groups.fold(0)(_.count) * writeFactor)
+}
 
 object MergePlan {
 
@@ -31,7 +40,7 @@ object MergePlan {
     * (bucket, subsplit) exchange. */
   case object ClassicCow extends Route
   /** Stats pass, then the storage-partitioned join: the existing side is
-    * read unshuffled, one write task per touched bucket. */
+    * read unshuffled, one write task per group of touched buckets. */
   case object SpjCow extends Route
 
   /** Write sub-splits per core: measured neutral between 2 and 4 waves; 2
@@ -39,8 +48,10 @@ object MergePlan {
   final val WaveFactor = 2
 
   /** Rows bound under which an engine operation (merge write, maintenance
-    * rewrite, MV refresh window) counts as SMALL: it keeps one write task
-    * per bucket and runs with adaptive query execution scoped OFF — AQE's
+    * rewrite, read of merge-on-read buckets, changelog window) counts as
+    * SMALL: its buckets run in at most `cores` tasks ([[groups]]), its
+    * write has no sub-splits (one file per bucket), and merges and
+    * rewrites run with adaptive query execution scoped OFF — AQE's
     * per-exchange stage jobs and replanning cost more than they can recover
     * on a fixed-shape plan over this little data, while big operations keep
     * AQE (skew-join splitting and partition coalescing are exactly the
@@ -98,15 +109,58 @@ object MergePlan {
     * small" when any non-empty bucket has no `bucketRows` entry (a legacy
     * snapshot): an UNKNOWN size must never shrink a potentially large
     * rewrite's planning (the same invariant as [[batchSmall]]). */
-  private[tables] def storedSmall(snap: TableSnapshot, buckets: Seq[Int]): Boolean = {
+  private[tables] def storedSmall(snap: TableSnapshot, buckets: Seq[Int]): Boolean =
+    storedSmall(Seq(snap), buckets)
+
+  /** [[storedSmall]] over the rows `buckets` hold in all of `snaps` — the
+    * two sides of a changelog window read the buckets once each. */
+  private def storedSmall(snaps: Seq[TableSnapshot], buckets: Seq[Int]): Boolean = {
     var sum = 0L
-    buckets.forall { b =>
+    snaps.forall(snap => buckets.forall { b =>
       snap.bucketRows.get(b) match {
         case Some(n) => sum += n; small(sum)
         case None => snap.bucketFiles.getOrElse(b, Nil).isEmpty // unknown ⇒ not small
       }
+    })
+  }
+
+  /** Which task each bucket of one operation runs in: `of(b)` is bucket
+    * `b`'s group. A bucket scan reports its partitioning on the group, so
+    * Spark runs all buckets of a group in one task; a write exchange hashes
+    * into [[count]] partitions. */
+  final case class BucketGroups(of: Map[Int, Int]) {
+    require(of.nonEmpty, "bucket groups need at least one bucket")
+    val count: Int = of.values.toSet.size
+    /** the grouped buckets, ascending */
+    def buckets: Seq[Int] = of.keys.toSeq.sorted
+  }
+
+  /** SCALE-ADAPTIVE task count of an operation over `touched` buckets. Per
+    * task fixed cost (scheduling, reader and writer set-up, commit) dwarfs
+    * the work of a small operation's bucket, so a SMALL one packs its
+    * buckets into G = min(touched, cores) groups of consecutive buckets,
+    * balanced (sizes differ by at most one) — one wave on the cluster. Any
+    * other operation keeps one group per bucket, with the bucket id as the
+    * group id, so its tasks and partition values are those of a per-bucket
+    * plan. None for an empty touched set: there is nothing to run. */
+  private[tables] def groups(touched: Seq[Int], cores: Int, small: Boolean)
+      : Option[BucketGroups] = {
+    val sorted = touched.distinct.sorted
+    if (sorted.isEmpty) None
+    else if (!small) Some(BucketGroups(sorted.map(b => b -> b).toMap))
+    else {
+      val g = math.max(1, math.min(sorted.size, cores))
+      Some(BucketGroups(sorted.zipWithIndex.map { case (b, i) =>
+        b -> (i.toLong * g / sorted.size).toInt
+      }.toMap))
     }
   }
+
+  /** [[groups]] of a bucket scan that reads `buckets` in every one of
+    * `snaps`, sized by their stored rows ([[storedSmall]]). */
+  private[tables] def scanGroups(snaps: Seq[TableSnapshot], buckets: Seq[Int],
+      cores: Int): Option[BucketGroups] =
+    groups(buckets, cores, storedSmall(snaps, buckets))
 
   /** Whether a merge runs the COW stats pass before [[decide]]. */
   private[tables] def needsStats(mor: Boolean, emptyTable: Boolean): Boolean =
@@ -117,7 +171,8 @@ object MergePlan {
     * applied to a SMALL one it fragments the commit into `buckets × factor`
     * near-empty files whose scheduling, writer open/close, commit renames
     * and footer reads dominate the wall, and every later scan pays the file
-    * count again. A small write keeps one task per bucket. */
+    * count again. A small write has no sub-splits: one file per bucket, its
+    * buckets packed into [[groups]]. */
   private[tables] def fanOut(cores: Int, buckets: Int, small: Boolean): Int =
     if (small) 1
     else math.max(1, math.ceil(WaveFactor.toDouble * cores / math.max(1, buckets)).toInt)
@@ -139,23 +194,27 @@ object MergePlan {
       batchRows: Map[Int, Long], oldTouchedRows: Long, salted: Boolean,
       batch: BatchSize, pin: Pin): MergePlan =
     if (!needsStats(mor, emptyTable)) {
-      // no stats rows feed auto-salt here: salting stays the caller's choice
+      // no stats rows feed auto-salt here: salting stays the caller's choice;
+      // with no stats pass any bucket may be touched
       val s = batchSmall(batch)
-      MergePlan(OneJob, fanOut(cores, numBuckets, s), salted, s)
+      MergePlan(OneJob, fanOut(cores, numBuckets, s), salted, s,
+        groups(0 until numBuckets, cores, s))
     } else {
       val touched = batchRows.size
       val rowsIn = batchRows.values.sum
       val s = small(rowsIn + oldTouchedRows)
       // SPJ pays off when the existing side is the bigger one (existing
       // rows no longer ride the exchange) and the touched buckets sustain
-      // write parallelism (one task per bucket; at production bucket
-      // counts, buckets ≫ cores). An empty batch has no buckets to scan,
+      // write parallelism (one task per group, so `cores` tasks once
+      // touched >= cores; at production bucket counts, buckets ≫ cores).
+      // An empty batch has no buckets to scan,
       // and a zero-partition SPJ plan is a shape nothing should build.
       val spj = touched > 0 &&
         pin.spj.getOrElse(touched >= cores && oldTouchedRows >= rowsIn)
       MergePlan(if (spj) SpjCow else ClassicCow,
         if (spj) 1 else fanOut(cores, touched, s),
-        salted || (pin.autoSalt && autoSalt(numBuckets, batchRows.values, rowsIn)), s)
+        salted || (pin.autoSalt && autoSalt(numBuckets, batchRows.values, rowsIn)), s,
+        groups(batchRows.keys.toSeq, cores, s))
     }
 
   /** AUTO-SALT from the stats rows (zero extra cost): the measured

@@ -20,12 +20,23 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.tables.LakeTable
+import graft.tables.MergePlan.BucketGroups
 
 /** DataSource-v2 scan over a [[graft.tables.LakeTable]]'s buckets that
   * REPORTS ITS PARTITIONING (SURVEY.md §7.5, the storage-partitioned merge):
   * one input partition per bucket, each carrying `HasPartitionKey` on the
   * table's bucket id, surfaced to Catalyst as
   * `KeyGroupedPartitioning(identity(_gbucket))`.
+  *
+  * The engine's own scans are GROUPED ([[LakeBucketSource.scan]] with
+  * [[graft.tables.MergePlan.BucketGroups]]): each bucket partition's key is
+  * its group id instead, carried in a second constant column `_ggroup`, and
+  * the scan reports `KeyGroupedPartitioning(identity(_ggroup))`. Spark runs
+  * all input partitions that share a key in one task, so a small
+  * operation's buckets run in at most `cores` tasks, while runtime bucket
+  * pruning and per-file bound skipping still work bucket by bucket. Every
+  * consumer groups and joins on `(keys…, _gbucket, _ggroup)`; two scans
+  * join without an exchange when they share the same groups.
   *
   * This is what lets a copy-on-write MERGE leave the EXISTING side of the
   * upsert join entirely unshuffled: with
@@ -43,25 +54,34 @@ import graft.tables.LakeTable
   * so the per-file reader is the same whole-stage-codegen-friendly columnar
   * path `spark.read.parquet` uses.
   *
-  * Options: `root` (table root), `version` (snapshot version to pin),
-  * `buckets` (comma-separated bucket ids — the merge's touched set; a bucket
-  * with no files yet still contributes an EMPTY partition so the other
-  * side's shuffle always has a target partition for every bucket value).
+  * Options of the `spark.read.format` form, which is never grouped:
+  * `root` (table root), `version` (snapshot version to pin), `buckets`
+  * (comma-separated bucket ids — the merge's touched set; a bucket with no
+  * files yet still contributes an EMPTY partition so the other side's
+  * shuffle always has a target partition for every bucket value).
   */
 final class LakeBucketSource extends TableProvider {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LakeBucketSource.scanSchema(LakeBucketSource.snapshotFor(options))
+    LakeBucketSource.scanSchema(LakeBucketSource.snapshotFor(options), grouped = false)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new LakeBucketTable(new CaseInsensitiveStringMap(properties))
+      properties: java.util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    new LakeBucketTable(LakeBucketSource.require(options, "root"),
+      LakeBucketSource.snapshotFor(options),
+      LakeBucketSource.require(options, "buckets").split(',').filter(_.nonEmpty)
+        .map(_.toInt).toSeq,
+      groups = None)
+  }
 
   override def supportsExternalMetadata(): Boolean = false
 }
 
 object LakeBucketSource {
   val BucketCol = "_gbucket"
+  /** the grouped scan's group id column (see the class header) */
+  val GroupCol = "_ggroup"
 
   /** format name for spark.read.format(...) */
   val Name: String = classOf[LakeBucketSource].getName
@@ -78,9 +98,22 @@ object LakeBucketSource {
     v
   }
 
-  private[dsv2] def scanSchema(snap: graft.tables.TableSnapshot): StructType =
-    StructType(StructType.fromDDL(snap.schemaDdl).fields :+
-      StructField(BucketCol, IntegerType, nullable = false))
+  private[dsv2] def scanSchema(snap: graft.tables.TableSnapshot, grouped: Boolean): StructType =
+    StructType(StructType.fromDDL(snap.schemaDdl).fields ++ partitionSchema(grouped).fields)
+
+  /** the per-file constant columns: the bucket id, and the group id of a
+    * grouped scan */
+  private[dsv2] def partitionSchema(grouped: Boolean): StructType =
+    StructType((BucketCol +: (if (grouped) Seq(GroupCol) else Nil))
+      .map(StructField(_, IntegerType, nullable = false)))
+
+  /** The bucket scan of `buckets` of `snap` as a DataFrame, grouped when
+    * `groups` is given (then `buckets` are its buckets). The engine's
+    * entry point: the snapshot it already holds is used as is. */
+  private[tables] def scan(spark: SparkSession, root: String, snap: graft.tables.TableSnapshot,
+      buckets: Seq[Int], groups: Option[BucketGroups]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftshim.RelationDF(spark,
+      new LakeBucketTable(root, snap, buckets, groups))
 
   /** Metadata-only statistics shared by both scans: row counts from the
     * snapshot's incrementally-maintained counters, size from rows × the
@@ -182,20 +215,16 @@ object LakeBucketSource {
   }
 }
 
-final class LakeBucketTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  private val snap = LakeBucketSource.snapshotFor(options)
-  private val root = LakeBucketSource.require(options, "root")
-  private val buckets: Seq[Int] =
-    LakeBucketSource.require(options, "buckets").split(',').filter(_.nonEmpty).map(_.toInt).toSeq
+final class LakeBucketTable(root: String, snap: graft.tables.TableSnapshot,
+    buckets: Seq[Int], groups: Option[BucketGroups]) extends Table with SupportsRead {
 
   override def name(): String = s"lake_buckets($root@v${snap.version})"
-  override def schema(): StructType = LakeBucketSource.scanSchema(snap)
+  override def schema(): StructType = LakeBucketSource.scanSchema(snap, groups.isDefined)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeBucketScanBuilder(root, snap, buckets)
+    new LakeBucketScanBuilder(root, snap, buckets, groups)
 }
 
 /** COLUMN PRUNING + FILTER PUSHDOWN for the bucket scan: a projected
@@ -206,19 +235,20 @@ final class LakeBucketTable(options: CaseInsensitiveStringMap)
   * min/max excludes it).
   *
   * Two invariants keep this safe at any scale:
-  *  - the bucket column is ALWAYS kept in the read schema — the scan's
-  *    reported `KeyGroupedPartitioning(identity(_gbucket))` references it,
-  *    and it costs nothing (a per-partition constant, not file bytes);
+  *  - the bucket (and group) column is ALWAYS kept in the read schema — the
+  *    scan's reported `KeyGroupedPartitioning` references it, and it costs
+  *    nothing (a per-partition constant, not file bytes);
   *  - every filter is returned as RESIDUAL (Spark re-evaluates it above the
   *    scan), so parquet stats pruning can only skip non-matching row groups,
   *    never change results — exactly `ParquetScan`'s own contract. */
 final class LakeBucketScanBuilder(root: String, snap: graft.tables.TableSnapshot,
-    buckets: Seq[Int]) extends ScanBuilder with LakePushdownSupport {
+    buckets: Seq[Int], groups: Option[BucketGroups])
+    extends ScanBuilder with LakePushdownSupport {
 
   protected val dataSchema = StructType.fromDDL(snap.schemaDdl)
 
   override def build(): Scan =
-    new LakeBucketScan(root, snap, buckets, requiredData, pushedFilters())
+    new LakeBucketScan(root, snap, buckets, requiredData, pushedFilters(), groups)
 }
 
 /** Shared pushdown contract of the lake scans (bucket scan + SQL-catalog
@@ -251,7 +281,8 @@ private[dsv2] trait LakePushdownSupport
 }
 
 final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
-    buckets: Seq[Int], readDataSchema: StructType, pushedFilters: Array[sources.Filter])
+    buckets: Seq[Int], readDataSchema: StructType, pushedFilters: Array[sources.Filter],
+    groups: Option[BucketGroups] = None)
     extends Scan with Batch with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics {
 
@@ -321,22 +352,29 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
       LakeBucketScan.runtimePrunes.incrementAndGet()
     }
   }
-  private val partitionSchema =
-    StructType(Seq(StructField(LakeBucketSource.BucketCol, IntegerType, nullable = false)))
+  private val partitionSchema = LakeBucketSource.partitionSchema(groups.isDefined)
+
+  /** a bucket's partition key: its group in a grouped scan, else itself */
+  private def keyOf(b: Int): Int = groups.fold(b)(_.of(b))
 
   override def readSchema(): StructType =
-    StructType(readDataSchema.fields :+
-      StructField(LakeBucketSource.BucketCol, IntegerType, nullable = false))
+    StructType(readDataSchema.fields ++ partitionSchema.fields)
   override def toBatch: Batch = this
   override def description(): String =
     s"LakeBucketScan(root=$root, v=${snap.version}, buckets=${buckets.mkString(",")}, " +
+      groups.fold("")(g => s"groups=${g.count}, ") +
       s"ReadSchema=${readDataSchema.fieldNames.mkString(",")}, " +
       s"PushedFilters=[${pushedFilters.mkString(", ")}])"
 
-  /** the whole point: identity partitioning on the bucket column */
+  /** the whole point: identity partitioning on the bucket column, or on the
+    * group column of a grouped scan */
   override def outputPartitioning(): Partitioning =
-    new KeyGroupedPartitioning(
-      Array(Expressions.identity(LakeBucketSource.BucketCol)), buckets.size)
+    groups match {
+      case Some(g) => new KeyGroupedPartitioning(
+        Array(Expressions.identity(LakeBucketSource.GroupCol)), g.count)
+      case None => new KeyGroupedPartitioning(
+        Array(Expressions.identity(LakeBucketSource.BucketCol)), buckets.size)
+    }
 
   /** PLANNING-TIME FILE SKIPPING from the snapshot's per-file column bounds
     * (≙ Iceberg manifest pruning): a pushed predicate that provably matches
@@ -363,15 +401,16 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
         - allRel.size)
     val lens = LakeBucketSource.statLengths(root, allRel, conf)
     buckets.sorted.zipWithIndex.map { case (b, idx) =>
+      val values = if (groups.isDefined) InternalRow(b, keyOf(b)) else InternalRow(b)
       val files =
         if (!keep(b)) Array.empty[PartitionedFile] // runtime-pruned: no I/O
         else keptFiles(b).map { rel =>
           PartitionedFile(
-            partitionValues = InternalRow(b),
+            partitionValues = values,
             filePath = org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
             start = 0L, length = lens(rel))
         }.toArray
-      LakeBucketPartition(idx, b, files): InputPartition
+      LakeBucketPartition(idx, keyOf(b), files): InputPartition
     }.toArray
   }
 
@@ -390,11 +429,13 @@ object LakeBucketScan {
   val statsPrunedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** One bucket = one input partition; `partitionKey` is what Catalyst groups
-  * and storage-partition-joins on. */
-final case class LakeBucketPartition(index: Int, bucket: Int,
+/** One bucket = one input partition; `partitionKey` — the bucket id, or its
+  * group id in a grouped scan — is what Catalyst groups and
+  * storage-partition-joins on. Spark runs the partitions that share a key
+  * in one task, one after the other. */
+final case class LakeBucketPartition(index: Int, key: Int,
     files: Array[PartitionedFile]) extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = InternalRow(bucket)
+  override def partitionKey(): InternalRow = InternalRow(key)
 }
 
 /** Delegates each bucket partition to Spark's vectorized parquet factory by

@@ -541,15 +541,22 @@ object LakeCatalog {
   private[dsv2] def needsPin(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     def safeNode(p: LogicalPlan): Boolean = p match {
       case _: Project | _: Filter | _: Union | _: SubqueryAlias | _: View => true
       case _: LocalRelation | _: OneRowRelation | _: Range => true
-      // file relations pin their file listing in the relation object; lake
-      // tables pin their snapshot at analysis. Anything else (JDBC, foreign
-      // connectors, streaming) may serve different rows per scan — pin.
-      case lr: LogicalRelation => lr.relation.isInstanceOf[HadoopFsRelation]
+      // a path-based file relation pins its file listing in its
+      // InMemoryFileIndex; lake tables pin their snapshot at analysis.
+      // Anything else may serve different rows per scan — pin: a catalog
+      // file table (its CatalogFileIndex lists the files again on each
+      // execution, and even an InMemoryFileIndex is the session's cached
+      // one, which an INSERT into the table refreshes in place), JDBC,
+      // foreign connectors, streaming.
+      case lr: LogicalRelation => lr.catalogTable.isEmpty && (lr.relation match {
+        case fs: HadoopFsRelation => fs.location.isInstanceOf[InMemoryFileIndex]
+        case _ => false
+      })
       case r: DataSourceV2Relation => r.table.isInstanceOf[LakeSqlTable]
       case _ => false
     }

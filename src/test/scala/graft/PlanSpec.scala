@@ -16,6 +16,14 @@ class PlanSpec extends SparkTestBase {
   private def nodes(p: String, name: String): Int =
     ("""(?m)^\s*(?::|\+)?-?\s*""" + name + """ \(\d+\)""").r.findAllIn(p).size
 
+  /** the bucket scans of `df`'s executed plan */
+  private def scans(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
+    (df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }).collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+
   private def plan(df: DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
@@ -56,7 +64,7 @@ class PlanSpec extends SparkTestBase {
     t.merge(Seq(("a", 1L, "a1"), ("b", 1L, "b1")).toDF("k", "wv", "v"), "b1")
     val existing = t.read()
     val batch = Seq(("a", 2L, "a2"), ("c", 1L, "c1")).toDF("k", "wv", "v")
-    val merged = t.buildMerged(existing, batch, t.snapshot(), touchedCount = 8,
+    val merged = t.buildMerged(existing, batch, t.snapshot(), partitions = 16,
       writeFactor = 2, salted = false)
     val p = plan(merged)
     val exchanges = nodes(p, "Exchange")
@@ -65,7 +73,7 @@ class PlanSpec extends SparkTestBase {
 
     // the PRODUCTION variant carries the upsert flag (max per group) through
     // the same aggregation — it must not cost a second exchange
-    val flagged = plan(t.buildMerged(existing, batch, t.snapshot(), touchedCount = 8,
+    val flagged = plan(t.buildMerged(existing, batch, t.snapshot(), partitions = 16,
       writeFactor = 2, salted = false, withSrcFlag = true))
     assert(nodes(flagged, "Exchange") === 1,
       s"flag carry added an exchange:\n${flagged.take(6000)}")
@@ -75,7 +83,7 @@ class PlanSpec extends SparkTestBase {
     // must spread over the salt space before they are funneled to their
     // (key-derived) bucket partition
     val saltedPlan = plan(t.buildMerged(existing, batch, t.snapshot(),
-      touchedCount = 8, writeFactor = 2, salted = true))
+      partitions = 16, writeFactor = 2, salted = true))
     assert(nodes(saltedPlan, "Exchange") === 2,
       s"expected TWO exchanges (salt pre-agg + bucket repartition):\n${saltedPlan.take(4000)}")
   }
@@ -93,13 +101,16 @@ class PlanSpec extends SparkTestBase {
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val oldShuf = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // REGRESSION LOCK: with more session shuffle partitions than buckets,
+    // REGRESSION LOCK: with more session shuffle partitions than groups,
     // EnsureRequirements would prefer the hash side's spec and re-shuffle
-    // the table scan; withSpjConfs(Some(buckets)) pins the contest
+    // the table scan; withSpjConfs(Some(groups)) pins the contest
     spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try t.withSpjConfs(Some(8)) {
-      val merged = t.buildMergedSpj(t.snapshot(), schema, (0 until 8).toSeq,
-        batch, salted = false)
+    // one group per bucket (a big merge), and the 4 groups a small merge
+    // packs its 8 buckets into on 4 cores
+    val perBucket = graft.tables.MergePlan.BucketGroups((0 until 8).map(b => b -> b).toMap)
+    val packed = graft.tables.MergePlan.BucketGroups((0 until 8).map(b => b -> b / 2).toMap)
+    try for (groups <- Seq(perBucket, packed)) t.withSpjConfs(Some(groups.count)) {
+      val merged = t.buildMergedSpj(t.snapshot(), schema, groups, batch, salted = false)
       val p = plan(merged)
       assert(p.contains("BatchScan"), p.take(3000))
       // exactly TWO exchanges, both on the batch side: the dedup agg's hash
@@ -122,6 +133,9 @@ class PlanSpec extends SparkTestBase {
             }.nonEmpty => s
       }
       assert(shuffledScan.isEmpty, s"existing side was shuffled:\n${exec.treeString}")
+      // the existing side runs one task per group
+      assert(scans(merged).map(_.inputRDD.getNumPartitions) === Seq(groups.count),
+        exec.treeString)
       // and the merge is CORRECT through this plan
       val out = merged.drop("_gbucket", "_ghasbatch").as[(String, Long, String)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -217,6 +231,56 @@ class PlanSpec extends SparkTestBase {
       assert(state.size === 16 && state.values.forall(_ == 2L))
     }
     assert(t.logicalRowCount() === 16L)
+  }
+
+  test("grouped bucket scans keep ZERO exchanges: a small changelog join, " +
+      "read() and compaction run 16 buckets in 4 tasks") {
+    import graft.tables.LakeTable
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("plangroups").toString
+    val schema = StructType.fromDDL("k STRING, wv BIGINT, v STRING")
+    val t = LakeTable.createOrOpen(spark, root, schema, Seq("k"), Seq("wv"), 16)
+    t.merge((0 until 128).map(i => (s"k$i", 1L, s"v$i")).toDF("k", "wv", "v"), "b1")
+    val v1 = t.currentVersion()
+    t.merge((0 until 128).map(i => (s"k$i", 2L, s"w$i")).toDF("k", "wv", "v"), "b2", mor = true)
+    assert(t.snapshot().morBuckets.size === 16)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores === 4)
+    // the at-scale join shape: a test-sized side would auto-broadcast
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def grouped(df: DataFrame, what: String, joinNode: Option[String] = None): Unit = {
+      val p = plan(df)
+      assert(nodes(p, "Exchange") === 0, s"$what must not shuffle:\n${p.take(5000)}")
+      joinNode.foreach(j => assert(nodes(p, j) === 1, p.take(3000)))
+      val ss = scans(df)
+      assert(ss.nonEmpty && ss.forall(_.inputRDD.getNumPartitions == cores),
+        s"$what: ${ss.map(_.inputRDD.getNumPartitions)}")
+    }
+    try {
+      grouped(t.readChanges(v1, t.currentVersion()), "changelog", Some("SortMergeJoin LeftAnti"))
+      grouped(t.readChangesTyped(v1, t.currentVersion()), "typed changelog",
+        Some("SortMergeJoin FullOuter"))
+      grouped(t.read(), "MOR read")
+      assert(t.readChanges(v1, t.currentVersion()).count() === 128L)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    // the compaction write: grouped scan, zero exchanges, one file per bucket
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { assert(t.compact() === 16); drainListenerBus() }
+    finally spark.listenerManager.unregister(listener)
+    val writes = plans.toArray.map(_.toString).filter(_.contains("InsertIntoHadoopFsRelation"))
+    assert(writes.length === 1, writes.mkString("\n---\n"))
+    assert(!writes.head.contains("Exchange") && writes.head.contains("groups=4"), writes.head)
+    assert(t.snapshot().bucketFiles.values.forall(_.size == 1))
+    assert(t.read().as[(String, Long, String)].collect().map(_._2).toSet === Set(2L))
   }
 
   test("colocatedJoin of two same-layout tables plans ZERO exchanges " +

@@ -141,4 +141,82 @@ class MergePlanSpec extends AnyFunSuite {
     assert(!storedSmall(snap, Seq(0, 2))) // bucket 2 has files but no row count
     assert(storedSmall(snap, Seq(0, 3))) // bucket 3 is empty
   }
+
+  private def groupSizes(g: Option[BucketGroups]): Seq[Int] =
+    g.get.of.groupBy(_._2).values.map(_.size).toSeq.sorted
+
+  test("bucket groups: a small operation packs its buckets into min(touched, cores) " +
+      "balanced groups of consecutive buckets") {
+    val g = groups(0 until 32, cores = 4, small = true)
+    assert(g.get.count === 4)
+    assert(g.get.buckets === (0 until 32))
+    assert(groupSizes(g) === Seq(8, 8, 8, 8))
+    // groups hold consecutive buckets, numbered 0 until count
+    assert((0 until 32).map(g.get.of) === (0 until 32).map(_ / 8))
+    // uneven: sizes differ by at most one, none above ceil(touched / G)
+    val uneven = groups(0 until 10, cores = 4, small = true)
+    assert(uneven.get.count === 4)
+    assert(groupSizes(uneven).max <= 3 && groupSizes(uneven).min >= 2)
+    // through the merge planner, on both routes
+    val cow = decide(mor = false, emptyTable = false, numBuckets = 32, cores = 4,
+      batchRows = (0 until 32).map(_ -> 10L).toMap, oldTouchedRows = 320L, salted = false,
+      BatchSize(None), Pin())
+    assert(cow.small && cow.groups.get.count === 4 && cow.writePartitions === 4)
+    assert(groupSizes(cow.groups) === Seq(8, 8, 8, 8))
+    val oneJob = decide(mor = true, emptyTable = false, numBuckets = 32, cores = 4,
+      Map.empty, 0L, salted = false, BatchSize(Some(100L)), Pin())
+    assert(oneJob.groups.get.count === 4 && oneJob.writePartitions === 4)
+  }
+
+  test("bucket groups: sparse touched buckets get one group each, not one in all") {
+    val g = groups(Seq(9, 1, 5), cores = 4, small = true)
+    assert(g.get.count === 3)
+    assert(g.get.buckets === Seq(1, 5, 9))
+    assert(Seq(1, 5, 9).map(g.get.of).toSet.size === 3)
+  }
+
+  test("bucket groups: a big operation keeps one group per bucket") {
+    val touched = (0 until 32).map(_ -> 10L).toMap
+    val big = decide(mor = false, emptyTable = false, numBuckets = 32, cores = 4,
+      batchRows = touched, oldTouchedRows = SmallOpRows + 1 - 320L, salted = false,
+      BatchSize(None), Pin())
+    assert(!big.small)
+    assert(big.groups.get.of === (0 until 32).map(b => b -> b).toMap)
+    assert(big.writePartitions === 32 * big.writeFactor)
+    val oneJob = decide(mor = true, emptyTable = false, numBuckets = 8, cores = 4,
+      Map.empty, 0L, salted = false, BatchSize(Some(SmallOpRows + 1)), Pin())
+    assert(oneJob.groups.get.count === 8 && oneJob.writePartitions === 8 * oneJob.writeFactor)
+    // a scan of SmallOpRows + 1 stored rows
+    val snap = TableSnapshot(version = 1, schemaDdl = "k STRING", keyCols = Seq("k"),
+      orderCols = Nil, numBuckets = 4, retainBatches = 8,
+      bucketFiles = Map(0 -> Seq("a"), 1 -> Seq("b"), 2 -> Seq("c")),
+      bucketRows = Map(0 -> SmallOpRows, 1 -> 1L, 2 -> 1L),
+      txns = Map.empty, appliedBatches = Nil, lineage = Map.empty, totals = Map.empty,
+      rowCount = SmallOpRows + 2)
+    assert(scanGroups(Seq(snap), Seq(0, 1), cores = 1).get.count === 2)
+    assert(scanGroups(Seq(snap), Seq(1, 2), cores = 1).get.count === 1)
+    // both sides of a changelog window count: 2 × half the bound + 2 rows
+    val half = snap.copy(bucketRows = Map(0 -> SmallOpRows / 2, 1 -> 1L, 2 -> 1L))
+    assert(scanGroups(Seq(half), Seq(0, 1, 2), cores = 1).get.count === 1)
+    assert(scanGroups(Seq(half, half), Seq(0, 1, 2), cores = 1).get.count === 3)
+  }
+
+  test("bucket groups: a legacy bucket with no row count is never small") {
+    val snap = TableSnapshot(version = 1, schemaDdl = "k STRING", keyCols = Seq("k"),
+      orderCols = Nil, numBuckets = 4, retainBatches = 8,
+      bucketFiles = Map(0 -> Seq("a"), 1 -> Seq("b"), 2 -> Seq("c")),
+      bucketRows = Map(0 -> 1L, 1 -> 1L),
+      txns = Map.empty, appliedBatches = Nil, lineage = Map.empty, totals = Map.empty,
+      rowCount = 2L)
+    assert(scanGroups(Seq(snap), Seq(0, 1, 2), cores = 1).get.count === 3)
+    assert(scanGroups(Seq(snap), Seq(0, 1), cores = 1).get.count === 1)
+  }
+
+  test("bucket groups: an empty touched set builds no plan") {
+    assert(groups(Nil, cores = 4, small = true).isEmpty)
+    assert(groups(Nil, cores = 4, small = false).isEmpty)
+    val emptyBatch = cow(Map.empty, 0L)
+    assert(emptyBatch.groups.isEmpty && emptyBatch.writePartitions === 1)
+    intercept[IllegalArgumentException](BucketGroups(Map.empty))
+  }
 }

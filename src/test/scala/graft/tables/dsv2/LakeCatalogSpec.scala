@@ -335,4 +335,31 @@ class LakeCatalogSpec extends SparkTestBase {
     assert(LakeCatalog.needsPin(plan(
       "SELECT k, wv + (SELECT CAST(rand() * 10 AS BIGINT)) AS wv, v FROM pin_src")))
   }
+
+  test("INSERT sources from file tables in spark_catalog are pinned; " +
+      "path-based file reads are not") {
+    def plan(sql: String) = spark.sql(sql).queryExecution.analyzed
+    val dir = java.nio.file.Files.createTempDirectory("pincat").toString
+    Seq(("a", 1L, "x", 1)).toDF("k", "wv", "v", "p").write.parquet(s"$dir/path_src")
+    assert(!LakeCatalog.needsPin(plan(s"SELECT k, wv, v FROM parquet.`$dir/path_src`")))
+    try {
+      spark.sql(s"CREATE TABLE spark_catalog.default.pin_cat (k STRING, wv BIGINT, v STRING) " +
+        s"USING parquet LOCATION '$dir/pin_cat'")
+      spark.sql("INSERT INTO spark_catalog.default.pin_cat VALUES ('a', 1, 'x')")
+      spark.sql("CREATE TABLE spark_catalog.default.pin_cat_part " +
+        "(k STRING, wv BIGINT, v STRING, p INT) USING parquet PARTITIONED BY (p) " +
+        s"LOCATION '$dir/pin_cat_part'")
+      spark.sql("INSERT INTO spark_catalog.default.pin_cat_part VALUES ('a', 1, 'x', 1)")
+      // a catalog table's files can change between the merge's two scans:
+      // its file index lists again per execution (partitioned) or is the
+      // session's cached index that an INSERT refreshes in place
+      assert(LakeCatalog.needsPin(plan(
+        "SELECT k, wv, v FROM spark_catalog.default.pin_cat WHERE wv > 0")))
+      assert(LakeCatalog.needsPin(plan(
+        "SELECT k, wv, v FROM spark_catalog.default.pin_cat_part WHERE p = 1")))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS spark_catalog.default.pin_cat")
+      spark.sql("DROP TABLE IF EXISTS spark_catalog.default.pin_cat_part")
+    }
+  }
 }
