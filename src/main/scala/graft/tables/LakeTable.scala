@@ -209,29 +209,29 @@ final class LakeTable private (
   def schema: StructType = StructType.fromDDL(snapshot().schemaDdl)
 
   /** Current table state as a DataFrame (all committed files, evolved
-    * schema). Buckets carrying merge-on-read layers are resolved with the
-    * table's LWW rule on the fly; clean (copy-on-write) buckets stream
-    * straight from their files with no extra work. On a table with a
-    * tombstone column, deleted keys are hidden (their tombstones stay in
-    * stored state so out-of-order stale rows cannot resurrect them). */
-  def read(): DataFrame = {
-    val s = snapshot()
-    visible(s, readSnapshotDF(s))
-  }
+    * schema — the declared DDL schema): each key's LWW winner, with deleted
+    * keys hidden on a table with a tombstone column (their tombstones stay
+    * in stored state so out-of-order stale rows cannot resurrect them).
+    * It is the same resolved scan SQL `SELECT` runs
+    * ([[graft.tables.dsv2.LakeSqlScan]], which holds the one fold and its
+    * tie rule), pinned to the current snapshot: clean (copy-on-write)
+    * buckets stream straight from their files in Spark's file splits,
+    * merge-on-read buckets are folded in-task, and a filter on the result
+    * skips files and buckets the snapshot's bounds and the bucket function
+    * rule out. */
+  def read(): DataFrame = resolvedRead(snapshot())
 
   /** TIME TRAVEL: the table as of `version`. Any version still inside the
     * [[expire]] retention window is readable; its snapshot pins the exact
-    * file set, so the result is stable even as newer merges land. */
-  def readAt(version: Long): DataFrame = {
-    val s = retainedSnapshot(version)
-    visible(s, readSnapshotDF(s))
-  }
+    * file set, so the result is stable even as newer merges land. Read
+    * exactly as [[read]]. */
+  def readAt(version: Long): DataFrame = resolvedRead(retainedSnapshot(version))
 
   /** [[readAt]]'s resolved rows with tombstone winners KEPT — the changelog
     * of a window from an empty table to `version` (the change stream's
     * initial snapshot load once v0 has been expired). */
   private[tables] def resolvedAt(version: Long): DataFrame =
-    readSnapshotDF(retainedSnapshot(version))
+    layerResolved(retainedSnapshot(version))
 
   private def retainedSnapshot(version: Long): TableSnapshot = {
     require(Files.exists(Paths.get(root, "meta", s"v$version.json")),
@@ -239,52 +239,27 @@ final class LakeTable private (
     readSnapshot(Paths.get(root), version)
   }
 
+  private def resolvedRead(s: TableSnapshot): DataFrame =
+    graft.tables.dsv2.LakeSqlScan.relation(spark, root, s)
+
   /** Hide tombstone winners from a RESOLVED row set (must run after LWW
     * resolution — filtering layers first would let an older live row win).
     * No-op on upsert-only tables. */
   private def visible(s: TableSnapshot, resolved: DataFrame): DataFrame =
     s.tombstoneCol.fold(resolved)(c => resolved.filter(!coalesce(col(c), lit(false))))
 
-  private def readSnapshotDF(s: TableSnapshot): DataFrame =
-    readBucketsDF(s, s.bucketFiles.keys)
-
-  /** Resolved rows of `buckets`: clean buckets as one plain parquet read
-    * of their files that pass `keepClean`, dirty ones through
-    * [[morResolvedDF]]. `narrow` is applied to both sides BELOW the LWW
-    * resolve, so it must be a key predicate (those commute with per-key
-    * resolution and push into the parquet scan, and into the bucket scan's
-    * own file skipping). */
-  private def readBucketsDF(s: TableSnapshot, buckets: Iterable[Int],
-      narrow: DataFrame => DataFrame = identity,
-      keepClean: String => Boolean = _ => true): DataFrame = {
-    val schema = StructType.fromDDL(s.schemaDdl)
-    val (dirty, clean) = buckets.toSeq.distinct.sorted.partition(s.morBuckets.toSet)
-    val cleanFiles = clean.flatMap(b => s.bucketFiles.getOrElse(b, Nil)).filter(keepClean)
-      .map(rel => LakeTable.dataPath(root, rel))
-    val cleanDF = narrow(
-      if (cleanFiles.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(cleanFiles: _*))
-    if (dirty.isEmpty) cleanDF
-    else cleanDF.unionByName(morResolvedDF(s, dirty, narrow))
+  /** Every bucket's LWW winners with tombstone winners KEPT, from the
+    * grouped bucket scan: `Dedup.latestByKey` grouped on `(keys…, bucket,
+    * group)` rides the scan's partitioning, so it plans no exchange. For
+    * the readers that need the tombstones — the change stream's initial
+    * load, rebucket and changelog windows across a rebucket. */
+  private def layerResolved(s: TableSnapshot): DataFrame = {
+    val scan = groupScanDF(s, scanGroups(Seq(s), 0 until s.numBuckets))
+    val resolved =
+      if (s.morBuckets.isEmpty) scan
+      else Dedup.latestByKey(scan, s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
+    resolved.drop(BucketCol, GroupCol)
   }
-
-  /** ZERO-SHUFFLE resolve of dirty (merge-on-read) buckets: the layers of a
-    * bucket are co-located by construction, so LWW resolution grouped on
-    * `(keys…, bucket, group)` over the grouped bucket scan plans NO
-    * exchange — each group of dirty buckets is one task that reads their
-    * layers and resolves in place (the same shape as [[compactBuckets]]);
-    * a small read packs its dirty buckets into at most `cores` groups,
-    * a big one keeps one per bucket ([[MergePlan.groups]]). The previous
-    * form (plain parquet read + keys-only dedup) hashed EVERY dirty-bucket
-    * row through an exchange on every read — at a MOR-heavy 100 TB stream
-    * with maxLayers of debt, that re-shuffles the whole dirty region per
-    * read. */
-  private def morResolvedDF(s: TableSnapshot, dirtySorted: Seq[Int],
-      narrow: DataFrame => DataFrame = identity): DataFrame =
-    Dedup.latestByKey(narrow(groupScanDF(s, scanGroups(Seq(s), dirtySorted))),
-      s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
-      .drop(BucketCol, GroupCol)
 
   /** CHANGELOG READ (CDC egress, ≙ Iceberg incremental scan): every row
     * NEW OR UPDATED between two retained versions — the rows a downstream
@@ -348,9 +323,9 @@ final class LakeTable private (
       (cols.map(c => col(s"$left.$c") <=> col(s"$right.$c")) ++
         plainEq.map(c => col(s"$left.$c") === col(s"$right.$c"))).reduce(_ && _)
     if (oldSnap.numBuckets != newSnap.numBuckets) {
-      val newDF = readSnapshotDF(newSnap)
+      val newDF = layerResolved(newSnap)
       val oldAligned = {
-        val df = readSnapshotDF(oldSnap)
+        val df = layerResolved(oldSnap)
         df.select((newSnap.keyCols ++ newSnap.orderCols).map { c =>
           if (df.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
           else lit(null).cast(newSchema(c).dataType).as(c)
@@ -469,8 +444,8 @@ final class LakeTable private (
     if (oldSnap.numBuckets != newSnap.numBuckets) {
       // rebucket inside the window: bucket alignment is meaningless — join
       // the fully-resolved sides logically on the keys
-      val o = pack(align(readSnapshotDF(oldSnap)), "_orow", Nil).alias("o")
-      val n = pack(align(readSnapshotDF(newSnap)), "_nrow", Nil).alias("n")
+      val o = pack(align(layerResolved(oldSnap)), "_orow", Nil).alias("o")
+      val n = pack(align(layerResolved(newSnap)), "_nrow", Nil).alias("n")
       val cond = keys.map(k => col(s"n.$k") <=> col(s"o.$k")).reduce(_ && _)
       return classified(n.join(o, cond, "full_outer"))
     }
@@ -517,43 +492,13 @@ final class LakeTable private (
     spark.readStream.format(graft.tables.dsv2.LakeCdfSource.Name)
       .option("root", root).options(options).load()
 
-  /** LOGICAL row count (rows a full [[read]] would return). Free when no
-    * merge-on-read debt is outstanding; otherwise one small job over the
-    * dirty buckets only (their stored counts include shadowed versions).
+  /** LOGICAL row count (rows a full [[read]] would return). Free on a
+    * clean upsert-only table; otherwise a count over the resolved scan.
     * `snapshot().rowCount` stays the STORED count by contract. */
   def logicalRowCount(): Long = {
     val s = snapshot()
-    if (s.tombstoneCol.isDefined) {
-      // tombstone winners are stored but not visible. Clean buckets hold
-      // RESOLVED winners, so their visible count is the stored count minus
-      // a flag-column-only scan (pruned — no payload bytes, no resolve);
-      // only dirty buckets pay the (zero-shuffle) LWW resolve.
-      val tc = s.tombstoneCol.get
-      val dirty = s.morBuckets.toSet
-      val cleanRows = s.bucketRows.collect { case (b, n) if !dirty.contains(b) => n }.sum
-      val cleanFiles = s.bucketFiles.collect { case (b, fs) if !dirty.contains(b) => fs }
-        .flatten.map(rel => LakeTable.dataPath(root, rel)).toSeq
-      val schema = StructType.fromDDL(s.schemaDdl)
-      val cleanTombs =
-        if (cleanFiles.isEmpty) 0L
-        else spark.read.schema(schema).parquet(cleanFiles: _*)
-          .filter(coalesce(col(tc), lit(false))).count()
-      val dirtyVisible =
-        if (s.morBuckets.isEmpty) 0L
-        else visible(s, morResolvedDF(s, s.morBuckets.sorted)).count()
-      cleanRows - cleanTombs + dirtyVisible
-    } else if (s.morBuckets.isEmpty) s.rowCount
-    else {
-      val dirty = s.morBuckets.toSet
-      val cleanRows = s.bucketRows.collect { case (b, n) if !dirty.contains(b) => n }.sum
-      // logical rows in a dirty bucket = its distinct key groups; the
-      // distinct's grouping includes the bucket group so it rides the
-      // scan's partitioning (zero exchange), and column pruning shrinks the
-      // parquet read to the key columns alone — no payload bytes touched
-      cleanRows + groupScanDF(s, scanGroups(Seq(s), s.morBuckets.sorted))
-        .select((s.keyCols ++ Seq(BucketCol, GroupCol)).map(col): _*)
-        .distinct().count()
-    }
+    if (s.morBuckets.isEmpty && s.tombstoneCol.isEmpty) s.rowCount
+    else resolvedRead(s).count()
   }
 
   /** Keyed POINT READ with bucket pruning (≙ the reference SQLite sink's
@@ -562,15 +507,13 @@ final class LakeTable private (
     * (1/numBuckets of the table), merge-on-read layers resolved iff that
     * bucket is dirty. `keyEquals` must bind every key column.
     *
-    * When the distributed read of the bucket would be ONE task (the rule
-    * is on [[keyedRead]]: a dirty bucket within
-    * `spark.sql.files.maxPartitionBytes`, or clean files Spark's file-split
-    * planning packs into one split), its files are read on the DRIVER
-    * during this call and the result is a local DataFrame: collecting it
-    * starts no Spark job. Otherwise the result is the lazy distributed
-    * plan of [[read]], narrowed to the bucket and the key. Either way the
-    * snapshot is pinned when this is called; on the driver path its files
-    * are read then too. */
+    * When the resolved scan plans the key's files as ONE task (the rule
+    * is on [[keyedRead]]), they are read on the DRIVER during this call,
+    * with the scan's own reader and fold, and the result is a local
+    * DataFrame: collecting it starts no Spark job. Otherwise the result is
+    * the lazy distributed plan of [[read]] filtered to the key, which
+    * plans only the key's bucket. Either way the snapshot is pinned when
+    * this is called; on the driver path its files are read then too. */
   def read(keyEquals: Map[String, Any]): DataFrame = {
     val s = snapshot()
     require(s.keyCols.forall(keyEquals.contains),
@@ -592,19 +535,18 @@ final class LakeTable private (
   }
 
   /** Visible winners of the key tuples `keys` (one value per key column, in
-    * `keyCols` order) in snapshot `s`, reading only the buckets they hash
-    * into and, in those, only the files whose snapshot bounds may hold one
-    * of the keys ([[FileStats.mayMatch]], the bucket scan's file skipping;
-    * a key predicate is safe to skip by in dirty and tombstone buckets too,
-    * since every row of a key, tombstones included, carries the key). A
-    * tuple holding a null matches nothing, as SQL equality does.
+    * `keyCols` order) in snapshot `s`: the resolved scan with the keys as
+    * its filter, so it reads only the buckets they hash into and, in
+    * those, only the files whose snapshot bounds may hold one of the keys
+    * ([[graft.tables.dsv2.LakeScanPruning]]). A tuple holding a null
+    * matches nothing, as SQL equality does.
     *
-    * The files are read on the driver exactly when their distributed read
-    * would run as ONE task, so serving them locally gives up no parallelism
-    * and saves the job: a single dirty bucket whose kept files total at
-    * most `spark.sql.files.maxPartitionBytes` (the bucket scan resolves a
-    * dirty bucket in one task), or clean files that Spark's own file-split
-    * planning packs into one split ([[oneCleanSplit]]). */
+    * The files are read on the driver exactly when the scan plans them as
+    * at most ONE task within `spark.sql.files.maxPartitionBytes` — clean
+    * files Spark's own split planning packs into one split, or one dirty
+    * bucket of that size — so serving them locally gives up no
+    * parallelism and saves the job. The driver runs the scan's own
+    * reader and fold on those files. */
   private def keyedRead(s: TableSnapshot, keys: Seq[Seq[Any]]): DataFrame = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -621,120 +563,33 @@ final class LakeTable private (
       else catalystKeys.map(_.zip(s.keyCols).zip(types).map { case ((v, k), dt) =>
         sources.EqualTo(k, scalaValue(v, dt)): sources.Filter
       }.reduce(sources.And)).reduce(sources.Or)
-    val keep: String => Boolean =
-      rel => s.fileStats.get(rel).forall(FileStats.mayMatch(Array(pushed), _, schema))
-    val buckets = live.map(LakeTable.bucketOfKey(_, types, s.numBuckets)).distinct.sorted
-    val files = buckets.map(b => b -> s.bucketFiles.getOrElse(b, Nil).filter(keep))
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val lens = graft.tables.dsv2.LakeBucketSource.statLengths(root, files.flatMap(_._2), hadoopConf)
-    val (dirty, clean) = files.partition { case (b, _) => s.morBuckets.contains(b) }
-    val oneTask =
-      if (dirty.isEmpty) oneCleanSplit(clean.flatMap(_._2), lens)
-      else dirty.size == 1 && clean.forall(_._2.isEmpty) &&
-        dirty.head._2.map(lens).sum <= spark.sessionState.conf.filesMaxPartitionBytes
-    if (oneTask) driverKeyedRead(s, schema, files, catalystKeys, pushed, lens, hadoopConf)
-    else {
+    val scan = new graft.tables.dsv2.LakeSqlScan(root, s, schema, Array(pushed))
+    val parts = scan.planInputPartitions()
+    if (parts.length <= 1 && parts.forall(graft.tables.dsv2.LakeSqlScan.bytes(_) <=
+        spark.sessionState.conf.filesMaxPartitionBytes)) {
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      spark.createDataFrame(scan.readKeysOnDriver(parts, catalystKeys)
+        .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).asJava, schema)
+    } else {
       val pred =
         if (s.keyCols.size == 1) col(s.keyCols.head).isin(live.map(t => lit(t.head)): _*)
         else live.map(t => s.keyCols.zip(t).map { case (k, v) => col(k) === lit(v) }
           .reduce(_ && _)).reduce(_ || _)
-      visible(s, readBucketsDF(s, buckets, _.filter(pred), keep))
+      resolvedRead(s).filter(pred)
     }
-  }
-
-  /** Whether a parquet scan of the clean files `rels` would be one task
-    * (or none): Spark's own split planning, the calls a file scan makes,
-    * on the stat'd lengths. Each file costs its length plus
-    * `spark.sql.files.openCostInBytes`, a split holds at most
-    * min(`maxPartitionBytes`, max(openCost, total cost / parallelism)) and
-    * longer files are cut, so above parallelism 1 one split means one file
-    * within that bound. */
-  private def oneCleanSplit(rels: Seq[String], lens: Map[String, Long]): Boolean =
-    rels.isEmpty || {
-      import org.apache.hadoop.fs.{FileStatus, Path}
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.execution.PartitionedFileUtil
-      import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
-      val statuses = rels.map(rel =>
-        new FileStatus(lens(rel), false, 0, 0L, 0L, new Path(LakeTable.dataPath(root, rel))))
-      val maxSplit = FilePartition.maxSplitBytes(spark,
-        Seq(PartitionDirectory(InternalRow.empty, statuses.toArray)))
-      val splits = statuses.flatMap(st => PartitionedFileUtil.splitFiles(
-        FileStatusWithMetadata(st), st.getPath, isSplitable = true, maxSplit, InternalRow.empty))
-      FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplit).size == 1
-    }
-
-  /** [[keyedRead]] on the driver: Spark's own parquet reader over each
-    * bucket's kept `files` in bucket file order, through the snapshot
-    * schema (a column added after a file was written reads as null), with
-    * the key filter `pushed` for row-group pruning. Rows of the wanted keys
-    * (`keys` as Catalyst values) are kept; in a dirty bucket each key
-    * resolves with [[read]]'s rule, `max_by` over `orderCols` in Catalyst
-    * ordering, where on equal tuples the LATER row in file order wins.
-    * Tombstone winners are then hidden. */
-  private def driverKeyedRead(s: TableSnapshot, schema: StructType,
-      files: Seq[(Int, Seq[String])], keys: Seq[Seq[Any]],
-      pushed: org.apache.spark.sql.sources.Filter, lens: Map[String, Long],
-      hadoopConf: org.apache.hadoop.conf.Configuration): DataFrame = {
-    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    def ref(c: String) = {
-      val i = schema.fieldIndex(c)
-      BoundReference(i, schema(i).dataType, schema(i).nullable)
-    }
-    // keys compare as UnsafeRows: byte equality is Spark's own key
-    // equality (binary by content, -0.0 and NaN normalized by the writer)
-    val keyOf = UnsafeProjection.create(s.keyCols.map(ref))
-    val keyRow = UnsafeProjection.create(s.keyCols.zipWithIndex.map { case (c, i) =>
-      BoundReference(i, schema(c).dataType, nullable = true) })
-    val wanted = keys.map(t => keyRow(InternalRow.fromSeq(t)).copy()).toSet
-    // built only when there are files to read
-    lazy val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-      new StructType(), schema, Seq(pushed), Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf)
-    val copyRow = UnsafeProjection.create(schema)
-    val ordering = new InterpretedOrdering(s.orderCols.map(c => SortOrder(ref(c), Ascending)))
-    val rows = files.flatMap { case (b, rels) =>
-      val resolve = s.morBuckets.contains(b)
-      val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      val winners = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, InternalRow]
-      rels.foreach { rel =>
-        val len = lens(rel)
-        val it = reader(PartitionedFile(InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
-          0L, len, Array.empty[String], 0L, len, Map.empty))
-        try it.foreach { row =>
-          val k = keyOf(row)
-          if (wanted.contains(k)) {
-            val r = copyRow(row).copy()
-            if (!resolve) hits += r
-            else if (winners.get(k).forall(ordering.compare(r, _) >= 0)) winners(k.copy()) = r
-          }
-        } finally it match { case c: java.io.Closeable => c.close(); case _ => }
-      }
-      if (resolve) winners.values else hits
-    }
-    val visibleRows = s.tombstoneCol.fold(rows) { c =>
-      val i = schema.fieldIndex(c)
-      rows.filterNot(r => !r.isNullAt(i) && r.getBoolean(i))
-    }
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    spark.createDataFrame(
-      visibleRows.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).asJava, schema)
   }
 
   /** CO-LOCATED READ: the same resolved current state as [[read]], but
-    * served from the partitioning-reporting DSv2 scan with the bucket
-    * column (`_gbucket`) RETAINED, so Catalyst still knows the rows are
-    * clustered by the table's bucket function. Joining two same-layout
+    * served from the partitioning-reporting DSv2 bucket scan with the
+    * bucket column (`_gbucket`) RETAINED, so Catalyst still knows the rows
+    * are clustered by the table's bucket function. Joining two same-layout
     * tables' `readBucketed()` on `(keys…, _gbucket)` storage-partition-joins
-    * with ZERO exchange on either side — see [[colocatedJoin]]. The LWW
-    * resolve runs uniformly over every bucket (clean buckets are already
-    * one-row-per-key, so the agg is a per-bucket no-op pass that rides the
-    * scan's partitioning without shuffling; dirty buckets resolve exactly
-    * as in [[read]]). */
+    * with ZERO exchange on either side — see [[colocatedJoin]]. With
+    * merge-on-read debt, `Dedup.latestByKey` resolves every bucket riding
+    * the scan's partitioning (clean buckets are already one row per key);
+    * its `max_by` keeps the later row in bucket file order on equal
+    * ordering tuples, the tie rule of [[read]]'s fold
+    * ([[graft.tables.dsv2.LakeSqlResolvingReader]]). */
   def readBucketed(): DataFrame = {
     val s = snapshot()
     // the per-bucket scan (`KeyGroupedPartitioning(identity(_gbucket))`,
@@ -1601,7 +1456,7 @@ final class LakeTable private (
       try {
         stagedCommit(snap, curSchema, "maint", snap.sortOrder, snap.targetFileRows,
             statsFirst = snap.sortOrder)(sink =>
-          sink(buildMerged(align(readSnapshotDF(snap), curSchema), emptyBatch, reSnap,
+          sink(buildMerged(align(layerResolved(snap), curSchema), emptyBatch, reSnap,
               partitions = newNumBuckets * writeFactor, writeFactor = writeFactor,
               salted = false)
             .drop(SubSplitCol))) { staged =>
@@ -2145,8 +2000,9 @@ final class LakeTable private (
     //    - every writer drops an `inflight-<dir>` marker in meta/ for the
     //      write→commit window; marked dirs are skipped (stale markers from
     //      crashed runs age out after [[InflightMarkerTtlMs]]);
-    //    - the referenced set is re-read AFTER listing the candidates, so a
-    //      commit landing mid-sweep protects its files.
+    //    - the markers are read, then the referenced set, both AFTER
+    //      listing the candidates, so a commit landing mid-sweep protects
+    //      its files either way.
     val dataDir = Paths.get(root, "data")
     var commitsRemoved = 0
     if (Files.isDirectory(dataDir)) {
@@ -2159,13 +2015,16 @@ final class LakeTable private (
           }.toSeq
         finally ls.close()
       }
+      // markers BEFORE the ledgers (see removeOrphanFiles)
+      val marked = candidates.map(_.getFileName.toString)
+        .filter(inflightMarkerLive(meta, _)).toSet
       // AFTER candidate listing; None ⇒ skip the sweep entirely this pass
       // (dir-prefix granularity: data/<dir>)
       referencedAcrossLedgers(meta)(rel => rel.split('/').take(2).mkString("/"))
         .foreach { referenced =>
           candidates.foreach { p =>
             val n = p.getFileName.toString
-            if (!referenced.contains(s"data/$n") && !inflightMarkerLive(meta, n)) {
+            if (!referenced.contains(s"data/$n") && !marked(n)) {
               deleteRecursively(p); commitsRemoved += 1
             }
           }
@@ -2283,6 +2142,11 @@ final class LakeTable private (
       case _: java.io.UncheckedIOException | _: java.io.IOException =>
         return (0, 0)
     }
+    // markers BEFORE the ledgers: a writer publishes its snapshot, then
+    // drops its marker, so a dir whose marker is gone here has its commit
+    // in the ledgers read next; checked after them, a commit landing in
+    // between would read as unreferenced and unmarked, and lose its files
+    candidates.foreach(rel => marked(rel.split('/').lift(1).getOrElse("")))
     // None = some ledger unreadable (racing expire/commit): abort the sweep
     referencedAcrossLedgers(meta)(identity) match {
       case None => (0, 0)

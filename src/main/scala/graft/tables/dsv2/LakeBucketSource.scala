@@ -130,20 +130,6 @@ object LakeBucketSource {
     }
   }
 
-  /** Shared runtime-filter → kept-bucket-set rule for both scans: every
-    * `In` filter on the single key column hashes its (non-null — null never
-    * equi-joins) values to buckets with the writer's bucket function
-    * ([[LakeTable.bucketOfKey]]); multiple filters intersect. None = no
-    * applicable filter arrived (keep everything). */
-  private[dsv2] def runtimeKeptBuckets(filters: Array[sources.Filter], key: String,
-      dt: DataType, numBuckets: Int): Option[Set[Int]] = {
-    val keptSets = filters.collect {
-      case sources.In(attr, values) if attr == key =>
-        values.filter(_ != null).map(v => LakeTable.bucketOfKey(Seq(v), Seq(dt), numBuckets)).toSet
-    }
-    if (keptSets.isEmpty) None else Some(keptSets.reduce(_ intersect _))
-  }
-
   /** Stat file lengths in BOUNDED PARALLEL with a timeout: a serial
     * driver-side getFileStatus loop over every layered file would re-run on
     * every (re)planning of a scan, and a hung filesystem must fail planning
@@ -288,70 +274,19 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
 
   private val dataSchema = StructType.fromDDL(snap.schemaDdl)
 
-  /** Metadata-only statistics (SupportsReportStatistics): row counts come
-    * from the snapshot's incrementally-maintained per-bucket counters, size
-    * from rows × the READ schema's default size. Without this Catalyst
-    * assigns the scan `spark.sql.defaultSizeInBytes` (effectively infinite),
-    * so a join against even a tiny lake table would never auto-broadcast —
-    * with it, broadcast decisions and AQE thresholds see the real magnitude.
-    * Runtime filtering tightens the estimate to the kept buckets (stats are
-    * re-read after runtime filters in adaptive re-planning). */
-  override def estimateStatistics(): Statistics = {
-    val kept = runtimeKept
-    val rows = buckets.iterator
-      .filter(b => kept.forall(_.contains(b)))
-      .map(estimatedBucketRows).sum
-    LakeBucketSource.snapshotStats(rows, readSchema())
-  }
+  /** rows are read as stored, so every pushed filter may skip a file of
+    * any bucket. KeyGroupedPartitioning requires the partition-value set to
+    * be IDENTICAL after runtime filtering (BatchScanExec re-checks it), so
+    * a pruned bucket keeps its partition and loses its files. */
+  private val pruning = new LakeScanPruning(snap, dataSchema, buckets, pushedFilters,
+    resolved = false)
 
-  /** Filter-aware row estimate: the stored rows of exactly the files the
-    * planner will keep (file bounds mirror [[statsKeep]]), plus the full
-    * residual for files without bounds. Still an UPPER bound on matching
-    * rows — never under-prices a side into a wrong broadcast — but a
-    * selective filter on a big table now auto-broadcasts instead of
-    * costing `rowCount × rowBytes`. */
-  private def estimatedBucketRows(b: Int): Long = {
-    val total = snap.bucketRows.getOrElse(b, 0L)
-    val files = snap.bucketFiles.getOrElse(b, Nil)
-    if (pushedFilters.isEmpty || files.isEmpty) return total
-    var known = 0L; var kept = 0L
-    files.foreach { rel =>
-      snap.fileStats.get(rel).foreach { fs =>
-        known += fs.rows
-        if (graft.tables.FileStats.mayMatch(pushedFilters, fs, dataSchema)) kept += fs.rows
-      }
-    }
-    kept + math.max(0L, total - known)
-  }
+  override def estimateStatistics(): Statistics =
+    LakeBucketSource.snapshotStats(pruning.estimatedRows(), readSchema())
 
-  /** RUNTIME BUCKET PRUNING (≙ Iceberg's dynamic partition pruning): a join
-    * of this scan against a selective build side hands the build side's key
-    * values here at runtime; every bucket none of them hashes into keeps
-    * its (stable, KGP-reported) partition but drops its FILE LIST — the
-    * scan does zero I/O for it. At a 100 TB table joined with a 10k-key
-    * batch this turns a full-table scan into ~min(10k, B) bucket reads.
-    *
-    * Single-key tables only: an `In` filter on one column of a composite
-    * key cannot evaluate the bucket hash. Spark's contract allows partial
-    * application (the join still evaluates exact equality above the scan),
-    * so bucket granularity — and ignoring non-In filters — is safe.
-    * KeyGroupedPartitioning requires the partition-value set to be IDENTICAL
-    * after runtime filtering (BatchScanExec re-checks it), which is why
-    * pruning empties a bucket's files rather than dropping its partition. */
-  @volatile private var runtimeKept: Option[Set[Int]] = None
+  override def filterAttributes(): Array[NamedReference] = pruning.filterAttributes()
+  override def filter(filters: Array[sources.Filter]): Unit = pruning.filter(filters)
 
-  override def filterAttributes(): Array[NamedReference] =
-    if (snap.keyCols.size == 1) Array(Expressions.column(snap.keyCols.head))
-    else Array.empty
-
-  override def filter(filters: Array[sources.Filter]): Unit = {
-    val key = snap.keyCols.head
-    LakeBucketSource.runtimeKeptBuckets(filters, key,
-      dataSchema(key).dataType, snap.numBuckets).foreach { kept =>
-      runtimeKept = Some(kept)
-      LakeBucketScan.runtimePrunes.incrementAndGet()
-    }
-  }
   private val partitionSchema = LakeBucketSource.partitionSchema(groups.isDefined)
 
   /** a bucket's partition key: its group in a grouped scan, else itself */
@@ -376,40 +311,18 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
         Array(Expressions.identity(LakeBucketSource.BucketCol)), buckets.size)
     }
 
-  /** PLANNING-TIME FILE SKIPPING from the snapshot's per-file column bounds
-    * (≙ Iceberg manifest pruning): a pushed predicate that provably matches
-    * nothing in a file drops the file before a task is ever scheduled —
-    * zero storage I/O, unlike the row-group pruning the same filters
-    * already drive inside the reader. Exactly as safe as that row-group
-    * pruning: the pushed copies are residual (re-evaluated above the scan),
-    * and bounds only prune on a proof ([[graft.tables.FileStats.mayMatch]]).
-    * The headline shape at 100 TB: `WHERE slot > X` skips every file of
-    * every bucket not rewritten since X. */
-  private def statsKeep(rel: String): Boolean =
-    pushedFilters.isEmpty || snap.fileStats.get(rel).forall(
-      graft.tables.FileStats.mayMatch(pushedFilters, _, dataSchema))
-
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val keep: Int => Boolean = b => runtimeKept.forall(_.contains(b))
-    // one bounds evaluation per file: O(files × filters) once, not per use
-    val keptFiles: Map[Int, Seq[String]] = buckets.filter(keep).map(b =>
-      b -> snap.bucketFiles.getOrElse(b, Nil).filter(statsKeep)).toMap
-    val allRel = buckets.sorted.filter(keep).flatMap(keptFiles(_)).distinct
-    LakeBucketScan.statsPrunedFiles.addAndGet(
-      buckets.filter(keep).map(b => snap.bucketFiles.getOrElse(b, Nil).size).sum
-        - allRel.size)
-    val lens = LakeBucketSource.statLengths(root, allRel, conf)
+    val kept = pruning.keptFiles().toMap
+    val lens = LakeBucketSource.statLengths(root, kept.values.flatten.toSeq,
+      SparkSession.active.sessionState.newHadoopConf())
     buckets.sorted.zipWithIndex.map { case (b, idx) =>
       val values = if (groups.isDefined) InternalRow(b, keyOf(b)) else InternalRow(b)
-      val files =
-        if (!keep(b)) Array.empty[PartitionedFile] // runtime-pruned: no I/O
-        else keptFiles(b).map { rel =>
-          PartitionedFile(
-            partitionValues = values,
-            filePath = org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
-            start = 0L, length = lens(rel))
-        }.toArray
+      val files = kept.getOrElse(b, Nil).map { rel =>
+        PartitionedFile(
+          partitionValues = values,
+          filePath = org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
+          start = 0L, length = lens(rel))
+      }.toArray
       LakeBucketPartition(idx, keyOf(b), files): InputPartition
     }.toArray
   }
@@ -417,6 +330,140 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
   override def createReaderFactory(): PartitionReaderFactory =
     new LakeBucketReaderFactory(LakeBucketSource.parquetReaderFactory(
       SparkSession.active, dataSchema, readDataSchema, partitionSchema, pushedFilters))
+}
+
+/** What both lake scans skip before a task is scheduled, and the rows they
+  * expect — one implementation, so the bucket scan and the resolved scan
+  * cannot drift apart, and each counter is incremented in one place.
+  *
+  *  - BUCKET PRUNING (≙ Iceberg partition pruning): key equalities among
+  *    the pushed filters (`k = v`, `k IN (…)`, one per key column, and ORs
+  *    of such) hash to the only buckets that can hold a matching row, with
+  *    the writer's bucket function ([[LakeTable.bucketOfKey]]).
+  *  - RUNTIME BUCKET PRUNING (≙ Iceberg's dynamic partition pruning): a
+  *    join against a selective build side hands its key values to
+  *    [[filter]] at runtime, and the same rule applies to them. Spark's
+  *    contract allows partial application (the join still evaluates
+  *    exact equality above the scan), so bucket granularity — and
+  *    ignoring other filters — is safe. At a 100 TB table joined with a
+  *    10k-key batch this turns a full-table scan into ~min(10k, B) bucket
+  *    reads.
+  *  - FILE SKIPPING from the snapshot's per-file column bounds (≙ Iceberg
+  *    manifest pruning): a pushed predicate that provably matches nothing
+  *    in a file drops it before a task is scheduled
+  *    ([[graft.tables.FileStats.mayMatch]]); the pushed copies stay
+  *    residual. The headline shape at 100 TB: `WHERE slot > X` skips every
+  *    file of every bucket not rewritten since X. Where rows are read as
+  *    stored — the raw layer scan, and a clean bucket of the RESOLVED scan
+  *    (`resolved`, one row per key) — every pushed filter may skip a file.
+  *    In a bucket the resolved scan folds, only KEY-ONLY filters may: every
+  *    row of a key, tombstones included, carries the key, so they never
+  *    drop a key's winner and leave a shadowed row to win the fold.
+  *  - ROW ESTIMATES: the stored rows of exactly the files kept, plus the
+  *    full residual for files without bounds — an UPPER bound on matching
+  *    rows, so a selective filter auto-broadcasts without ever under-pricing
+  *    a side into a wrong broadcast.
+  *
+  * Bucket pruning is skipped for floating-point and nested keys: equal
+  * values such as -0.0 and 0.0 need not hash alike. */
+private[dsv2] final class LakeScanPruning(snap: graft.tables.TableSnapshot,
+    dataSchema: StructType, buckets: Seq[Int], pushed: Array[sources.Filter],
+    resolved: Boolean) {
+  private val dirty = snap.morBuckets.toSet
+  private val keyOnly = pushed.filter(_.references.forall(snap.keyCols.contains))
+
+  /** the pushed filters that may skip files of bucket `b` */
+  def filtersOf(b: Int): Array[sources.Filter] =
+    if (resolved && dirty.contains(b)) keyOnly else pushed
+
+  /** the pushed filters that may prune row groups under a fold */
+  def keyOnlyFilters: Array[sources.Filter] = keyOnly
+
+  private val staticKept: Option[Set[Int]] = keyBuckets(pushed.toSeq)
+  @volatile private var runtimeKept: Option[Set[Int]] = None
+
+  def kept(b: Int): Boolean =
+    staticKept.forall(_.contains(b)) && runtimeKept.forall(_.contains(b))
+
+  def filterAttributes(): Array[NamedReference] =
+    if (snap.keyCols.size == 1) Array(Expressions.column(snap.keyCols.head))
+    else Array.empty
+
+  def filter(filters: Array[sources.Filter]): Unit =
+    keyBuckets(filters.toSeq).foreach { k =>
+      runtimeKept = Some(k)
+      LakeBucketScan.runtimePrunes.incrementAndGet()
+    }
+
+  private def mayMatch(b: Int, rel: String): Boolean = {
+    val fs = filtersOf(b)
+    fs.isEmpty || snap.fileStats.get(rel).forall(graft.tables.FileStats.mayMatch(fs, _, dataSchema))
+  }
+
+  /** Each kept bucket with the files its bounds cannot rule out, in
+    * ascending bucket order; one bounds evaluation per file. */
+  def keptFiles(): Seq[(Int, Seq[String])] = {
+    val keptBuckets = buckets.distinct.sorted.filter(kept)
+    val all = keptBuckets.map(b => b -> snap.bucketFiles.getOrElse(b, Nil))
+    val files = all.map { case (b, fs) => b -> fs.filter(mayMatch(b, _)) }
+    LakeBucketScan.statsPrunedFiles.addAndGet(all.map(_._2.size).sum - files.map(_._2.size).sum)
+    files
+  }
+
+  def estimatedRows(): Long = buckets.distinct.filter(kept).iterator.map { b =>
+    val total = snap.bucketRows.getOrElse(b, 0L)
+    val files = snap.bucketFiles.getOrElse(b, Nil)
+    if (filtersOf(b).isEmpty || files.isEmpty) total
+    else {
+      var known = 0L; var keptRows = 0L
+      files.foreach { rel =>
+        snap.fileStats.get(rel).foreach { fs =>
+          known += fs.rows
+          if (mayMatch(b, rel)) keptRows += fs.rows
+        }
+      }
+      keptRows + math.max(0L, total - known)
+    }
+  }.sum
+
+  /** The buckets a conjunction of filters can match rows in, from its key
+    * equalities; None = any bucket. */
+  private def keyBuckets(filters: Seq[sources.Filter]): Option[Set[Int]] = {
+    val types = snap.keyCols.map(dataSchema(_).dataType)
+    val hashable = types.forall {
+      case FloatType | DoubleType | _: StructType | _: ArrayType | _: MapType => false
+      case _ => true
+    }
+    def conjuncts(fs: Seq[sources.Filter]): Seq[sources.Filter] = fs.flatMap {
+      case sources.And(l, r) => conjuncts(Seq(l, r))
+      case f => Seq(f)
+    }
+    def of(fs: Seq[sources.Filter]): Option[Set[Int]] = {
+      val flat = conjuncts(fs)
+      val values = snap.keyCols.map(k => flat.collectFirst {
+        case sources.EqualTo(a, v) if a == k => Seq(v)
+        case sources.In(a, vs) if a == k => vs.toSeq
+      }.map(_.filter(_ != null)))
+      val direct =
+        if (values.exists(_.isEmpty) ||
+          values.map(_.get.size.toLong).product > LakeScanPruning.MaxKeyTuples) None
+        else Some(values.map(_.get).foldLeft(Seq(Seq.empty[Any])) { (tuples, vs) =>
+          for (t <- tuples; v <- vs) yield t :+ v
+        }.map(LakeTable.bucketOfKey(_, types, snap.numBuckets)).toSet)
+      val ors = flat.collect { case sources.Or(l, r) =>
+        for (a <- of(Seq(l)); b <- of(Seq(r))) yield a ++ b
+      }.flatten
+      (direct.toSeq ++ ors).reduceOption(_ intersect _)
+    }
+    if (!hashable) None
+    else try of(filters) catch { case scala.util.control.NonFatal(_) => None }
+  }
+}
+
+private[dsv2] object LakeScanPruning {
+  /** key tuples hashed at most for one conjunction: beyond this the
+    * cross product of per-column value lists is not worth planning on */
+  val MaxKeyTuples = 65536L
 }
 
 object LakeBucketScan {

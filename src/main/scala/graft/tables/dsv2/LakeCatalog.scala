@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, RowOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
@@ -39,16 +39,17 @@ import graft.tables.{LakeTable, TableSnapshot}
   *   SHOW TABLES IN lake
   * }}}
   *
-  * Reads have full table semantics, not raw-file semantics: merge-on-read
-  * buckets are LWW-resolved IN THE SCAN (one task per bucket folds its
-  * layers — the same working set a compaction task holds), and tombstoned
-  * keys are hidden, exactly like [[graft.tables.LakeTable.read]]. Clean
-  * buckets of an upsert-only table stream through Spark's vectorized
-  * columnar parquet path untouched. Column pruning, parquet stats pruning
-  * of pushed filters (clean buckets only — a row-group pruned under a
-  * merge-on-read fold could drop a key's winner and resurrect a shadowed
-  * row), snapshot statistics, and runtime (join-driven) bucket pruning all
-  * apply.
+  * Reads have full table semantics, not raw-file semantics: they run
+  * [[LakeSqlScan]], the one resolved read that
+  * [[graft.tables.LakeTable.read]], `readAt` and keyed reads run too, so
+  * SQL and the typed API return the same rows. Merge-on-read buckets are
+  * LWW-resolved IN THE SCAN (a task folds its dirty buckets one after
+  * another — the working set a compaction task holds), tombstoned keys are
+  * hidden, and clean buckets read in Spark's file splits. Column pruning,
+  * bucket pruning by key equalities, file and row-group skipping by pushed
+  * filters (any filter in clean buckets; only key filters in folded
+  * buckets, where skipping a key's winner would resurrect a shadowed row),
+  * snapshot statistics, and runtime (join-driven) bucket pruning all apply.
   *
   * Writes: `INSERT INTO lake.t SELECT …` executes as an exactly-LWW MERGE
   * through the same write path as the typed API (see
@@ -557,7 +558,8 @@ object LakeCatalog {
         case fs: HadoopFsRelation => fs.location.isInstanceOf[InMemoryFileIndex]
         case _ => false
       })
-      case r: DataSourceV2Relation => r.table.isInstanceOf[LakeSqlTable]
+      case r: DataSourceV2Relation =>
+        r.table.isInstanceOf[LakeSqlTable] || r.table.isInstanceOf[LakeReadTable]
       case _ => false
     }
     val unsafeShape =
@@ -618,12 +620,50 @@ final class LakeSqlScanBuilder(root: String, snap: TableSnapshot,
     new LakeSqlScan(root, snap, requiredData, pushedFilters())
 }
 
+/** The table-semantics read of one snapshot outside SQL —
+  * [[graft.tables.LakeTable.read]], `readAt` and distributed keyed reads:
+  * the [[LakeSqlScan]] with the declared DDL schema (every column
+  * nullable, as the table was created). */
+private[tables] final class LakeReadTable(root: String, snap: TableSnapshot)
+    extends Table with SupportsRead {
+  private val ddl = StructType.fromDDL(snap.schemaDdl)
+  override def name(): String = s"lake($root@v${snap.version})"
+  override def schema(): StructType = ddl
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
+    new LakeSqlScanBuilder(root, snap, ddl)
+}
+
+/** THE RESOLVED READ of a lake table: what SQL `SELECT`, row-level DML,
+  * [[graft.tables.LakeTable.read]], `readAt` and keyed reads all scan.
+  * Every row it returns is its key's LWW winner, and tombstoned keys are
+  * hidden.
+  *
+  * Task shapes:
+  *  - CLEAN buckets hold one row per key, so their files need no fold and
+  *    are planned with Spark's own file splits
+  *    (`FilePartition.maxSplitBytes`/`getFilePartitions`, as a parquet scan
+  *    of the same files would be): a large clean bucket still reads in
+  *    parallel, small files pack together.
+  *  - DIRTY (merge-on-read) buckets are folded in-task
+  *    ([[LakeSqlResolvingReader]]), one bucket after another, so a task
+  *    holds one bucket's winners; a dirty bucket's files never split. Its
+  *    buckets are packed by [[graft.tables.MergePlan.scanGroups]]: a small
+  *    read runs at most `cores` tasks, a big one one task per bucket.
+  *
+  * Skipping and estimates are [[LakeScanPruning]]'s (shared with the
+  * bucket scan). Clean buckets of an upsert-only table stream through
+  * Spark's vectorized columnar parquet path when no bucket of the snapshot
+  * needs a resolve. */
 final class LakeSqlScan(root: String, snap: TableSnapshot,
     readDataSchema: StructType, pushedFilters: Array[sources.Filter])
     extends Scan with Batch
     with SupportsReportStatistics with SupportsRuntimeFiltering {
 
   private val dataSchema = StructType.fromDDL(snap.schemaDdl)
+  private val pruning = new LakeScanPruning(snap, dataSchema, 0 until snap.numBuckets,
+    pushedFilters, resolved = true)
 
   /** columns the per-task resolve needs beyond the projection: LWW tuple
     * for merge-on-read folds, tombstone flag for visibility */
@@ -640,153 +680,182 @@ final class LakeSqlScan(root: String, snap: TableSnapshot,
       s"ReadSchema=${readDataSchema.fieldNames.mkString(",")}, " +
       s"PushedFilters=[${pushedFilters.mkString(", ")}])"
 
-  override def estimateStatistics(): Statistics = {
-    val kept = runtimeKept
-    val rows = snap.bucketRows.collect {
-      case (b, n) if kept.forall(_.contains(b)) => estimatedBucketRows(b, n) }.sum
-    LakeBucketSource.snapshotStats(rows, readSchema())
-  }
+  override def estimateStatistics(): Statistics =
+    LakeBucketSource.snapshotStats(pruning.estimatedRows(), readSchema())
 
-  /** Filter-aware row estimate mirroring [[statsKeep]] (clean non-tombstone
-    * buckets only): stored rows of the files the planner keeps + full
-    * residual for unbounded files — an upper bound on matching rows, so a
-    * selective filter auto-broadcasts without ever under-pricing. */
-  private def estimatedBucketRows(b: Int, total: Long): Long = {
-    val files = snap.bucketFiles.getOrElse(b, Nil)
-    if (pushedFilters.isEmpty || files.isEmpty ||
-      snap.morBuckets.contains(b) || snap.tombstoneCol.isDefined) return total
-    var known = 0L; var kept = 0L
-    files.foreach { rel =>
-      snap.fileStats.get(rel).foreach { fs =>
-        known += fs.rows
-        if (graft.tables.FileStats.mayMatch(pushedFilters, fs, dataSchema)) kept += fs.rows
-      }
-    }
-    kept + math.max(0L, total - known)
-  }
-
-  /** runtime (join-driven) bucket pruning, same rule as the bucket scan:
-    * an In-filter on a single-key table's key hashes to the touched bucket
-    * set. No partitioning is reported here, so pruned buckets simply drop
-    * out of the partition list. */
-  @volatile private var runtimeKept: Option[Set[Int]] = None
-
-  override def filterAttributes(): Array[NamedReference] =
-    if (snap.keyCols.size == 1) Array(Expressions.column(snap.keyCols.head))
-    else Array.empty
-
-  override def filter(filters: Array[sources.Filter]): Unit = {
-    val key = snap.keyCols.head
-    LakeBucketSource.runtimeKeptBuckets(filters, key,
-      dataSchema(key).dataType, snap.numBuckets).foreach { kept =>
-      runtimeKept = Some(kept)
-      LakeBucketScan.runtimePrunes.incrementAndGet()
-    }
-  }
-
-  /** Planning-time file skipping from the snapshot's per-file bounds,
-    * restricted to buckets the reader factory serves through the PLAIN
-    * columnar path WITH pushed filters (clean bucket, no tombstone column)
-    * — the same condition under which row-group pruning already applies,
-    * so file-level pruning can never skip a row an in-task LWW/tombstone
-    * resolve would have needed. */
-  private def statsKeep(b: Int, rel: String): Boolean =
-    pushedFilters.isEmpty || snap.morBuckets.contains(b) ||
-      snap.tombstoneCol.isDefined ||
-      snap.fileStats.get(rel).forall(
-        graft.tables.FileStats.mayMatch(pushedFilters, _, dataSchema))
+  override def filterAttributes(): Array[NamedReference] = pruning.filterAttributes()
+  override def filter(filters: Array[sources.Filter]): Unit = pruning.filter(filters)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val keep: Int => Boolean = b => runtimeKept.forall(_.contains(b))
-    val buckets = snap.bucketFiles.keys.toSeq.sorted
-      .filter(b => keep(b) && snap.bucketFiles(b).nonEmpty)
-    // one bounds evaluation per file: O(files × filters) once, not per use
-    val keptFiles: Map[Int, Seq[String]] = buckets.map(b =>
-      b -> snap.bucketFiles(b).filter(statsKeep(b, _))).toMap
-    val allRel = buckets.flatMap(keptFiles(_)).distinct
-    LakeBucketScan.statsPrunedFiles.addAndGet(
-      buckets.map(snap.bucketFiles(_).size).sum - allRel.size)
-    val lens = LakeBucketSource.statLengths(root, allRel, conf)
-    buckets.zipWithIndex.map { case (b, idx) =>
-      val files = keptFiles(b).map { rel =>
-        PartitionedFile(
-          partitionValues = InternalRow.empty,
-          filePath = org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
-          start = 0L, length = lens(rel))
-      }.toArray
-      LakeSqlPartition(idx, b, files,
-        dirty = snap.morBuckets.contains(b)): InputPartition
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+    val spark = SparkSession.active
+    val kept = pruning.keptFiles().filter(_._2.nonEmpty)
+    val lens = LakeBucketSource.statLengths(root, kept.flatMap(_._2),
+      spark.sessionState.newHadoopConf())
+    val (dirty, clean) = kept.partition { case (b, _) => snap.morBuckets.contains(b) }
+    val statuses = clean.flatMap(_._2).map(rel =>
+      new FileStatus(lens(rel), false, 0, 0L, 0L, new Path(LakeTable.dataPath(root, rel))))
+    val cleanSplits =
+      if (statuses.isEmpty) Nil
+      else {
+        val maxSplit = FilePartition.maxSplitBytes(spark,
+          Seq(PartitionDirectory(InternalRow.empty, statuses.toArray)))
+        val splits = statuses.flatMap(st => PartitionedFileUtil.splitFiles(
+          FileStatusWithMetadata(st), st.getPath, isSplitable = true, maxSplit, InternalRow.empty))
+        FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplit)
+          .map(fp => Array(fp.files.toArray))
+      }
+    val dirtyGroups = graft.tables.MergePlan.scanGroups(Seq(snap), dirty.map(_._1),
+      spark.sparkContext.defaultParallelism).toSeq.flatMap { groups =>
+      dirty.groupBy { case (b, _) => groups.of(b) }.toSeq.sortBy(_._1).map(_._2.map {
+        case (_, rels) => rels.map(rel => PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
+          0L, lens(rel))).toArray
+      }.toArray)
+    }
+    (cleanSplits.map(_ -> false) ++ dirtyGroups.map(_ -> true)).zipWithIndex.map {
+      case ((units, fold), i) => LakeSqlPartition(i, units, fold): InputPartition
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    // clean buckets of an upsert-only table pass straight through the
-    // vectorized columnar path with stats-pruning filters; buckets that
-    // need an in-task resolve (merge-on-read fold and/or tombstone hiding)
-    // read the resolve schema row-wise — WITHOUT pushed filters, which
-    // could prune a key's winner row-group and resurrect a shadowed row
-    val needsResolve = snap.morBuckets.nonEmpty || snap.tombstoneCol.isDefined
-    val plain = LakeBucketSource.parquetReaderFactory(
-      spark, dataSchema, readDataSchema, StructType(Nil), pushedFilters)
+    // clean partitions of an upsert-only table read the projection with
+    // every pushed filter pruning row groups; everything else goes through
+    // the resolving reader, reading `resolveSchema` with only key-only
+    // filters pruning row groups ([[LakeScanPruning]])
+    val plain =
+      if (snap.tombstoneCol.isDefined) None
+      else Some(LakeBucketSource.parquetReaderFactory(
+        spark, dataSchema, readDataSchema, StructType(Nil), pushedFilters))
     val resolve =
-      if (needsResolve)
-        LakeBucketSource.parquetReaderFactory(
-          spark, dataSchema, resolveSchema, StructType(Nil), Array.empty)
-      else null
+      if (snap.tombstoneCol.isDefined || snap.morBuckets.nonEmpty)
+        Some(LakeBucketSource.parquetReaderFactory(spark, dataSchema, resolveSchema,
+          StructType(Nil), pruning.keyOnlyFilters))
+      else None
     new LakeSqlReaderFactory(plain, resolve, resolveSchema, readDataSchema,
       snap.keyCols, snap.orderCols, snap.tombstoneCol,
-      uniformColumnar = !needsResolve)
+      uniformColumnar = resolve.isEmpty)
+  }
+
+  /** The rows of `keys` (tuples of Catalyst values in `keyCols` order) in
+    * the planned `parts`, read on the driver with the resolving reader.
+    * Rows of other keys are dropped before the fold, so the driver holds
+    * the wanted keys' rows only. */
+  private[tables] def readKeysOnDriver(parts: Array[InputPartition],
+      keys: Seq[Seq[Any]]): Seq[InternalRow] = {
+    val rs = resolveSchema
+    val keyTypes = snap.keyCols.map(c => rs(c).dataType)
+    val keyOf = UnsafeProjection.create(snap.keyCols.map { c =>
+      val i = rs.fieldIndex(c)
+      BoundReference(i, rs(i).dataType, rs(i).nullable)
+    })
+    val keyRow = UnsafeProjection.create(keyTypes.zipWithIndex.map { case (dt, i) =>
+      BoundReference(i, dt, nullable = true) })
+    val wanted = keys.map(t => keyRow(InternalRow.fromSeq(t)).copy()).toSet
+    // Spark's file-format parquet reader, as the driver keyed read used
+    // before the resolved scan: with the scan's partition reader instead,
+    // perfbench's delta_mor point reads measured slower
+    // (tools/bench_resolved_read_pairs.json)
+    lazy val readFile = {
+      val spark = SparkSession.active
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .buildReaderWithPartitionValues(spark, dataSchema, StructType(Nil), rs,
+          pruning.keyOnlyFilters.toSeq,
+          Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf())
+    }
+    def open(fp: FilePartition): PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+      private val files = fp.files.iterator
+      private var rows: Iterator[InternalRow] = Iterator.empty
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext && files.hasNext) { close(); rows = readFile(files.next()) }
+        rows.hasNext && { row = rows.next(); true }
+      }
+      override def get(): InternalRow = row
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+    parts.toSeq.flatMap { p =>
+      val reader = new LakeSqlResolvingReader(p.asInstanceOf[LakeSqlPartition], open,
+        rs, readDataSchema, snap.keyCols, snap.orderCols, snap.tombstoneCol,
+        row => wanted.contains(keyOf(row)))
+      try Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get().copy())
+        .toVector
+      finally reader.close()
+    }
   }
 }
 
-final case class LakeSqlPartition(index: Int, bucket: Int,
-    files: Array[PartitionedFile], dirty: Boolean) extends InputPartition
+object LakeSqlScan {
+  /** [[LakeReadTable]] of `snap` as a DataFrame */
+  private[tables] def relation(spark: SparkSession, root: String,
+      snap: TableSnapshot): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftshim.RelationDF(spark, new LakeReadTable(root, snap))
 
-final class LakeSqlReaderFactory(plain: ParquetPartitionReaderFactory,
-    resolve: ParquetPartitionReaderFactory, resolveSchema: StructType,
+  /** bytes a partition reads */
+  private[tables] def bytes(p: InputPartition): Long =
+    p.asInstanceOf[LakeSqlPartition].units.iterator.flatten.map(_.length).sum
+}
+
+/** One task of [[LakeSqlScan]]: `units` are read one after another — a
+  * split of clean files (one unit), or a group of dirty buckets, one unit
+  * per bucket, each folded when `fold` is set. */
+final case class LakeSqlPartition(index: Int, units: Array[Array[PartitionedFile]],
+    fold: Boolean) extends InputPartition
+
+final class LakeSqlReaderFactory(plain: Option[ParquetPartitionReaderFactory],
+    resolve: Option[ParquetPartitionReaderFactory], resolveSchema: StructType,
     readDataSchema: StructType, keyCols: Seq[String], orderCols: Seq[String],
     tombstoneCol: Option[String], uniformColumnar: Boolean)
     extends PartitionReaderFactory {
 
-  private def needsResolve(p: InputPartition): Boolean = p match {
-    case LakeSqlPartition(_, _, _, dirty) => dirty || tombstoneCol.isDefined
-    case other => throw new IllegalStateException(s"unexpected partition $other")
-  }
+  private def split(p: LakeSqlPartition): FilePartition =
+    FilePartition(p.index, p.units.flatten)
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[LakeSqlPartition]
-    if (!needsResolve(p)) plain.createReader(FilePartition(part.index, part.files))
-    else new LakeSqlResolvingReader(part, resolve, resolveSchema,
-      readDataSchema, keyCols, orderCols, tombstoneCol)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    p match {
+      case part: LakeSqlPartition if !part.fold && plain.isDefined =>
+        plain.get.createReader(split(part))
+      case part: LakeSqlPartition => new LakeSqlResolvingReader(part, resolve.get.createReader,
+        resolveSchema, readDataSchema, keyCols, orderCols, tombstoneCol)
+      case other => throw new IllegalStateException(s"unexpected partition $other")
+    }
 
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val part = p.asInstanceOf[LakeSqlPartition]
-    plain.createColumnarReader(FilePartition(part.index, part.files))
-  }
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    plain.get.createColumnarReader(split(p.asInstanceOf[LakeSqlPartition]))
 
   /** Spark requires ONE answer across all partitions of a scan ("cannot mix
     * row-based and columnar input partitions"), so the columnar fast path
     * applies only when NO bucket needs an in-task resolve; a single dirty
     * bucket (or a tombstone column) routes the whole scan row-wise. */
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val part = p.asInstanceOf[LakeSqlPartition]
-    uniformColumnar && plain.supportColumnarReads(FilePartition(part.index, part.files))
-  }
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    uniformColumnar && plain.get.supportColumnarReads(split(p.asInstanceOf[LakeSqlPartition]))
 }
 
-/** Per-bucket table-semantics reader: LWW-fold merge-on-read layers (only
-  * when the bucket is dirty), hide tombstone winners, project to the
-  * pruned read schema. Memory bound: a dirty bucket's winners — the same
-  * working set a compaction task holds; a clean tombstoned bucket streams
-  * with O(1) state. */
+/** Table-semantics reader of one [[LakeSqlPartition]]: each unit's rows
+  * that pass `keep`, LWW-folded when the partition folds, tombstone
+  * winners hidden, projected to the read schema.
+  *
+  * THE LWW FOLD of resolved reads (SQL, [[graft.tables.LakeTable.read]],
+  * `readAt`, keyed reads on both paths): per key, the row with the highest
+  * ordering tuple (Catalyst's natural ascending order, nulls first) wins;
+  * on equal tuples the LATER row in bucket file order wins — the rule of
+  * `Dedup.latestByKey`'s `max_by`, which compaction and the changelog
+  * apply, so compacting never changes what a read returns. Memory bound:
+  * one dirty bucket's winners, the working set of a compaction task; a
+  * clean unit streams with O(1) state. */
 final class LakeSqlResolvingReader(p: LakeSqlPartition,
-    factory: ParquetPartitionReaderFactory, resolveSchema: StructType,
+    open: FilePartition => PartitionReader[InternalRow], resolveSchema: StructType,
     readDataSchema: StructType, keyCols: Seq[String], orderCols: Seq[String],
-    tombstoneCol: Option[String]) extends PartitionReader[InternalRow] {
+    tombstoneCol: Option[String], keep: InternalRow => Boolean = _ => true)
+    extends PartitionReader[InternalRow] {
 
   private def bound(cols: Seq[String]) = cols.map { c =>
     val i = resolveSchema.fieldIndex(c)
@@ -794,6 +863,9 @@ final class LakeSqlResolvingReader(p: LakeSqlPartition,
   }
   private val outProj = UnsafeProjection.create(bound(readDataSchema.fieldNames.toSeq))
   private val tombIdx = tombstoneCol.map(resolveSchema.fieldIndex)
+  private lazy val keyProj = UnsafeProjection.create(bound(keyCols))
+  /** compares two rows' ordering tuples in place */
+  private lazy val ord = RowOrdering.create(bound(orderCols).map(SortOrder(_, Ascending)), Nil)
 
   private def visible(row: InternalRow): Boolean = tombIdx match {
     case Some(i) => row.isNullAt(i) || !row.getBoolean(i)
@@ -801,44 +873,41 @@ final class LakeSqlResolvingReader(p: LakeSqlPartition,
   }
 
   private var reader: PartitionReader[InternalRow] = _
-  private var foldedIter: Iterator[InternalRow] = _
   private var current: InternalRow = _
 
-  if (p.files.nonEmpty) {
-    reader = factory.createReader(FilePartition(p.index, p.files))
-    if (p.dirty) {
-      val keyProj = UnsafeProjection.create(bound(keyCols))
-      val orderProj = UnsafeProjection.create(bound(orderCols))
-      val ord = RowOrdering.createNaturalAscendingOrdering(
-        orderCols.map(c => resolveSchema(resolveSchema.fieldIndex(c)).dataType))
-      val winners = new java.util.HashMap[UnsafeRow, (UnsafeRow, InternalRow)]()
-      try while (reader.next()) {
-        val row = reader.get()
-        val k = keyProj(row)
-        val o = orderProj(row)
-        val prev = winners.get(k)
-        if (prev == null || ord.compare(o, prev._1) > 0)
-          winners.put(k.copy(), (o.copy(), row.copy()))
-      } finally { reader.close(); reader = null }
-      foldedIter = winners.values().iterator().asScala.map(_._2)
+  /** one unit's rows that pass `keep`; closes its reader when drained */
+  private def unitRows(files: Array[PartitionedFile]): Iterator[InternalRow] = {
+    reader = open(FilePartition(p.index, files))
+    val r = reader
+    new Iterator[InternalRow] {
+      private var ready = false
+      def hasNext: Boolean = ready || {
+        while (!ready && r.next()) ready = keep(r.get())
+        if (!ready) { r.close(); if (reader eq r) reader = null }
+        ready
+      }
+      def next(): InternalRow = { hasNext; ready = false; r.get() }
     }
   }
 
-  override def next(): Boolean = {
-    if (foldedIter != null) {
-      while (foldedIter.hasNext) {
-        val row = foldedIter.next()
-        if (visible(row)) { current = outProj(row); return true }
-      }
-      false
-    } else if (reader != null) {
-      while (reader.next()) {
-        val row = reader.get()
-        if (visible(row)) { current = outProj(row); return true }
-      }
-      false
-    } else false
+  private def latest(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val winners = new java.util.HashMap[UnsafeRow, InternalRow]()
+    rows.foreach { row =>
+      val k = keyProj(row)
+      val prev = winners.get(k)
+      // an equal key already in the map keeps its copy: `k` only looks it up
+      if (prev == null) winners.put(k.copy(), row.copy())
+      else if (ord.compare(row, prev) >= 0) winners.put(k, row.copy())
+    }
+    winners.values().iterator().asScala
   }
+
+  private val rows: Iterator[InternalRow] = p.units.iterator
+    .flatMap(files => if (p.fold) latest(unitRows(files)) else unitRows(files))
+    .filter(visible)
+
+  override def next(): Boolean =
+    if (rows.hasNext) { current = outProj(rows.next()); true } else false
 
   override def get(): InternalRow = current
 

@@ -16,6 +16,27 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     * listeners added with `addSparkListener` share one queue, so when a
     * marker job's start reaches a listener added last, every earlier event
     * has reached the listeners added before it. */
+  /** The data files the lake scans of `df`'s physical plan will read: the
+    * files of every `BatchScanExec`'s input partitions, as plain paths
+    * (`Dataset.inputFiles` lists none for a DataSource-v2 relation). Fails
+    * when the plan has no such scan, so an empty set always means that
+    * every file was skipped. */
+  def plannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.tables.dsv2.{LakeBucketPartition, LakeSqlPartition}
+    val scans = (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case b: BatchScanExec => b }
+    assert(scans.nonEmpty, s"no DataSource-v2 scan in\n${df.queryExecution.executedPlan}")
+    scans.flatMap(_.inputPartitions).flatMap {
+      case p: LakeSqlPartition => p.units.toSeq.flatten
+      case p: LakeBucketPartition => p.files.toSeq
+      case other => fail(s"unexpected input partition $other")
+    }.map(_.filePath.toString.replaceFirst("^file:/+", "/")).toSet
+  }
+
   def drainListenerBus(): Unit = {
     val sc = spark.sparkContext
     val group = s"listener-drain-${System.nanoTime()}"

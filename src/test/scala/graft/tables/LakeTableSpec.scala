@@ -573,8 +573,7 @@ class LakeTableSpec extends SparkTestBase {
     assert(point.as[(String, Long, String)].collect().toSeq === Seq(("k7", 1L, "v7")))
     // scans exactly one bucket's files (1/8 of the table), a strict subset
     val all = t.snapshot().bucketFiles
-    def normalize(p: String) = p.replaceFirst("^file:/+", "/")
-    val scanned = point.inputFiles.map(normalize).toSet
+    val scanned = plannedFiles(point)
     val owning = all.filter { case (_, fs) =>
       fs.map(rel => s"${t.root}/$rel").toSet == scanned }
     assert(owning.size === 1, s"scanned files $scanned not exactly one bucket")
