@@ -3,7 +3,7 @@ package graft.etl.binary
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
-import graft.etl.model.AccountUpdate
+import graft.etl.model.{AccountUpdate, SnapshotManifest}
 
 /** AppendVec binary record codec.
   *
@@ -44,6 +44,14 @@ import graft.etl.model.AccountUpdate
 object AppendVecCodec {
 
   final val HeaderSize = 136
+
+  /** Upper bound on the records a snapshot decodes, known before any vec
+    * is read: every record takes at least [[HeaderSize]] bytes inside its
+    * vec's `currentLen`, and both decoders read only vecs the manifest
+    * lists, only within `currentLen`. */
+  def maxRecords(manifest: SnapshotManifest): Long =
+    manifest.entries.map(_.currentLen / HeaderSize).sum
+
   /** 16 GiB AppendVec size guard (append_vec.rs:46). */
   final val MaxAppendVecSize: Long = 16L * 1024 * 1024 * 1024
 

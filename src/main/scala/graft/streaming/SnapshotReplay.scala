@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.etl.binary.AppendVecCodec
 import graft.etl.model.AccountUpdate
 import graft.sources.{ArchiveSnapshotSource, SnapshotSource}
 import graft.tables.LakeTable
@@ -69,6 +70,12 @@ object SnapshotReplay {
     * GET (asserted in HttpSnapshotSourceSpec) — at 100 GB archives the
     * second zstd+tar decode (or transfer) is the dominant avoidable cost.
     *
+    * Every route passes the merge the manifest's record bound
+    * ([[graft.etl.binary.AppendVecCodec.maxRecords]]) as its `rowsHint`, so
+    * a small delta plans as a small operation although its decode is an
+    * opaque object-producing plan; the staged route takes the bound from
+    * the manifest its staging pass captures, with no second read.
+    *
     * @param txnApp override for the txn writer id: the default
     *               "snapshot-replay" watermark enforces slot-ordered replay
     *               (replayDir sorts first); the archive-tail stream passes a
@@ -90,7 +97,8 @@ object SnapshotReplay {
     SnapshotSource.open(spark, path) match {
       case u: graft.sources.UnpackedSnapshotSource =>
         table.merge(toDF(u.accountUpdates(spark)), batchId, salted = salted,
-          txn = Some((app, u.manifest.slot)), mor = mor)
+          txn = Some((app, u.manifest.slot)), mor = mor,
+          rowsHint = Some(AppendVecCodec.maxRecords(u.manifest)))
       // SMALL LOCAL ARCHIVES take a direct two-scan route: the merge reads
       // the archive twice (stats pass + write pass), which beats the staging
       // detour's write+re-read+extra-decode when the zstd+tar decode is
@@ -100,10 +108,11 @@ object SnapshotReplay {
       case a: graft.sources.ArchiveSnapshotSource
           if localArchiveBytes(spark, a.archivePath).exists(_ < StagingThresholdBytes) =>
         val conf = spark.sparkContext.hadoopConfiguration
-        val slot = ArchiveSnapshotSource.readManifest(a.archivePath, conf).slot
+        val manifest = ArchiveSnapshotSource.readManifest(a.archivePath, conf)
         val rows = ArchiveSnapshotSource.fromArchives(spark, Seq(a.archivePath))
         table.merge(toDF(rows), batchId, salted = salted,
-          txn = Some((app, slot)), mor = mor)
+          txn = Some((app, manifest.slot)), mor = mor,
+          rowsHint = Some(AppendVecCodec.maxRecords(manifest)))
       case streamOnce =>
         // NO filename-keyed pre-check: a path/URL can be refreshed in place
         // with a NEWER snapshot under the same name, and the only
@@ -111,8 +120,10 @@ object SnapshotReplay {
         // source cannot know without reading. A re-delivered apply therefore
         // costs one staging pass and then no-ops on the txn watermark inside
         // merge(); correctness over the saved fetch.
-        val acc = spark.sparkContext.collectionAccumulator[Long]("graft.manifest.slot")
-        val onManifest = (m: graft.etl.model.SnapshotManifest) => acc.add(m.slot)
+        // (slot, record bound) of the manifest, seen by the staging pass
+        val acc = spark.sparkContext.collectionAccumulator[(Long, Long)]("graft.manifest")
+        val onManifest = (m: graft.etl.model.SnapshotManifest) =>
+          acc.add((m.slot, AppendVecCodec.maxRecords(m)))
         val rows = streamOnce match {
           case a: graft.sources.ArchiveSnapshotSource =>
             graft.sources.ArchiveSnapshotSource.fromArchives(spark, Seq(a.archivePath), onManifest)
@@ -122,11 +133,12 @@ object SnapshotReplay {
         val staging = s"${table.root}/_staging/${new Path(path).getName}-${System.nanoTime()}"
         try {
           toDF(rows).write.mode("overwrite").parquet(staging) // the ONLY source read
-          val slots = acc.value
-          require(!slots.isEmpty, s"no manifest seen while staging $path")
+          val manifests = acc.value
+          require(!manifests.isEmpty, s"no manifest seen while staging $path")
+          val (slot, bound) = manifests.get(0)
           val staged = spark.read.schema(accountSchema).parquet(staging)
           table.merge(staged, batchId, salted = salted,
-            txn = Some((app, slots.get(0))), mor = mor)
+            txn = Some((app, slot)), mor = mor, rowsHint = Some(bound))
         } finally
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
     }
@@ -206,7 +218,11 @@ object SnapshotReplay {
     * refreshed with newer incrementals re-applies as one batch (old rows
     * lose the LWW resolve — cost, never correctness). Use [[replayDir]] /
     * [[startArchiveTail]] when per-archive ledger entries matter (live
-    * tailing). */
+    * tailing).
+    *
+    * The merge's `rowsHint` is the sum of the archives' record bounds
+    * ([[graft.etl.binary.AppendVecCodec.maxRecords]]), taken from the
+    * manifests already read for the watermark. */
   def replayDirBatched(spark: SparkSession, table: LakeTable, dir: String,
       salted: Boolean = false, mor: Boolean = false): Long = {
     val p = new Path(dir)
@@ -216,8 +232,9 @@ object SnapshotReplay {
       .map(_.getPath.toString).toSeq.sorted
     if (archives.isEmpty) return 0L
     val conf = spark.sparkContext.hadoopConfiguration
-    // manifest sniffs in parallel (the watermark needs the max slot up front)
-    val maxSlot = {
+    // manifest sniffs in parallel (the watermark needs the max slot up
+    // front, the small-op test the summed record bound)
+    val (maxSlot, maxRecords) = {
       import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
       import scala.concurrent.duration._
       // bounded + daemon: a thousand-archive bootstrap must not spawn a
@@ -226,10 +243,13 @@ object SnapshotReplay {
         math.min(16, archives.size),
         (r: Runnable) => { val t = new Thread(r, "replay-manifest-sniff"); t.setDaemon(true); t })
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(archives.map(a => Future {
-        ArchiveSnapshotSource.readManifest(a, conf).slot
-      })), 5.minutes).max
-      catch {
+      try {
+        val sniffed = Await.result(Future.sequence(archives.map(a => Future {
+          val m = ArchiveSnapshotSource.readManifest(a, conf)
+          (m.slot, AppendVecCodec.maxRecords(m))
+        })), 5.minutes)
+        (sniffed.map(_._1).max, sniffed.map(_._2).sum)
+      } catch {
         case _: TimeoutException => throw new java.io.IOException(
           s"timed out (5 min) reading manifests of ${archives.size} archives under $dir")
       }
@@ -237,7 +257,7 @@ object SnapshotReplay {
     }
     table.merge(toDF(ArchiveSnapshotSource.fromArchives(spark, archives)),
       s"snapshot-dir:$maxSlot:${archives.size}", salted = salted,
-      txn = Some(("snapshot-replay", maxSlot)), mor = mor)
+      txn = Some(("snapshot-replay", maxSlot)), mor = mor, rowsHint = Some(maxRecords))
   }
 
   /** Replay every `.tar.zst` archive in `dir`, ordered by manifest slot

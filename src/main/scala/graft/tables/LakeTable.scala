@@ -760,7 +760,7 @@ final class LakeTable private (
     else f
 
   /** What [[MergePlan.batchSmall]] needs of `batch` before any of it is
-    * read. The optimized plan is built only when there is no row hint; a
+    * read. The optimized plan is built only when there is no row bound; a
     * plan whose estimate cannot be computed has none (NOT small). */
   private def batchSize(batch: DataFrame, rowsHint: Option[Long]): MergePlan.BatchSize =
     if (rowsHint.isDefined) MergePlan.BatchSize(rowsHint)
@@ -809,8 +809,12 @@ final class LakeTable private (
     *                  must be a sum/count-style aggregate (they are computed
     *                  per bucket in the stats pass and summed).
     * @param mor       append the batch as a merge-on-read layer
-    * @param rowsHint  the batch's row count, when the caller has it (feeds
-    *                  the small-op test of the one-job route)
+    * @param rowsHint  an upper bound on the batch's rows; an exact count is
+    *                  one (the streaming sink's pinned batch count, a
+    *                  snapshot manifest's record bound, a view refresh's
+    *                  base row counts). It feeds the small-op test of the
+    *                  one-job route and of the stats pass, in place of the
+    *                  optimizer's size estimate
     * @return rows upserted (0 for a re-delivered batch)
     */
   def merge(batch: DataFrame, batchId: String, salted: Boolean = false,

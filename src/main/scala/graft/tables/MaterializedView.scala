@@ -125,20 +125,33 @@ final class MaterializedView private (
     if (to <= from) return from
     val fromRetained = from == 0 ||
       Files.exists(Paths.get(base.root, "meta", s"v$from.json"))
-    // A refresh over a SMALL base (stored rows from the to-version's
-    // snapshot — driver-side metadata, no I/O) runs with adaptive query
-    // execution scoped off: the refresh is a dozen fixed-shape tiny plans
-    // (changelog join, delta agg, broadcast probes, state merge) and AQE's
-    // per-exchange stage jobs + replanning dominate their wall. Big bases
-    // keep AQE — its skew/coalescing wins are the 100-TB tools. Same bound
-    // and rationale as the merge's small-op mode (MergePlan.SmallOpRows).
-    val small = MergePlan.small(LakeTable.readSnapshot(Paths.get(base.root), to).rowCount)
-    def run(): Unit = if (fromRetained) incrementalRefresh(from, to) else fullRebuild(to)
-    if (small)
+    // ONE row bound sizes the whole refresh, from driver-side snapshot
+    // metadata (no I/O). Incremental: the base's stored rows at `from` plus
+    // at `to`, at least the keys the typed changelog differs on, so at least
+    // the groups the state merge writes. Full rebuild: the base's rows at
+    // `to` (≥ its groups) plus the state's rows (≥ the groups that may
+    // vanish). A SMALL refresh runs with adaptive query execution scoped
+    // off: it is a dozen fixed-shape tiny plans (changelog join, delta agg,
+    // broadcast probes, state merge) and AQE's per-exchange stage jobs +
+    // replanning dominate their wall; big ones keep AQE (its skew and
+    // coalescing wins are the 100-TB tools). The bound is also the state
+    // merge's `rowsHint`: that batch is a plan over unmaterialized caches,
+    // whose size estimate is not a measure of its rows. Same bound as the
+    // merge's small-op mode (MergePlan.SmallOpRows).
+    val rowsBound =
+      if (fromRetained) baseRows(from) + baseRows(to)
+      else baseRows(to) + state.snapshot().rowCount
+    def run(): Unit =
+      if (fromRetained) incrementalRefresh(from, to, rowsBound) else fullRebuild(to, rowsBound)
+    if (MergePlan.small(rowsBound))
       LakeTable.withScopedConf(spark, "spark.sql.adaptive.enabled", "false")(run())
     else run()
     to
   }
+
+  /** Stored rows of the base at a retained `version`. */
+  private def baseRows(version: Long): Long =
+    LakeTable.readSnapshot(Paths.get(base.root), version).rowCount
 
   /** STREAMING maintenance: tail the base table's changelog stream and
     * refresh once per micro-batch window. The stream is used as a TRIGGER
@@ -200,7 +213,7 @@ final class MaterializedView private (
     rows +: per
   }
 
-  private def incrementalRefresh(from: Long, to: Long): Unit = {
+  private def incrementalRefresh(from: Long, to: Long, rowsBound: Long): Unit = {
     val changes = base.readChangesTyped(from, to)
     val sign = when(col(ChangeTypeCol).isin("insert", "update_postimage"), lit(1L))
       .otherwise(lit(-1L))
@@ -329,7 +342,7 @@ final class MaterializedView private (
     // per-bucket layer bound auto-compacts hot buckets, so a continuously
     // maintained view never accumulates unbounded read debt.
     try state.merge(upserts.unionByName(dead), batchId = s"mv-$from-$to",
-      txn = Some((TxnApp, to)), mor = true)
+      txn = Some((TxnApp, to)), mor = true, rowsHint = Some(rowsBound))
     finally { incr.unpersist(); deltas.unpersist() }
     ()
   }
@@ -337,7 +350,7 @@ final class MaterializedView private (
   /** Bootstrap / fallback when the incremental window's start version has
     * been expired from the base's history: one full recompute, plus
     * tombstones for state groups that no longer exist. */
-  private def fullRebuild(to: Long): Unit = {
+  private def fullRebuild(to: Long, rowsBound: Long): Unit = {
     // pinned: both the upsert rows and the vanished-group anti-join branch
     // from this full base aggregation — unpinned it would scan the base
     // twice (tiny result: one row per group)
@@ -353,7 +366,8 @@ final class MaterializedView private (
       .unionByName(vanished.select(tombstoneRow(to): _*))
     // same one-evaluation MOR rationale as the incremental path (the batch
     // is a full base aggregation — doubly worth not computing twice)
-    try state.merge(rows, batchId = s"mv-full-$to", txn = Some((TxnApp, to)), mor = true)
+    try state.merge(rows, batchId = s"mv-full-$to", txn = Some((TxnApp, to)), mor = true,
+      rowsHint = Some(rowsBound))
     finally full.unpersist()
     ()
   }

@@ -73,9 +73,11 @@ object MergePlan {
     * measured win (90%-on-1-key: salted 1.93×) — SKEW.json. */
   final val AutoSaltTopShare = 0.6
 
-  /** The batch's size as known before any of it is read: the caller's row
-    * count, else the optimizer's size estimate of the batch plan (None when
-    * it could not be computed) and whether that plan has an
+  /** The batch's size as known before any of it is read: an upper bound on
+    * its rows from the caller (an exact count is one; a snapshot apply
+    * passes its manifest's record bound, a view refresh its base row
+    * counts), else the optimizer's size estimate of the batch plan (None
+    * when it could not be computed) and whether that plan has an
     * object-producing node (typed `mapPartitions`/`flatMap`). */
   final case class BatchSize(rows: Option[Long], estimatedBytes: Option[BigInt] = None,
       objectProducing: Boolean = false)
@@ -89,17 +91,19 @@ object MergePlan {
   private[tables] def small(rows: Long): Boolean = rows <= SmallOpRows
 
   /** Smallness test for the one-job route, where no stats pass ran, and
-    * for the stats pass itself: the caller's row count when it has one
-    * (the streaming sink counts its pinned batch anyway), else the size
-    * estimate — accurate for file-backed and cached batches, and huge (NOT
-    * small) for opaque ones like raw RDD scans, so an unknown size can only
-    * keep the full fan-out, never shrink a big merge's parallelism.
+    * for the stats pass itself: the caller's row bound when it has one
+    * (the streaming sink counts its pinned batch anyway; a snapshot apply
+    * bounds its rows from the manifest before decoding any), else the size
+    * estimate — accurate for file-backed and materialized cached batches,
+    * and huge (NOT small) for opaque ones like raw RDD scans, so an unknown
+    * size can only keep the full fan-out, never shrink a big merge's
+    * parallelism.
     *
-    * An OBJECT-PRODUCING plan (the snapshot decode shape: a KB-sized list
-    * of file refs expanding into millions of decoded rows) is NEVER small
-    * whatever the estimate: the optimizer propagates the tiny input size
-    * through the opaque function, and trusting it would strip a
-    * full-snapshot load of its write parallelism. */
+    * Without a bound, an OBJECT-PRODUCING plan (the snapshot decode shape:
+    * a KB-sized list of file refs expanding into millions of decoded rows)
+    * is NEVER small whatever the estimate: the optimizer propagates the
+    * tiny input size through the opaque function, and trusting it would
+    * strip a full-snapshot load of its write parallelism. */
   private[tables] def batchSmall(b: BatchSize): Boolean = b.rows match {
     case Some(n) => small(n)
     case None => !b.objectProducing && b.estimatedBytes.exists(_ <= SmallOpBytes)

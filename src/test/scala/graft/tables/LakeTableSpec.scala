@@ -700,7 +700,8 @@ class LakeTableSpec extends SparkTestBase {
       newFiles.getOrElse(b, Nil) != oldFiles.getOrElse(b, Nil)).toSet
     val allowed = changedBuckets.flatMap(b =>
       (oldFiles.getOrElse(b, Nil) ++ newFiles.getOrElse(b, Nil)).map(rel => s"${t.root}/$rel"))
-    val scanned = changes.inputFiles.map(_.replaceFirst("^file:/+", "/")).toSet
+    val scanned = plannedFiles(changes)
+    assert(scanned.nonEmpty, "the changelog plans the changed buckets' files")
     assert(scanned.subsetOf(allowed), s"changelog read untouched buckets: ${scanned -- allowed}")
     // content: k0 updated + x1 new; stale k1 and untouched keys absent
     val rows = changes.select("k", "wv", "v", "extra")
