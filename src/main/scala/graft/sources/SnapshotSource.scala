@@ -49,6 +49,16 @@ object SnapshotSource {
     else ArchiveSnapshotSource(spark, path)
   }
 
+  /** `items` as a Dataset of `n` partitions (at least one), sliced on the
+    * driver: no exchange whose only work is moving paths. The `coalesce`
+    * moves nothing; it declares a single partition as such, so an
+    * aggregate over one archive's rows plans no exchange either. */
+  private[sources] def spread[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](spark: SparkSession,
+      items: Seq[T], n: Int): Dataset[T] = {
+    val parts = math.max(1, n)
+    spark.createDataset(spark.sparkContext.parallelize(items, parts)).coalesce(parts)
+  }
+
   /** Names like `<slot>.<id>` (F1, lib.rs:48-57). */
   private[sources] def parseVecName(name: String): Option[(Long, Long)] = {
     val parts = name.split('.')
@@ -120,7 +130,7 @@ final case class UnpackedSnapshotSource(spark: SparkSession, root: String) exten
     val refs = appendVecRefs()
     // one split per vec; cap partitions at file count but spread across cores
     val parallelism = math.max(1, math.min(refs.size, spark.sparkContext.defaultParallelism * 2))
-    spark.createDataset(refs).repartition(parallelism)
+    SnapshotSource.spread(spark, refs, parallelism)
       .mapPartitions(UnpackedSnapshotSource.decodePartition _) // static: no class capture
   }
 }
@@ -201,7 +211,7 @@ object ArchiveSnapshotSource {
   def fromArchives(spark: SparkSession, paths: Seq[String],
       onManifest: SnapshotManifest => Unit = _ => ()): Dataset[AccountUpdate] = {
     import spark.implicits._
-    spark.createDataset(paths).repartition(math.max(1, paths.size))
+    SnapshotSource.spread(spark, paths, paths.size)
       .mapPartitions { it =>
         val conf = new Configuration()
         it.flatMap(p => decodeTar(openTar(p, conf), onManifest))
@@ -293,7 +303,7 @@ object HttpSnapshotSource {
   def fromUrls(spark: SparkSession, urls: Seq[String],
       onManifest: graft.etl.model.SnapshotManifest => Unit = _ => ()): Dataset[AccountUpdate] = {
     import spark.implicits._
-    spark.createDataset(urls).repartition(math.max(1, urls.size))
+    SnapshotSource.spread(spark, urls, urls.size)
       .mapPartitions(_.flatMap { u =>
         ArchiveSnapshotSource.decodeTar(ArchiveSnapshotSource.wrapTarZst(openUrl(u)), onManifest)
       })

@@ -182,6 +182,10 @@ final class LakeTable private (
   /** a grouped bucket scan's group column ([[MergePlan.BucketGroups]]);
     * dropped before every write */
   private val GroupCol = graft.tables.dsv2.LakeBucketSource.GroupCol
+  /** a changelog window scan's per-file side bits */
+  private val SideCol = graft.tables.dsv2.LakeBucketSource.SideCol
+  private val OldSide = graft.tables.dsv2.LakeBucketSource.OldSide
+  private val NewSide = graft.tables.dsv2.LakeBucketSource.NewSide
   val SubSplitCol = "_gsubsplit"
   /** merge-internal marker: 1 on batch rows, max()'d per key group — its
     * sum over the merged output = distinct batch keys = upserts, counted on
@@ -276,19 +280,20 @@ final class LakeTable private (
     * contract the merge itself applies: such a rewrite may or may not win
     * the LWW resolution, so its payload was never durably promised.
     *
-    * Scale shape (zero shuffles at any table size):
+    * Scale shape (zero shuffles, one read of each changed file):
     *  1. metadata-only bucket pruning — a bucket whose file list is
     *     IDENTICAL in both snapshots cannot have changed; only differing
     *     buckets are read AT ALL (a delta touching k% of buckets reads k%
-    *     of the table, twice);
-    *  2. both sides come from the grouped bucket scan pinned to their
-    *     version, with the SAME bucket groups (sized by both sides' stored
-    *     rows, [[MergePlan.scanGroups]]), MOR layers LWW-resolved in place
-    *     (the grouping rides the scan partitioning);
-    *  3. changed rows = new-side LEFT ANTI old-side on
-    *     (keys…, orderCols…, bucket, group) — a storage-partitioned join
-    *     between two scans of the SAME layout: Catalyst aligns them with no
-    *     exchange on either side.
+    *     of the table);
+    *  2. ONE window scan reads each changed bucket's files once — the old
+    *     snapshot's files, then the files only the new one lists — as a
+    *     grouped bucket scan whose per-file `_gside` column says which
+    *     snapshot(s) list the file (bucket groups sized by both sides' stored
+    *     rows, [[MergePlan.scanGroups]]);
+    *  3. ONE aggregation on (keys…, bucket, group), riding the scan's
+    *     partitioning, folds each key's OLD winner and NEW winner, each over
+    *     its own side's rows only; a new winner whose ordering tuple differs
+    *     (null-safely) from the old one's, or has no old winner, is a change.
     */
   def readChanges(fromVersion: Long, toVersion: Long,
       allowPurgedWindow: Boolean = false): DataFrame = {
@@ -311,18 +316,14 @@ final class LakeTable private (
         "stream's allowPurgedWindow=true option overrides; the typed feed " +
         "is purge-safe)")
     val newSchema = StructType.fromDDL(newSnap.schemaDdl)
-    // across a rebucket boundary the bucket ids of the SAME key differ
-    // between the two layouts: bucket-diff pruning and bucket-aligned
-    // joining are both meaningless — fall back to a logical (key, ordering)
-    // anti-join over full reads (correct, one shuffle per side)
-    // null-SAFE equality throughout: a NULL key/ordering value must match
-    // its old-side self, or unchanged rows with nulls would reappear as
-    // "changed" on every call (left_anti emits left columns only)
-    def antiCond(left: String, right: String, cols: Seq[String],
-        plainEq: Seq[String] = Nil) =
-      (cols.map(c => col(s"$left.$c") <=> col(s"$right.$c")) ++
-        plainEq.map(c => col(s"$left.$c") === col(s"$right.$c"))).reduce(_ && _)
-    if (oldSnap.numBuckets != newSnap.numBuckets) {
+    if (!sameLayout(oldSnap, newSnap)) {
+      // across a rebucket boundary the bucket ids of the SAME key differ
+      // between the two layouts: bucket-diff pruning and bucket-aligned
+      // folding are both meaningless — fall back to a logical (key,
+      // ordering) anti-join over full reads (correct, one shuffle per side).
+      // null-SAFE equality: a NULL key/ordering value must match its
+      // old-side self, or unchanged rows with nulls would reappear as
+      // "changed" on every call (left_anti emits left columns only)
       val newDF = layerResolved(newSnap)
       val oldAligned = {
         val df = layerResolved(oldSnap)
@@ -332,41 +333,64 @@ final class LakeTable private (
         }: _*)
       }
       return newDF.alias("n").join(oldAligned.alias("o"),
-        antiCond("n", "o", newSnap.keyCols ++ newSnap.orderCols), "left_anti")
+        (newSnap.keyCols ++ newSnap.orderCols)
+          .map(c => col(s"n.$c") <=> col(s"o.$c")).reduce(_ && _), "left_anti")
     }
-    // 1. prune: identical file lists ⇒ bucket untouched in the range
-    val changed = newSnap.bucketFiles.keys.filter { b =>
+    val cols = newSchema.fieldNames.toSeq
+    val payload = cols.filterNot(c => newSnap.keyCols.contains(c) || newSnap.orderCols.contains(c))
+    // each side's winning ordering tuple (`max` skips the other side's
+    // nulls, so a side without rows is null), and the new winner's payload
+    // one column per `max_by` — every one picks the same row, and a
+    // consumer that projects columns away prunes them from the scan
+    windowFold(oldSnap, newSnap) { (on, ord) =>
+      Seq(max(when(on(OldSide), ord)).as("_oord"), max(when(on(NewSide), ord)).as("_nord")) ++
+        payload.map(c => max_by(col(c), when(on(NewSide), ord)).as(c))
+    } match {
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
+      case Some(w) =>
+        val (o, n) = (col("_oord"), col("_nord"))
+        val sameTuple = newSnap.orderCols.map(c => o.getField(c) <=> n.getField(c))
+          .reduce(_ && _)
+        w.filter(n.isNotNull && (o.isNull || !sameTuple))
+          .select(cols.map(c =>
+            if (newSnap.orderCols.contains(c)) n.getField(c).as(c) else col(c)): _*)
+    }
+  }
+
+  /** Whether a changelog window between the two snapshots can fold bucket
+    * by bucket through the new schema: same bucket count and no rebucket in
+    * between (a rebucket round trip ends at the same count, but it cleared
+    * the dropped-column ledger, so the old side's files may carry a name
+    * the new schema re-added with another type). */
+  private def sameLayout(oldSnap: TableSnapshot, newSnap: TableSnapshot): Boolean =
+    oldSnap.numBuckets == newSnap.numBuckets &&
+      oldSnap.totals.getOrElse("rebuckets", 0L) == newSnap.totals.getOrElse("rebuckets", 0L)
+
+  /** The changelog window's fold: ONE [[LakeBucketSource.windowScan]] of
+    * the buckets whose file lists differ between the two snapshots (same
+    * layout, [[sameLayout]]; None when no bucket differs) and ONE
+    * aggregation on (keys…, bucket, group) riding its partitioning, whose
+    * columns `aggs(on, ord)` builds from `on(side)` — whether a row's file
+    * is listed on that side ([[LakeBucketSource.OldSide]] /
+    * [[LakeBucketSource.NewSide]]) — and the ordering struct `ord`. A
+    * `max_by(x, when(on(side), ord))` is that side's LWW winner, null on a
+    * side without rows: `max_by` skips rows whose ordering is null (and is
+    * null when every ordering is), sees each side's rows in that side's
+    * file order, and keeps the later of equal ordering tuples — the tie
+    * rule of [[read]]. */
+  private def windowFold(oldSnap: TableSnapshot, newSnap: TableSnapshot)
+      (aggs: (Int => Column, Column) => Seq[Column]): Option[DataFrame] = {
+    val changed = newSnap.bucketFiles.keySet.union(oldSnap.bucketFiles.keySet).filter { b =>
       newSnap.bucketFiles.getOrElse(b, Nil) != oldSnap.bucketFiles.getOrElse(b, Nil)
     }.toSeq.sorted
-    if (changed.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
+    if (changed.isEmpty) return None
     val groups = scanGroups(Seq(newSnap, oldSnap), changed)
-    def side(s: TableSnapshot): DataFrame = {
-      val scan = groupScanDF(s, groups)
-      // align the (possibly narrower) old schema onto the new one so the
-      // anti-join columns line up; Project preserves the partitioning
-      val aligned = scan.select(newSchema.fieldNames.toSeq.map { c =>
-        if (scan.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
-        else lit(null).cast(newSchema(c).dataType).as(c)
-      } ++ Seq(col(BucketCol), col(GroupCol)): _*)
-      if (changed.exists(s.morBuckets.contains))
-        Dedup.latestByKey(aligned, s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
-      else aligned
-    }
-    // the bucket and group columns join with plain equality (non-null by
-    // construction, and the group must stay a direct key so the scans'
-    // KeyGroupedPartitioning aligns); data columns null-safely. Both sides
-    // report the same KeyGroupedPartitioning, so no exchange is planned
-    // whatever the session's shuffle-partition count, and the session-wide
-    // SPJ confs (set at table construction) keep this shape however the
-    // caller derives or re-plans the lazy result.
-    side(newSnap).alias("n")
-      .join(side(oldSnap).alias("o"),
-        antiCond("n", "o", newSnap.keyCols ++ newSnap.orderCols,
-          plainEq = Seq(BucketCol, GroupCol)),
-        "left_anti")
-      .drop(BucketCol, GroupCol)
+    val scan = graft.tables.dsv2.LakeBucketSource.windowScan(spark, root, oldSnap, newSnap, groups)
+    val on = (side: Int) => (col(SideCol) bitwiseAND lit(side)) =!= 0
+    val as = aggs(on, struct(newSnap.orderCols.map(col): _*))
+    Some(scan.groupBy((newSnap.keyCols ++ Seq(BucketCol, GroupCol)).map(col): _*)
+      .agg(as.head, as.tail: _*))
   }
 
   /** TYPED CHANGELOG (≙ Delta Change Data Feed): every row-level change
@@ -392,34 +416,33 @@ final class LakeTable private (
     * the old side), so no guard is needed.
     *
     * Scale shape: identical to [[readChanges]] — metadata bucket-diff
-    * pruning, both sides LWW-resolved riding the grouped bucket scan, then
-    * ONE storage-partitioned FULL-OUTER join per group of changed buckets
-    * (zero exchanges on either side; the same join shape as the merge
-    * itself) classified and exploded in place. Across a rebucket boundary it
-    * falls back to a logical key join (one shuffle per side, correct).
+    * pruning, ONE window scan reading each changed file once, and ONE
+    * aggregation per group of changed buckets yielding each key's old and
+    * new winner (zero exchanges), classified and exploded in place. Across
+    * a rebucket boundary it falls back to a logical key join (one shuffle
+    * per side, correct).
     */
-  def readChangesTyped(fromVersion: Long, toVersion: Long): DataFrame = {
+  def readChangesTyped(fromVersion: Long, toVersion: Long): DataFrame =
+    changesTyped(fromVersion, toVersion, None)
+
+  /** [[readChangesTyped]] reading only `columns` (plus the keys, ordering
+    * columns and tombstone column, which classification needs) — the
+    * window scan then reads only those columns from parquet. `None` = every
+    * column. */
+  private[tables] def changesTyped(fromVersion: Long, toVersion: Long,
+      columns: Option[Seq[String]]): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
     val oldSnap = retainedSnapshot(fromVersion)
     val newSnap = retainedSnapshot(toVersion)
     val newSchema = StructType.fromDDL(newSnap.schemaDdl)
     val keys = newSnap.keyCols
+    val cols = columns.fold(newSchema.fieldNames.toSeq) { cs =>
+      val want = (keys ++ newSnap.orderCols ++ newSnap.tombstoneCol ++ cs).toSet
+      newSchema.fieldNames.toSeq.filter(want)
+    }
 
-    def align(df: DataFrame): DataFrame =
-      df.select(newSchema.fieldNames.toSeq.map { c =>
-        if (df.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
-        else lit(null).cast(newSchema(c).dataType).as(c)
-      } ++ df.columns.toSeq.filter(c => c == BucketCol || c == GroupCol).map(col): _*)
-
-    // one winner row per key per side, packed into a struct so the join's
-    // output stays unambiguous; `extraKey` keeps the bucket and group join
-    // keys on the storage-partitioned path
-    def pack(winners: DataFrame, as: String, extraKey: Seq[String]): DataFrame =
-      winners.select((keys ++ extraKey).map(col) :+
-        struct(newSchema.fieldNames.toSeq.map(col): _*).as(as): _*)
-
-    def classified(joined: DataFrame): DataFrame = {
+    def classified(winners: DataFrame): DataFrame = {
       val o = col("_orow")
       val n = col("_nrow")
       def live(s: Column) = s.isNotNull &&
@@ -437,42 +460,38 @@ final class LakeTable private (
           .when(live(o) && live(n) && !sameTuple,
             array(c("update_preimage", o), c("update_postimage", n)))
           .when(live(o) && (n.isNull || tomb(n)), array(c("delete", o)))
-      joined.select(explode(changes).as("_c"))
+      winners.select(explode(changes).as("_c"))
         .select(col("_c._row.*"), col("_c._change_type").as("_change_type"))
     }
 
-    if (oldSnap.numBuckets != newSnap.numBuckets) {
+    if (!sameLayout(oldSnap, newSnap)) {
       // rebucket inside the window: bucket alignment is meaningless — join
       // the fully-resolved sides logically on the keys
-      val o = pack(align(layerResolved(oldSnap)), "_orow", Nil).alias("o")
-      val n = pack(align(layerResolved(newSnap)), "_nrow", Nil).alias("n")
+      def pack(s: TableSnapshot, as: String): DataFrame = {
+        val df = layerResolved(s)
+        df.select(keys.map(col) :+ struct(cols.map { c =>
+          if (df.columns.contains(c)) col(c).cast(newSchema(c).dataType).as(c)
+          else lit(null).cast(newSchema(c).dataType).as(c)
+        }: _*).as(as): _*)
+      }
+      val o = pack(oldSnap, "_orow").alias("o")
+      val n = pack(newSnap, "_nrow").alias("n")
       val cond = keys.map(k => col(s"n.$k") <=> col(s"o.$k")).reduce(_ && _)
       return classified(n.join(o, cond, "full_outer"))
     }
-    val changed = newSnap.bucketFiles.keys.filter { b =>
-      newSnap.bucketFiles.getOrElse(b, Nil) != oldSnap.bucketFiles.getOrElse(b, Nil)
-    }.toSeq.sorted
-    if (changed.isEmpty) {
-      val empty = StructType(newSchema.fields :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType, nullable = false))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
+    // each side's whole winner row, null on a side without rows
+    windowFold(oldSnap, newSnap) { (on, ord) =>
+      val row = struct(cols.map(col): _*)
+      Seq(max_by(row, when(on(OldSide), ord)).as("_orow"),
+        max_by(row, when(on(NewSide), ord)).as("_nrow"))
+    } match {
+      case None =>
+        val empty = StructType(cols.map(newSchema(_)) :+
+          org.apache.spark.sql.types.StructField("_change_type",
+            org.apache.spark.sql.types.StringType, nullable = false))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
+      case Some(w) => classified(w)
     }
-    val groups = scanGroups(Seq(newSnap, oldSnap), changed)
-    def side(s: TableSnapshot, as: String): DataFrame = {
-      val aligned = align(groupScanDF(s, groups))
-      val winners =
-        if (changed.exists(s.morBuckets.contains))
-          Dedup.latestByKey(aligned, s.keyCols ++ Seq(BucketCol, GroupCol), s.orderCols)
-        else aligned
-      pack(winners, as, Seq(BucketCol, GroupCol))
-    }
-    val n = side(newSnap, "_nrow").alias("n")
-    val o = side(oldSnap, "_orow").alias("o")
-    val cond = (keys.map(k => col(s"n.$k") <=> col(s"o.$k")) ++
-      Seq(BucketCol, GroupCol).map(c => col(s"n.$c") === col(s"o.$c"))).reduce(_ && _)
-    classified(n.join(o, cond, "full_outer"))
   }
 
   /** STREAMING CHANGELOG (CDC egress as a Structured Streaming source —
@@ -684,6 +703,37 @@ final class LakeTable private (
     * group count) around plan + execution. */
   private def groupScanDF(snap: TableSnapshot, groups: MergePlan.BucketGroups): DataFrame =
     graft.tables.dsv2.LakeBucketSource.scan(spark, root, snap, groups.buckets, Some(groups))
+
+  /** `batch` (at most one row per key of this table, carrying its key
+    * columns under the same names) LEFT OUTER joined with the LIVE winners
+    * of snapshot `s`, packed as the struct column `as` (null for a key with
+    * no live winner), handed to `f` — which must plan AND run its result —
+    * inside the SPJ conf window sized to the scan's bucket groups. The
+    * table side is the grouped bucket scan, its merge-on-read layers folded
+    * riding the scan's partitioning; the batch side is shuffled into that
+    * layout, as [[buildMergedSpj]] does. No side is broadcast: a
+    * sort-merge hint keeps a small table side from being planned as a
+    * broadcast job of its own. */
+  private[tables] def lookupLive[A](s: TableSnapshot, batch: DataFrame, as: String)
+      (f: DataFrame => A): A = {
+    val groups = scanGroups(Seq(s), 0 until s.numBuckets)
+    val keyed = s.keyCols ++ Seq(BucketCol, GroupCol)
+    val scan = groupScanDF(s, groups)
+    val winners = visible(s,
+      if (s.morBuckets.isEmpty) scan else Dedup.latestByKey(scan, keyed, s.orderCols))
+    val table = winners.select(keyed.map(col) :+
+      struct(StructType.fromDDL(s.schemaDdl).fieldNames.toSeq.map(col): _*).as(as): _*)
+    val batchCols = batch.columns.toSeq
+    val b = batch.withColumn(BucketCol, bucketExpr(s.keyCols, s.numBuckets))
+      .withColumn(GroupCol, groupExpr(groups, s.numBuckets))
+    val prefixed = b.select(b.columns.toSeq.map(c => col(c).as(s"_gb_$c")): _*)
+    val cond = s.keyCols.map(k => col(k) <=> col(s"_gb_$k")) ++
+      Seq(BucketCol, GroupCol).map(c => col(c) === col(s"_gb_$c"))
+    withSpjConfs(Some(groups.count)) {
+      f(prefixed.join(table.hint("merge"), cond.reduce(_ && _), "left_outer")
+        .select(batchCols.map(c => col(s"_gb_$c").as(c)) :+ col(as): _*))
+    }
+  }
 
   /** [[MergePlan.scanGroups]] of a scan over non-empty `buckets`. */
   private def scanGroups(snaps: Seq[TableSnapshot], buckets: Seq[Int]): MergePlan.BucketGroups =

@@ -57,14 +57,16 @@ final case class AggSpec(func: String, input: String, as: String) {
   * the watermark doubles as the resume cursor (`lastRefreshedBaseVersion`),
   * so there is no side-channel bookkeeping file to drift from the data.
   *
-  * Scale shape (the part that must survive 100 TB): the delta aggregation
-  * rides the changelog's zero-exchange per-bucket scan and shuffles only
-  * O(changed groups); the old-state lookup joins the state's
-  * partitioning-reporting scan against the BROADCAST deltas, so Spark's
-  * runtime bucket pruning ([[LakeTable.readBucketed]]) reads only state
-  * buckets containing touched groups; nothing ever scans the base table
-  * except the bounded affected-group recompute. Refresh never collects
-  * rows to the driver.
+  * Scale shape (the part that must survive 100 TB): the typed changelog
+  * reads each changed base file once, and only the columns the view uses
+  * (keys, ordering, tombstone, group and aggregate inputs); the delta
+  * aggregation shuffles only O(changed groups); the old-state lookup is a
+  * storage-partitioned LEFT OUTER join of the deltas, shuffled into the
+  * state's bucket layout, against the state's grouped bucket scan, read in
+  * place — nothing is broadcast or cached, so a small count/sum/avg
+  * refresh is ONE Spark job ending in the state write. Nothing ever scans
+  * the base table except the bounded affected-group recompute of
+  * min/max/float-sum views. Refresh never collects rows to the driver.
   *
   * {{{
   *   val mv = MaterializedView.createOrOpen(spark, mvRoot, base,
@@ -92,7 +94,8 @@ final class MaterializedView private (
   private def carryType(a: AggSpec): DataType =
     carryTypeOf(baseSchema(a.input).dataType)
 
-  /** The base version the state currently reflects (0 = never refreshed). */
+  /** The base version the state currently reflects (0 = never refreshed,
+    * or refreshed at the base's v0). */
   def lastRefreshedBaseVersion: Long = state.snapshot().txns.getOrElse(TxnApp, 0L)
 
   /** Current MV contents: group columns + the declared aggregate outputs,
@@ -116,27 +119,36 @@ final class MaterializedView private (
 
   /** Catch the view up to `base.currentVersion()`. Incremental when the
     * last-refreshed version is still retained in the base's history;
-    * otherwise falls back to a full rebuild (one base scan). Returns the
-    * base version now reflected. Idempotent and crash-safe (txn watermark);
-    * concurrent refreshes serialize through the state table's OCC commit. */
+    * otherwise falls back to a full rebuild (one base scan) — as does the
+    * first refresh of a view whose base starts with rows at v0 (a clone),
+    * at v0 too. Returns the base version now reflected. Idempotent and
+    * crash-safe (txn watermark); concurrent refreshes serialize through the
+    * state table's OCC commit. */
   def refresh(): Long = {
-    val from = lastRefreshedBaseVersion
+    val refreshed = state.snapshot().txns.get(TxnApp)
+    val from = refreshed.getOrElse(0L)
     val to = base.currentVersion()
-    if (to <= from) return from
-    val fromRetained = from == 0 ||
-      Files.exists(Paths.get(base.root, "meta", s"v$from.json"))
+    def retained(v: Long) = Files.exists(Paths.get(base.root, "meta", s"v$v.json"))
+    // a never-refreshed view reflects an EMPTY base: a window from v0 is
+    // exact only when v0 holds no rows. A base that starts with rows (a
+    // clone's v0 borrows its source's files) is rebuilt in full, at v0 too.
+    val fromRetained = refreshed match {
+      case Some(f) => retained(f)
+      case None => retained(0L) && baseRows(0L) == 0L
+    }
+    if (to <= from && (refreshed.isDefined || fromRetained)) return from
     // ONE row bound sizes the whole refresh, from driver-side snapshot
     // metadata (no I/O). Incremental: the base's stored rows at `from` plus
     // at `to`, at least the keys the typed changelog differs on, so at least
     // the groups the state merge writes. Full rebuild: the base's rows at
     // `to` (≥ its groups) plus the state's rows (≥ the groups that may
     // vanish). A SMALL refresh runs with adaptive query execution scoped
-    // off: it is a dozen fixed-shape tiny plans (changelog join, delta agg,
-    // broadcast probes, state merge) and AQE's per-exchange stage jobs +
-    // replanning dominate their wall; big ones keep AQE (its skew and
+    // off: it is one fixed-shape tiny plan (changelog fold, delta agg,
+    // state join, state merge) and AQE's per-exchange stage jobs +
+    // replanning dominate its wall; big ones keep AQE (its skew and
     // coalescing wins are the 100-TB tools). The bound is also the state
-    // merge's `rowsHint`: that batch is a plan over unmaterialized caches,
-    // whose size estimate is not a measure of its rows. Same bound as the
+    // merge's `rowsHint`: that batch is the whole refresh pipeline, whose
+    // size estimate is not a measure of its rows. Same bound as the
     // merge's small-op mode (MergePlan.SmallOpRows).
     val rowsBound =
       if (fromRetained) baseRows(from) + baseRows(to)
@@ -214,7 +226,9 @@ final class MaterializedView private (
   }
 
   private def incrementalRefresh(from: Long, to: Long, rowsBound: Long): Unit = {
-    val changes = base.readChangesTyped(from, to)
+    // the changelog reads only the columns the view groups and aggregates
+    val changes = base.changesTyped(from, to,
+      Some(groupCols ++ aggs.map(_.input).filter(_ != "*")))
     val sign = when(col(ChangeTypeCol).isin("insert", "update_postimage"), lit(1L))
       .otherwise(lit(-1L))
 
@@ -248,103 +262,79 @@ final class MaterializedView private (
       }
       Seq(rows, retracted) ++ per
     }
-    // PIN the per-group deltas: the plan below references them from three
-    // places (the broadcast group probe, the outer join, and transitively
-    // every union branch) and Spark re-evaluates a shared subtree per
-    // branch — without pinning, the changelog join would run 3-4× per
-    // refresh. The pinned set is tiny (≤ one row per changed group), so the
-    // cache cost is nil; both pins materialize LAZILY inside the single
-    // merge-on-read state write below (an eager count() here was a whole
-    // extra job per refresh — the cache locking makes lazy first-touch
-    // equivalent), and lineage is kept (plain persist, no checkpoint), so
-    // task retry on a real cluster recomputes instead of failing.
     val deltas = changes.groupBy(groupCols.map(col): _*)
       .agg(deltaExprs.head, deltaExprs.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // --- old state for the touched groups, in two broadcast-able steps
-    // (a broadcast right-outer with the small side as build is not a plan
-    // Spark supports, so the naive `state RIGHT JOIN broadcast(deltas)`
-    // silently degrades to a full state shuffle): (1) SEMI-join the state
-    // scan against the broadcast delta groups — one pass over the state's
-    // partitioning-reporting scan, zero state shuffle, runtime-prunable;
-    // (2) the semi result is ≤ one row per touched group, so broadcast IT
-    // under the deltas (BuildRight LeftOuter — supported) ---
-    val deltaGroups = deltas.select(groupCols.map(col): _*)
-    val oldTouched = state.readBucketed().drop(state.BucketCol)
-      .alias("s")
-      .join(broadcast(deltaGroups.alias("g")), groupJoinCond("s", "g"), "left_semi")
-      .alias("o")
-    val joined = deltas.alias("dl")
-      .join(broadcast(oldTouched), groupJoinCond("dl", "o"), "left_outer")
-
-    def oldCol(n: String): Column = col(s"o.$n")
-    def dlCol(n: String): Column = col(s"dl.$n")
-    val newRows = coalesce(oldCol(RowsCol), lit(0L)) + dlCol(d(RowsCol))
-
-    val incrCols: Seq[Column] = aggs.flatMap { a =>
-      a.func match {
-        case "count" if a.input == "*" => Nil
-        case "count" =>
-          Seq((coalesce(oldCol(a.as), lit(0L)) + dlCol(d(a.as))).as(a.as))
-        case "min" =>
-          // valid only when the group saw no retraction (filtered below);
-          // least/greatest skip nulls, matching SQL MIN over partial input
-          Seq(least(oldCol(a.as), dlCol(dIns(a.as))).as(a.as))
-        case "max" =>
-          Seq(greatest(oldCol(a.as), dlCol(dIns(a.as))).as(a.as))
-        case "sum" | "avg" =>
-          if (recomputeAggs.contains(a)) Seq(
-            (coalesce(oldCol(sumCol(a)), lit(0).cast(carryType(a))) + dlCol(dIns(sumCol(a))))
-              .as(sumCol(a)),
-            (coalesce(oldCol(nnCol(a)), lit(0L)) + dlCol(dIns(nnCol(a)))).as(nnCol(a)))
-          else Seq(
-            (coalesce(oldCol(sumCol(a)), lit(0).cast(carryType(a))) + dlCol(d(sumCol(a))))
-              .as(sumCol(a)),
-            (coalesce(oldCol(nnCol(a)), lit(0L)) + dlCol(d(nnCol(a)))).as(nnCol(a)))
+    // --- old state of the touched groups: the deltas LEFT OUTER the
+    // state's live winners, a storage-partitioned join (the deltas are
+    // shuffled into the state's bucket layout, the state is read in place;
+    // nothing is broadcast, so a small refresh is ONE job: changelog scan,
+    // delta aggregation, state join and state write) ---
+    state.lookupLive(state.snapshot(), deltas, "_old") { joined =>
+      def oldCol(n: String): Column = col("_old").getField(n)
+      val newRows = coalesce(oldCol(RowsCol), lit(0L)) + col(d(RowsCol))
+      val incrCols: Seq[Column] = aggs.flatMap { a =>
+        a.func match {
+          case "count" if a.input == "*" => Nil
+          case "count" =>
+            Seq((coalesce(oldCol(a.as), lit(0L)) + col(d(a.as))).as(a.as))
+          case "min" =>
+            // valid only when the group saw no retraction (filtered below);
+            // least/greatest skip nulls, matching SQL MIN over partial input
+            Seq(least(oldCol(a.as), col(dIns(a.as))).as(a.as))
+          case "max" =>
+            Seq(greatest(oldCol(a.as), col(dIns(a.as))).as(a.as))
+          case "sum" | "avg" =>
+            val (s, nn) = if (recomputeAggs.contains(a)) (dIns(sumCol(a)), dIns(nnCol(a)))
+              else (d(sumCol(a)), d(nnCol(a)))
+            Seq(
+              (coalesce(oldCol(sumCol(a)), lit(0).cast(carryType(a))) + col(s)).as(sumCol(a)),
+              (coalesce(oldCol(nnCol(a)), lit(0L)) + col(nn)).as(nnCol(a)))
+        }
       }
-    }
-    // pinned for the same reason as `deltas`: dead/live/recompute all branch
-    // from it. First touch (the merge's broadcast builds / union branches)
-    // populates both caches; subsequent branches read them.
-    val incr = joined.select(
-      groupCols.map(g => dlCol(g).as(g)) ++
-        Seq(newRows.as(RowsCol), dlCol(DRetractedCol).as(DRetractedCol)) ++
-        incrCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val incr = joined.select(groupCols.map(col) ++
+        Seq(newRows.as(RowsCol), col(DRetractedCol)) ++ incrCols: _*)
 
-    // groups whose live-row count reached zero vanish (tombstone delete)
-    val dead = incr.filter(col(RowsCol) <= 0L)
-      .select(tombstoneRow(to): _*)
-    val live = incr.filter(col(RowsCol) > 0L)
-
-    val upserts =
-      if (recomputeAggs.isEmpty) live.select(stateRow(to): _*)
-      else {
+      // MERGE-ON-READ into the state: the batch here is the whole refresh
+      // pipeline (changelog + delta aggregation + state join), which the
+      // classic copy-on-write path would EVALUATE TWICE (its touched-bucket
+      // stats pass, then the write — measured 2× the refresh wall). The
+      // one-job MOR path evaluates it once and writes ∝ touched groups
+      // instead of rewriting every touched state bucket; the state table's
+      // per-bucket layer bound auto-compacts hot buckets, so a continuously
+      // maintained view never accumulates unbounded read debt.
+      def write(rows: DataFrame): Unit = state.merge(rows, batchId = s"mv-$from-$to",
+        txn = Some((TxnApp, to)), mor = true, rowsHint = Some(rowsBound))
+      if (recomputeAggs.isEmpty) {
+        // ONE projection: a group whose live-row count reached zero becomes
+        // a tombstone (all values null), every other group its new values
+        val gone = col(RowsCol) <= 0L
+        write(incr.select(groupCols.map(col) ++
+          stateValueCols.filterNot(groupCols.contains).map(n => when(!gone, col(n)).as(n)) :+
+          lit(to).as(VersionCol) :+ gone.as(DeletedCol): _*))
+      } else {
         // a retraction makes min/max (and float sums) non-foldable for that
         // group: recompute THOSE groups from the base as of `to` — the same
-        // expressions as the bootstrap, over only the affected groups' rows
-        val needRec = live.filter(col(DRetractedCol) === 1).select(groupCols.map(col): _*)
-        val rec = base.readAt(to).alias("b")
-          .join(broadcast(needRec.alias("g")), groupJoinCond("b", "g"), "left_semi")
-          .groupBy(groupCols.map(col): _*)
-          .agg(recomputeAggExprs.head, recomputeAggExprs.tail: _*)
-        live.filter(col(DRetractedCol) =!= 1).select(stateRow(to): _*)
-          .unionByName(rec.select(stateRow(to): _*))
+        // expressions as the bootstrap, over only the affected groups' rows.
+        // PINNED: dead, live and the recompute probe all branch from `incr`,
+        // and Spark re-evaluates a shared subtree per branch; the pin (≤ one
+        // row per changed group) materializes lazily inside the state write
+        // and keeps its lineage, so a retried task recomputes
+        val pinned = incr.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val dead = pinned.filter(col(RowsCol) <= 0L).select(tombstoneRow(to): _*)
+          val live = pinned.filter(col(RowsCol) > 0L)
+          val needRec = live.filter(col(DRetractedCol) === 1).select(groupCols.map(col): _*)
+          val rec = base.readAt(to).alias("b")
+            .join(broadcast(needRec.alias("g")), groupJoinCond("b", "g"), "left_semi")
+            .groupBy(groupCols.map(col): _*)
+            .agg(recomputeAggExprs.head, recomputeAggExprs.tail: _*)
+          write(live.filter(col(DRetractedCol) =!= 1).select(stateRow(to): _*)
+            .unionByName(rec.select(stateRow(to): _*))
+            .unionByName(dead))
+        } finally pinned.unpersist()
       }
-
-    // MERGE-ON-READ into the state: the batch here is the whole refresh
-    // pipeline (changelog join + delta aggregation + recompute), which the
-    // classic copy-on-write path would EVALUATE TWICE (its touched-bucket
-    // stats pass, then the write — measured 2× the refresh wall). The
-    // one-job MOR path evaluates it once and writes ∝ touched groups
-    // instead of rewriting every touched state bucket; the state table's
-    // per-bucket layer bound auto-compacts hot buckets, so a continuously
-    // maintained view never accumulates unbounded read debt.
-    try state.merge(upserts.unionByName(dead), batchId = s"mv-$from-$to",
-      txn = Some((TxnApp, to)), mor = true, rowsHint = Some(rowsBound))
-    finally { incr.unpersist(); deltas.unpersist() }
-    ()
+    }
   }
 
   /** Bootstrap / fallback when the incremental window's start version has

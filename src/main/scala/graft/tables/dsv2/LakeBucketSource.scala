@@ -38,6 +38,11 @@ import graft.tables.MergePlan.BucketGroups
   * consumer groups and joins on `(keys…, _gbucket, _ggroup)`; two scans
   * join without an exchange when they share the same groups.
   *
+  * A changelog WINDOW scan ([[LakeBucketSource.windowScan]]) reads the
+  * union of two snapshots' file lists once: each bucket's old files in old
+  * order, then the files only the new snapshot holds, with a third constant
+  * column `_gside` saying which snapshot(s) list the file.
+  *
   * This is what lets a copy-on-write MERGE leave the EXISTING side of the
   * upsert join entirely unshuffled: with
   * `spark.sql.sources.v2.bucketing.{enabled,shuffle.enabled}` set, Catalyst
@@ -82,6 +87,12 @@ object LakeBucketSource {
   val BucketCol = "_gbucket"
   /** the grouped scan's group id column (see the class header) */
   val GroupCol = "_ggroup"
+  /** a window scan's per-file side bits: [[OldSide]] | [[NewSide]] */
+  val SideCol = "_gside"
+  /** `_gside` bit of a file the window's OLD snapshot lists */
+  val OldSide = 1
+  /** `_gside` bit of a file the window's NEW snapshot lists */
+  val NewSide = 2
 
   /** format name for spark.read.format(...) */
   val Name: String = classOf[LakeBucketSource].getName
@@ -98,13 +109,15 @@ object LakeBucketSource {
     v
   }
 
-  private[dsv2] def scanSchema(snap: graft.tables.TableSnapshot, grouped: Boolean): StructType =
-    StructType(StructType.fromDDL(snap.schemaDdl).fields ++ partitionSchema(grouped).fields)
+  private[dsv2] def scanSchema(snap: graft.tables.TableSnapshot, grouped: Boolean,
+      window: Boolean = false): StructType =
+    StructType(StructType.fromDDL(snap.schemaDdl).fields ++ partitionSchema(grouped, window).fields)
 
-  /** the per-file constant columns: the bucket id, and the group id of a
-    * grouped scan */
-  private[dsv2] def partitionSchema(grouped: Boolean): StructType =
-    StructType((BucketCol +: (if (grouped) Seq(GroupCol) else Nil))
+  /** the per-file constant columns: the bucket id, the group id of a
+    * grouped scan and the side bits of a window scan */
+  private[dsv2] def partitionSchema(grouped: Boolean, window: Boolean): StructType =
+    StructType((Seq(BucketCol) ++ (if (grouped) Seq(GroupCol) else Nil) ++
+      (if (window) Seq(SideCol) else Nil))
       .map(StructField(_, IntegerType, nullable = false)))
 
   /** The bucket scan of `buckets` of `snap` as a DataFrame, grouped when
@@ -114,6 +127,41 @@ object LakeBucketSource {
       buckets: Seq[Int], groups: Option[BucketGroups]): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.graftshim.RelationDF(spark,
       new LakeBucketTable(root, snap, buckets, groups))
+
+  /** The changelog WINDOW scan of `groups`' buckets between `oldSnap` and
+    * `newSnap` (same bucket count), grouped like [[scan]], through the new
+    * snapshot's schema: every file of either snapshot is read ONCE. A
+    * bucket's files come in its old list's order, then the files only the
+    * new list holds, each tagged in `_gside` with the sides listing it — so
+    * each side's rows reach a consumer in that side's own list order (its
+    * tie order), which needs every new list to be the old files it keeps,
+    * in old order, followed by its new files. Appends, whole-bucket
+    * rewrites and rollbacks all keep that shape; anything else fails here. */
+  private[tables] def windowScan(spark: SparkSession, root: String,
+      oldSnap: graft.tables.TableSnapshot, newSnap: graft.tables.TableSnapshot,
+      groups: BucketGroups): org.apache.spark.sql.DataFrame = {
+    val lists = groups.buckets.map { b =>
+      val o = oldSnap.bucketFiles.getOrElse(b, Nil)
+      val n = newSnap.bucketFiles.getOrElse(b, Nil)
+      val (oSet, nSet) = (o.toSet, n.toSet)
+      val (kept, added) = n.span(oSet)
+      Predef.require(kept == o.filter(nSet) && !added.exists(oSet),
+        s"bucket $b: v${newSnap.version}'s file list is not v${oldSnap.version}'s kept " +
+          s"files in order followed by new files (${o.mkString(",")} -> ${n.mkString(",")})")
+      b -> (o.map(rel => rel -> (OldSide | (if (nSet(rel)) NewSide else 0))) ++
+        added.map(_ -> NewSide))
+    }
+    // one snapshot listing the union: the scan's pruning, stats and file
+    // skipping then work on it unchanged (every file is read as stored)
+    val union = newSnap.copy(
+      bucketFiles = newSnap.bucketFiles ++ lists.map { case (b, fs) => b -> fs.map(_._1) },
+      bucketRows = newSnap.bucketRows ++ groups.buckets.map(b =>
+        b -> (oldSnap.bucketRows.getOrElse(b, 0L) + newSnap.bucketRows.getOrElse(b, 0L))),
+      fileStats = oldSnap.fileStats ++ newSnap.fileStats)
+    org.apache.spark.sql.graftshim.RelationDF(spark,
+      new LakeBucketTable(root, union, groups.buckets, Some(groups),
+        Some(lists.flatMap(_._2).toMap)))
+  }
 
   /** Metadata-only statistics shared by both scans: row counts from the
     * snapshot's incrementally-maintained counters, size from rows × the
@@ -202,15 +250,17 @@ object LakeBucketSource {
 }
 
 final class LakeBucketTable(root: String, snap: graft.tables.TableSnapshot,
-    buckets: Seq[Int], groups: Option[BucketGroups]) extends Table with SupportsRead {
+    buckets: Seq[Int], groups: Option[BucketGroups],
+    sides: Option[Map[String, Int]] = None) extends Table with SupportsRead {
 
   override def name(): String = s"lake_buckets($root@v${snap.version})"
-  override def schema(): StructType = LakeBucketSource.scanSchema(snap, groups.isDefined)
+  override def schema(): StructType =
+    LakeBucketSource.scanSchema(snap, groups.isDefined, sides.isDefined)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeBucketScanBuilder(root, snap, buckets, groups)
+    new LakeBucketScanBuilder(root, snap, buckets, groups, sides)
 }
 
 /** COLUMN PRUNING + FILTER PUSHDOWN for the bucket scan: a projected
@@ -228,13 +278,13 @@ final class LakeBucketTable(root: String, snap: graft.tables.TableSnapshot,
   *    scan), so parquet stats pruning can only skip non-matching row groups,
   *    never change results — exactly `ParquetScan`'s own contract. */
 final class LakeBucketScanBuilder(root: String, snap: graft.tables.TableSnapshot,
-    buckets: Seq[Int], groups: Option[BucketGroups])
+    buckets: Seq[Int], groups: Option[BucketGroups], sides: Option[Map[String, Int]])
     extends ScanBuilder with LakePushdownSupport {
 
   protected val dataSchema = StructType.fromDDL(snap.schemaDdl)
 
   override def build(): Scan =
-    new LakeBucketScan(root, snap, buckets, requiredData, pushedFilters(), groups)
+    new LakeBucketScan(root, snap, buckets, requiredData, pushedFilters(), groups, sides)
 }
 
 /** Shared pushdown contract of the lake scans (bucket scan + SQL-catalog
@@ -268,7 +318,7 @@ private[dsv2] trait LakePushdownSupport
 
 final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
     buckets: Seq[Int], readDataSchema: StructType, pushedFilters: Array[sources.Filter],
-    groups: Option[BucketGroups] = None)
+    groups: Option[BucketGroups] = None, sides: Option[Map[String, Int]] = None)
     extends Scan with Batch with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics {
 
@@ -287,7 +337,8 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
   override def filterAttributes(): Array[NamedReference] = pruning.filterAttributes()
   override def filter(filters: Array[sources.Filter]): Unit = pruning.filter(filters)
 
-  private val partitionSchema = LakeBucketSource.partitionSchema(groups.isDefined)
+  private val partitionSchema =
+    LakeBucketSource.partitionSchema(groups.isDefined, sides.isDefined)
 
   /** a bucket's partition key: its group in a grouped scan, else itself */
   private def keyOf(b: Int): Int = groups.fold(b)(_.of(b))
@@ -298,6 +349,7 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
   override def description(): String =
     s"LakeBucketScan(root=$root, v=${snap.version}, buckets=${buckets.mkString(",")}, " +
       groups.fold("")(g => s"groups=${g.count}, ") +
+      sides.fold("")(_ => "window, ") +
       s"ReadSchema=${readDataSchema.fieldNames.mkString(",")}, " +
       s"PushedFilters=[${pushedFilters.mkString(", ")}])"
 
@@ -316,10 +368,10 @@ final class LakeBucketScan(root: String, snap: graft.tables.TableSnapshot,
     val lens = LakeBucketSource.statLengths(root, kept.values.flatten.toSeq,
       SparkSession.active.sessionState.newHadoopConf())
     buckets.sorted.zipWithIndex.map { case (b, idx) =>
-      val values = if (groups.isDefined) InternalRow(b, keyOf(b)) else InternalRow(b)
+      val values = (b +: groups.map(_ => keyOf(b)).toSeq)
       val files = kept.getOrElse(b, Nil).map { rel =>
         PartitionedFile(
-          partitionValues = values,
+          partitionValues = InternalRow.fromSeq(values ++ sides.map(_(rel))),
           filePath = org.apache.spark.paths.SparkPath.fromPathString(LakeTable.dataPath(root, rel)),
           start = 0L, length = lens(rel))
       }.toArray

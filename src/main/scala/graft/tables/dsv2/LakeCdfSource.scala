@@ -36,11 +36,10 @@ import graft.tables.{LakeTable, TableSnapshot}
   *
   * Scale shape: a micro-batch IS the batch changelog. `getBatch` returns
   * `readChanges(v1, v2)` (`readChangesTyped` under `typed=true`) projected
-  * onto the stream's schema — metadata bucket-diff pruning, both sides from
-  * the partitioning-reporting bucket scan with merge-on-read layers
-  * LWW-resolved in place, one storage-partitioned anti-join (full-outer
-  * join when typed) per changed bucket, zero exchanges — so the stream and
-  * the batch read cannot disagree on any row, equal-ordering ties included.
+  * onto the stream's schema — metadata bucket-diff pruning, one window scan
+  * reading each changed file once, one aggregation folding each key's old
+  * and new winner, zero exchanges — so the stream and the batch read
+  * cannot disagree on any row, equal-ordering ties included.
   * The batch is planned when it RUNS, not when `getBatch` returns: a
   * restarted query asks once more for its last committed window and drops
   * the answer, and that window's start may have been expired since. So a

@@ -233,8 +233,7 @@ class PlanSpec extends SparkTestBase {
     assert(t.logicalRowCount() === 16L)
   }
 
-  test("grouped bucket scans keep ZERO exchanges: a small changelog join, " +
-      "read() and compaction run 16 buckets in 4 tasks") {
+  test("grouped scans: changelog, read() and compaction run 16 buckets in 4 tasks") {
     import graft.tables.LakeTable
     import org.apache.spark.sql.types.StructType
     import spark.implicits._
@@ -247,21 +246,25 @@ class PlanSpec extends SparkTestBase {
     assert(t.snapshot().morBuckets.size === 16)
     val cores = spark.sparkContext.defaultParallelism
     assert(cores === 4)
-    // the at-scale join shape: a test-sized side would auto-broadcast
+    // the at-scale shape: no plan here may lean on an auto-broadcast
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    def grouped(df: DataFrame, what: String, joinNode: Option[String] = None): Unit = {
+    def grouped(df: DataFrame, what: String, window: Boolean = false): Unit = {
       val p = plan(df)
       assert(nodes(p, "Exchange") === 0, s"$what must not shuffle:\n${p.take(5000)}")
-      joinNode.foreach(j => assert(nodes(p, j) === 1, p.take(3000)))
       val ss = scans(df)
       assert(ss.nonEmpty && ss.forall(_.inputRDD.getNumPartitions == cores),
         s"$what: ${ss.map(_.inputRDD.getNumPartitions)}")
+      // a changelog: ONE window scan and ONE aggregation (its partial and
+      // final halves in the same task), no join
+      if (window) {
+        assert(ss.size === 1 && nodes(p, "SortAggregate") === 2, p.take(5000))
+        assert(!p.contains("Join"), p.take(5000))
+      }
     }
     try {
-      grouped(t.readChanges(v1, t.currentVersion()), "changelog", Some("SortMergeJoin LeftAnti"))
-      grouped(t.readChangesTyped(v1, t.currentVersion()), "typed changelog",
-        Some("SortMergeJoin FullOuter"))
+      grouped(t.readChanges(v1, t.currentVersion()), "changelog", window = true)
+      grouped(t.readChangesTyped(v1, t.currentVersion()), "typed changelog", window = true)
       grouped(t.read(), "MOR read")
       assert(t.readChanges(v1, t.currentVersion()).count() === 128L)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -397,8 +400,7 @@ class PlanSpec extends SparkTestBase {
   }
 
 
-  test("typed changelog plans a ZERO-exchange storage-partitioned full-outer " +
-      "join (both sides ride the bucket scans)") {
+  test("typed changelog plans ONE window scan and ONE aggregation, ZERO exchanges") {
     import graft.tables.LakeTable
     import org.apache.spark.sql.types.StructType
     import spark.implicits._
@@ -410,9 +412,10 @@ class PlanSpec extends SparkTestBase {
     t.merge((0 until 8).map(i => (s"k$i", 2L, s"w$i")).toDF("k", "wv", "v"), "b2", mor = true)
     val typed = t.readChangesTyped(v1, t.currentVersion())
     val p = plan(typed)
-    assert(nodes(p, "Exchange") === 0,
-      s"typed changelog must not shuffle either side:\n${p.take(5000)}")
-    assert(nodes(p, "SortMergeJoin FullOuter") === 1, p.take(3000))
+    assert(nodes(p, "Exchange") === 0, s"typed changelog must not shuffle:\n${p.take(5000)}")
+    assert(scans(typed).size === 1 && nodes(p, "SortAggregate") === 2 && !p.contains("Join"),
+      p.take(5000))
+    assert(scans(typed).head.inputRDD.getNumPartitions === spark.sparkContext.defaultParallelism)
     val out = typed.select("_change_type", "k", "wv").as[(String, String, Long)]
       .collect().toSet
     assert(out === (0 until 8).flatMap(i => Seq(
